@@ -182,78 +182,46 @@ def ivm_revenue_by_flag(
     lineitem: DataFrame, n_batches: int = IVM_N_BATCHES
 ) -> DataFrame:
     """A maintained materialized aggregate: per (l_returnflag,
-    l_linestatus) — row count and revenue in integer cents — built by
-    folding ``n_batches`` disjoint DELTA batches into a running state
-    instead of scanning the full table once.
+    l_linestatus) — row count and revenue in integer cents — built from
+    ``n_batches`` disjoint DELTA batches instead of one scan of the
+    full table.
 
     The IVM contract (classic view-maintenance algebra: SUM/COUNT
-    aggregates are self-maintainable under inserts): fold(state, Δ) =
-    group-merge of two aggregate tables, so applying the batches in any
-    order lands on EXACTLY the direct aggregate — which is the DuckDB
-    oracle, making the registry hash-match the proof that the
-    incremental path loses nothing. Revenue rounds each row to cents
-    BEFORE the integer sum (the ``customer_value_skyline`` device), so
-    neither the batch split nor the fold order can move a float ulp.
+    aggregates are self-maintainable under inserts): applying Δ to the
+    state is a group-merge of two aggregate tables, associative and
+    commutative, so applying the batches in any order or grouping lands
+    on EXACTLY the direct aggregate — which is the DuckDB oracle, making
+    the registry hash-match the proof that the incremental path loses
+    nothing. Revenue rounds each row to cents BEFORE the integer sum
+    (the ``customer_value_skyline`` device), so neither the batch split
+    nor the merge order can move a float ulp.
 
-    Per batch: one map-side-combined aggregate over the batch's rows +
-    one ≤|groups|-row merge with the state, ``localCheckpoint``-ed (the
-    CDC-loop lineage discipline). Batch assignment is deterministic
-    (``l_orderkey % n_batches`` — a stand-in for arrival chunks; the
-    algebra is assignment-independent and tests exercise a second
-    split).
-
-    r14 (guide §5): the fixture DERIVES the deltas by filtering one
-    table, so the loop was n_batches full parquet scans; the 5-column
-    projection is now persisted for the loop's duration (production
-    deltas arrive as separate inputs — the cache stands in for not
-    re-reading the full history per batch)."""
-    from ..session import persist_scoped
-
-    cols, release = persist_scoped(
-        lineitem.select(
-            "l_orderkey",
-            "l_returnflag",
-            "l_linestatus",
-            "l_extendedprice",
-            "l_discount",
-        )
+    Deferred maintenance: every pending delta is applied in ONE refresh.
+    One map-side-combined aggregate keyed by (delta, l_returnflag,
+    l_linestatus) yields each delta's aggregate as rows in a single
+    shuffle; the SUM/COUNT group-merge then folds those ≤ n_batches ×
+    |groups| rows by (l_returnflag, l_linestatus). The result is one
+    lazy plan: no driver-side loop, no eager job per delta. Batch
+    assignment is deterministic (``l_orderkey % n_batches`` — a
+    stand-in for arrival chunks; the algebra is assignment-independent
+    and tests exercise other splits)."""
+    if n_batches < 1:
+        raise ValueError(f"n_batches must be >= 1, got {n_batches}")
+    keys = ["l_returnflag", "l_linestatus"]
+    deltas = lineitem.groupBy(
+        (F.col("l_orderkey") % n_batches).alias("delta"), *keys
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(
+            F.round(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
+            ).cast("bigint")
+        ).alias("revenue_cents"),
     )
-    state: DataFrame | None = None
-    for b in range(n_batches):
-        delta = cols.filter(
-            F.col("l_orderkey") % n_batches == b
-        )
-        agg = delta.groupBy("l_returnflag", "l_linestatus").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100,
-                    0,
-                ).cast("bigint")
-            ).alias("revenue_cents"),
-        )
-        if state is None:
-            state = agg.localCheckpoint()
-        else:
-            state = (
-                state.unionByName(agg)
-                .groupBy("l_returnflag", "l_linestatus")
-                .agg(
-                    F.sum("n_rows").alias("n_rows"),
-                    F.sum("revenue_cents").alias("revenue_cents"),
-                )
-            )
-            # checkpoint every SECOND fold (and always the last) — the
-            # pagerank loop's device: a 2-fold-deep lineage plans fine
-            # and halving the eager materializations halves the
-            # sequential job count, the actual wall cost of the loop at
-            # ≤|groups|-row state size
-            if b % 2 == 1 or b == n_batches - 1:
-                state = state.localCheckpoint()
-    # every fold is checkpoint-materialized, so the scoped cache is not
-    # referenced by the returned state
-    release()
-    return state
+    return deltas.groupBy(*keys).agg(
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("revenue_cents").alias("revenue_cents"),
+    )
 
 
 IVM_REVENUE_BY_FLAG_SQL = """

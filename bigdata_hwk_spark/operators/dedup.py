@@ -1036,8 +1036,6 @@ def connected_components(
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(n, find(n)) for n in parent]
         release_edges()
-        if not rows:
-            return spark.createDataFrame([], "node bigint, cluster_id bigint")
         return local_df(spark, rows, "node bigint, cluster_id bigint")
     e = edges
     prev_sig = None

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import empty_df
+
 # delete the character at 0-based offset (c_custkey mod length)
 _DIRTY_EXPR = (
     "concat(substring(c_name, 1, c_custkey % length(c_name)), "
@@ -242,8 +244,8 @@ def linkage_blocking_metrics(customer: DataFrame) -> DataFrame:
     if n == 0:
         # mirror the oracle's GROUP BY, which yields zero rows on an
         # empty table (and the ratios would be 0/0 anyway)
-        return spark.createDataFrame(
-            [],
+        return empty_df(
+            spark,
             "n_records bigint, n_key_collisions bigint, "
             "n_candidate_pairs bigint, n_verified_pairs bigint, "
             "reduction_ratio double, pair_completeness double",

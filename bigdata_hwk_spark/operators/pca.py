@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import empty_df, local_df
 
 PCA_QUANT = 1 << 14
 PCA_COMPONENTS = 8
@@ -171,8 +171,8 @@ def embedding_pca_variance(
     spark = embeddings.sparkSession
     mean, comps, eigvals, n, total = pca_fit(embeddings, n_components)
     if n < 2 or comps.shape[1] == 0:
-        return spark.createDataFrame(
-            [], "component int, eigenvalue double, explained_pct double, "
+        return empty_df(
+            spark, "component int, eigenvalue double, explained_pct double, "
             "cum_explained_pct double"
         )
     total = total or 1.0
@@ -214,7 +214,7 @@ def pca_whitened_audit(
         "max_diag_dev double, mean_recon_err double"
     )
     if n < 2 or comps.shape[1] == 0:
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     m = comps.shape[1]
     Wp = comps / np.sqrt(np.maximum(eigvals, 1e-12))  # whitening projection
     mu = mean

@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import empty_df, local_df
 
 def _covered_df(spark, covered_hashes: set[int]):
     """The driver-held covered set as a broadcastable (h bigint) frame.
@@ -74,7 +74,7 @@ def _covered_df(spark, covered_hashes: set[int]):
     for a deterministic frame (the join result is set-semantics either
     way)."""
     if not covered_hashes:
-        return spark.createDataFrame([], "h bigint")
+        return empty_df(spark, "h bigint")
     import numpy as np
     import pandas as pd
 

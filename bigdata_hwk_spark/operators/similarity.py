@@ -28,7 +28,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import empty_df, local_df
 
 _LOG = logging.getLogger(__name__)
 
@@ -294,8 +294,9 @@ def similar_pairs_threshold(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).toArrow()
     if arrow.num_rows == 0:  # np reshaping below needs ≥1 row
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, cosine double"
+        return empty_df(
+            embeddings.sparkSession,
+            "vec_a bigint, vec_b bigint, cosine double",
         )
     ids = arrow.column("vec_id").to_numpy().astype(np.int64)
     flat = arrow.column("embedding").combine_chunks().flatten()
@@ -366,14 +367,14 @@ def incremental_embedding_pairs(
     sess = corpus.sparkSession
     empty_schema = "batch_id bigint, corpus_id bigint, cosine double"
     if len(pdf_b) == 0:
-        return sess.createDataFrame([], empty_schema)
+        return empty_df(sess, empty_schema)
     b_ids = pdf_b["vec_id"].to_numpy(np.int64)
     b_mat = np.array(list(pdf_b["embedding"]), dtype=np.float64)
     b_norms = np.linalg.norm(b_mat, axis=1)
     keep = b_norms > 0
     b_ids, b_mat = b_ids[keep], b_mat[keep] / b_norms[keep, None]
     if len(b_ids) == 0:
-        return sess.createDataFrame([], empty_schema)
+        return empty_df(sess, empty_schema)
     bc = sess.sparkContext.broadcast((b_ids, b_mat))
 
     def score(batches):
@@ -528,8 +529,9 @@ def ann_ivf_topk(
         key=lambda r: r.vec_id,
     )
     if not sample:  # empty corpus (or no ids under sample_cap): no queries
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cosine double, rk int"
+        return empty_df(
+            embeddings.sparkSession,
+            "query_id bigint, neighbor_id bigint, cosine double, rk int",
         )
     smat = np.array([r.embedding for r in sample], dtype=np.float64)
     smat /= np.linalg.norm(smat, axis=1, keepdims=True)
@@ -1287,8 +1289,9 @@ def semdedup_prune(
     centers = kmeans_fit(embeddings, k=k, iters=iters, corpus=corpus)
     if centers.size == 0:
         release()
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_id bigint, cluster int, kept boolean, nn_cos double"
+        return empty_df(
+            embeddings.sparkSession,
+            "vec_id bigint, cluster int, kept boolean, nn_cos double",
         )
 
     def assign(batches):
@@ -1483,7 +1486,7 @@ def ann_pq_topk(
     )
     fitted = _pq_sample_books(embeddings, sample_cap, m_sub, k_codes)
     if fitted is None:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     sids, smat, books, dsub = fitted
     codes = _pq_encode_codes(embeddings, books, m_sub, dsub)
     lut_rows = _pq_query_lut_rows(
@@ -1498,7 +1501,7 @@ def ann_pq_topk(
         k_codes,
     )
     if not lut_rows:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     lut = local_df(
         spark, lut_rows, "query_id bigint, m int, code int, pd_int bigint"
     )
@@ -1731,7 +1734,7 @@ def pq_index_topk(
     )
     lut_rows = _pq_query_lut_rows(qlist, books, m_sub, dsub, k_codes)
     if not lut_rows:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     lut = spark.createDataFrame(
         lut_rows, "query_id bigint, m int, code int, pd_int bigint"
     )
@@ -1838,7 +1841,7 @@ def ann_ivfpq_topk(
         key=lambda r: r.vec_id,
     )
     if not sample:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     smat = np.array([r.embedding for r in sample], dtype=np.float64)
     norms = np.linalg.norm(smat, axis=1, keepdims=True)
     keep = norms[:, 0] > 0
@@ -1928,7 +1931,7 @@ def ann_ivfpq_topk(
                         )
                     )
     if not lut_rows:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     lut = local_df(
         spark, lut_rows, "query_id bigint, cid int, m int, code int, pd_int bigint"
     )
@@ -1990,7 +1993,7 @@ def _exact_rerank(
         for r in shortlist.select("query_id", "neighbor_id").collect()
     ]
     if not pairs:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     need = sorted({q for q, _ in pairs} | {v for _, v in pairs})
     vrows = (
         embeddings.select("vec_id", "embedding")
@@ -2021,7 +2024,7 @@ def _exact_rerank(
         for rk, (di, vid) in enumerate(top, start=1):
             out_rows.append((qid, vid, di, rk))
     if not out_rows:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     return local_df(
         spark, out_rows, "query_id bigint, vec_id bigint, d2_int bigint, rk int"
     ).select(
@@ -2186,7 +2189,7 @@ def cluster_balanced_counts(
     centers = kmeans_fit(embeddings, k=k, iters=iters, corpus=corpus)
     if centers.size == 0:
         release()
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     n_total = corpus.count()
     k_eff = len(centers)
     quota = -(-int(n_total * frac) // k_eff)  # ceil

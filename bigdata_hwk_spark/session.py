@@ -101,6 +101,19 @@ def get_spark(
     return spark
 
 
+def empty_df(spark, schema):
+    """An empty DataFrame of ``schema`` that plans as an empty
+    ``LocalRelation``.
+
+    ``spark.createDataFrame([], schema)`` plans as a ``LogicalRDD`` over
+    pickled parallelize slices, so every consumer forks a Python daemon
+    and workers just to read nothing. ``limit(0)`` lets the optimizer's
+    limit-zero rewrite replace that scan with an empty local relation:
+    pure JVM, and folded away by empty-relation propagation wherever it
+    meets a union, join or aggregate."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 _LOCAL_DF_NAMES: dict[str, list[str]] = {}
 
 
@@ -120,16 +133,16 @@ def local_df(spark, rows, schema: str):
 
     Use for CLEANLY-TYPED local tables (ints/floats/strings/float
     arrays, no None-valued numeric cells — pandas would widen those to
-    NaN floats). Falls back to the classic path for empty input, and —
-    enforcing the documented constraint instead of assuming it (r13
-    ADVICE) — for any row containing a None cell: misuse then degrades
+    NaN floats). Empty input becomes an ``empty_df``. Enforcing the
+    documented constraint instead of assuming it (r13 ADVICE), any row
+    containing a None cell takes the classic path: misuse then degrades
     to the slow-but-correct pickled path rather than NaN-widening or an
     Arrow cast error mid-query. The scan is O(cells) over a table that
     is small by contract.
     """
     rows = rows if isinstance(rows, list) else list(rows)
     if not rows:
-        return spark.createDataFrame([], schema)
+        return empty_df(spark, schema)
     if any(v is None for row in rows for v in row):
         return spark.createDataFrame(rows, schema)
     if isinstance(schema, str):

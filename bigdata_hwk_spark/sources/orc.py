@@ -56,25 +56,36 @@ def documents_orc_roundtrip_profile(
     reconciliation xor folds over the canonicalized rows, so equality
     with the oracle (same fold straight off the parquet) certifies the
     transcode content-lossless — stronger than the JSONL profile's
-    aggregate-equality check."""
+    aggregate-equality check.
+
+    Without a caller-supplied ``work_dir`` the ORC shards go to a temp
+    directory that is removed before returning: the one-row profile is
+    ``localCheckpoint``-ed first, so no plan derived from the result
+    reads the deleted files, however long the caller keeps it."""
+    import shutil
     import tempfile
 
     from ..operators.reconcile import _hash_pair_cols, canon_row
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = work_dir or tempfile.mkdtemp(prefix="orc_roundtrip_")
-    write_documents_orc(docs, out)
-    back = read_documents_orc(spark, out)
-    h = back.select(
-        "doc_id", "n_chars", *_hash_pair_cols(canon_row(DOCUMENTS_CANON))
-    )
-    return h.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct("doc_id").alias("n_ids"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.expr("bit_xor(__ha)").alias("ck_a"),
-        F.expr("bit_xor(__hb)").alias("ck_b"),
-    )
+    try:
+        write_documents_orc(docs, out)
+        back = read_documents_orc(spark, out)
+        h = back.select(
+            "doc_id", "n_chars", *_hash_pair_cols(canon_row(DOCUMENTS_CANON))
+        )
+        profile = h.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count_distinct("doc_id").alias("n_ids"),
+            F.sum("n_chars").alias("sum_chars"),
+            F.expr("bit_xor(__ha)").alias("ck_a"),
+            F.expr("bit_xor(__hb)").alias("ck_b"),
+        )
+        return profile if work_dir else profile.localCheckpoint()
+    finally:
+        if not work_dir:
+            shutil.rmtree(out, ignore_errors=True)
 
 
 def documents_orc_roundtrip_sql() -> str:

@@ -28,6 +28,7 @@ from ..operators.behavior import (
     burst_daily_counts,
     bursts_from_daily,
 )
+from ..session import empty_df
 
 
 def run_burst_monitor_stream(
@@ -43,7 +44,7 @@ def run_burst_monitor_stream(
     from .cdc_stream import EVENTS_STREAM_SCHEMA
 
     cells_schema = "event_type string, day bigint, y bigint"
-    state = {"daily": spark.createDataFrame([], cells_schema)}
+    state = {"daily": empty_df(spark, cells_schema)}
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         state["daily"] = (

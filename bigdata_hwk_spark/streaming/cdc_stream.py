@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import merge_upsert, reduce_changelog
+from ..session import empty_df
 
 EVENTS_STREAM_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -49,7 +50,7 @@ def run_cdc_merge_stream(
     file, file order) through the MERGE loop; returns the final keyed
     snapshot as a DataFrame (still distributed — callers aggregate or
     write it, they don't collect it)."""
-    state = {"df": spark.createDataFrame([], SNAPSHOT_SCHEMA)}
+    state = {"df": empty_df(spark, SNAPSHOT_SCHEMA)}
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         changes = reduce_changelog(batch_df)

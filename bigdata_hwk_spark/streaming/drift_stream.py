@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.robust import psi_report, psi_value_buckets
+from ..session import empty_df
 
 
 def run_psi_monitor_stream(
@@ -37,7 +38,7 @@ def run_psi_monitor_stream(
     from .cdc_stream import EVENTS_STREAM_SCHEMA
 
     cells_schema = "event_type string, bucket int, n bigint"
-    state = {"cur": spark.createDataFrame([], cells_schema)}
+    state = {"cur": empty_df(spark, cells_schema)}
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_cells = psi_value_buckets(batch_df)

@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import empty_df
+
 # ---------------------------------------------------------------------------
 # Sketches (driver-side sequential state)
 # ---------------------------------------------------------------------------
@@ -634,7 +636,7 @@ def run_distributed_sticky_stream(
     p_admit = min(1.0, sticky_admission_rate(n, phi, eps, delta, L) / n)
     state_schema = "p int, item bigint, cnt bigint, rng binary"
     state = {
-        "df": spark.createDataFrame([], state_schema),
+        "df": empty_df(spark, state_schema),
         "done": False,
     }
 
@@ -736,7 +738,7 @@ def run_distributed_reservoir_stream(
     L = num_reservoirs or spark.sparkContext.defaultParallelism
     state_schema = "p int, sample array<bigint>, cnt bigint, rng binary"
     state = {
-        "df": spark.createDataFrame([], state_schema),
+        "df": empty_df(spark, state_schema),
         "done": False,
     }
 
@@ -864,8 +866,8 @@ def run_mg_ingest_stream(
 
     cells_schema = "chunk bigint, item bigint, cnt bigint"
     state = {
-        "done": spark.createDataFrame([], cells_schema),
-        "active": spark.createDataFrame([], cells_schema),
+        "done": empty_df(spark, cells_schema),
+        "active": empty_df(spark, cells_schema),
         # highest chunk currently open; every chunk strictly below it is
         # compressed and closed — a late cell for one of those would
         # duplicate a leaf and silently diverge from the batch twin, so

@@ -41,6 +41,7 @@ from ..operators.privacy import (
     census_from_user_cells,
     qi_user_cells,
 )
+from ..session import empty_df
 
 _UC_SCHEMA = (
     "event_type string, day bigint, bucket int, "
@@ -143,8 +144,8 @@ def run_k_anonymity_monitor_stream(
     from .cdc_stream import EVENTS_STREAM_SCHEMA
 
     state = {
-        "open": spark.createDataFrame([], _UC_SCHEMA),
-        "closed": spark.createDataFrame([], _CELL_SCHEMA),
+        "open": empty_df(spark, _UC_SCHEMA),
+        "closed": empty_df(spark, _CELL_SCHEMA),
         "max_day": None,
     }
 
@@ -201,7 +202,7 @@ def run_l_diversity_monitor_stream(
     if l_min is None:
         l_min = L_DIVERSE
     tri_schema = "day bigint, bucket int, event_type string, n_rows bigint"
-    state = {"tri": spark.createDataFrame([], tri_schema)}
+    state = {"tri": empty_df(spark, tri_schema)}
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         state["tri"] = (

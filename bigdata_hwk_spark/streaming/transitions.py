@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import empty_df
 from .cdc_stream import EVENTS_STREAM_SCHEMA
 
 _LAST_SCHEMA = (
@@ -52,8 +53,8 @@ def run_transition_stream(
     n_transitions, prob) matrix — identical to the batch operator over
     the concatenated log."""
     state = {
-        "last": spark.createDataFrame([], _LAST_SCHEMA),
-        "counts": spark.createDataFrame([], _COUNTS_SCHEMA),
+        "last": empty_df(spark, _LAST_SCHEMA),
+        "counts": empty_df(spark, _COUNTS_SCHEMA),
     }
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:

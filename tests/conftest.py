@@ -72,10 +72,14 @@ def spark():
     # (test_outliers.py full file: 138 s at local[8] vs 172 s at
     # local[32], same assertions) — the same anti-scaling the sf0.1
     # bench shows suite-wide. SPARK_GRAFT_CPUS still overrides, so
-    # layout-determinism checks can be run at any core count.
+    # layout-determinism checks can be run at any core count. A set
+    # SPARK_MASTER wins, exactly as in get_spark: no master is passed.
+    master = None
+    if not os.environ.get("SPARK_MASTER"):
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
     s = get_spark(
         app_name="bigdata_hwk_spark-tests",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
+        master=master,
         shuffle_partitions=8,
     )
     yield s

@@ -1,9 +1,10 @@
-"""CDC MERGE/upsert + reconciliation-checksum semantics.
+"""CDC MERGE/upsert, IVM delta fold + reconciliation-checksum semantics.
 
 The registry oracle rows (swept in test_outliers / test_extensions) pin
 cross-engine equality; these tests pin the operators' OWN contracts: the
-MERGE branch semantics and compaction algebra, and the checksum's
-order-independence / sensitivity trade-offs.
+MERGE branch semantics and compaction algebra, the IVM fold's split
+independence and job budget, and the checksum's order-independence /
+sensitivity trade-offs.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from bigdata_hwk_spark.operators import cdc as CDC
 from bigdata_hwk_spark.operators import reconcile as RC
 from bigdata_hwk_spark.sources.tables import load_table
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -204,3 +205,54 @@ def test_new_queries_match_oracle_at_gate_sf(spark):
             registry.ORACLES[name],
             SF_CORRECT,
         )
+
+
+# ------------------------------------------------------------------ IVM
+def test_ivm_fold_is_split_independent(spark):
+    """The IVM algebra must land on the identical state for ANY disjoint
+    batch split — 6 batches, 3 batches, and the degenerate 1-batch run
+    all equal the direct aggregate."""
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    runs = [
+        sorted(map(tuple, CDC.ivm_revenue_by_flag(li, n_batches=k).collect()))
+        for k in (1, 3, 6)
+    ]
+    assert runs[0] == runs[1] == runs[2]
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched) — counted through the
+    status tracker under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivm_fold_is_one_lazy_plan(spark):
+    """All deltas are applied in one refresh: building the registry
+    query launches no job, and collecting it at most 4 (the loader's
+    fan-out shuffle, the per-delta aggregate's shuffle, the group-merge's
+    shuffle and the result) — the eager fold took 16."""
+    from bigdata_hwk_spark import registry
+
+    df, n_build = _jobs_in_group(
+        spark,
+        "ivm-build",
+        lambda: registry.QUERIES["ivm_revenue_by_flag"](spark, SF_CORRECT),
+    )
+    assert n_build == 0
+    rows, n_collect = _jobs_in_group(spark, "ivm-collect", df.collect)
+    assert len(rows) > 0
+    assert n_collect <= 4
+
+
+@pytest.mark.parametrize("n_batches", [0, -1])
+def test_ivm_fold_rejects_non_positive_batch_count(spark, n_batches):
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    with pytest.raises(ValueError, match="n_batches"):
+        CDC.ivm_revenue_by_flag(li, n_batches=n_batches)

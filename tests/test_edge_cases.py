@@ -122,6 +122,21 @@ def test_persist_scoped_respects_outer_cache_ownership(spark):
     assert not cached.storageLevel.useMemory
 
 
+def test_empty_df_plans_as_empty_local_relation(spark):
+    """``empty_df`` reads nothing through Python workers: its optimized
+    plan is an empty ``LocalRelation`` (not a ``LogicalRDD`` over
+    pickled slices), with the schema ``createDataFrame([], …)`` gives."""
+    from bigdata_hwk_spark.session import empty_df, local_df
+
+    schema = "a bigint, b string, c array<double>"
+    for df in (empty_df(spark, schema), local_df(spark, [], schema)):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert plan.data().isEmpty()
+        assert df.schema == spark.createDataFrame([], schema).schema
+        assert df.collect() == []
+
+
 def test_similar_pairs_rejects_null_and_ragged_embeddings(spark):
     """The Arrow flat-buffer reshape must refuse corrupt input rather than
     silently misalign: ListArray.flatten() drops null rows, and a ragged

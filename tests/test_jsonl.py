@@ -94,6 +94,40 @@ def test_orc_roundtrip_matches_oracle_smoke(spark):
     )
 
 
+def test_orc_roundtrip_removes_its_temp_dir(spark, tmp_path, monkeypatch):
+    """The profile's own ORC temp directory is gone once the call
+    returns, while the returned frame (and any plan derived from it)
+    still evaluates; a caller-supplied ``work_dir`` is kept."""
+    import gc
+    import os
+    import tempfile
+
+    from bigdata_hwk_spark.sources.orc import documents_orc_roundtrip_profile
+
+    from .conftest import SF_SMOKE
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*a, **kw):
+        made.append(mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    df = documents_orc_roundtrip_profile(spark, SF_SMOKE)
+    assert len(made) == 1 and not os.path.exists(made[0])
+    [row] = df.select("n_docs", "n_ids").collect()
+    assert row.n_docs >= row.n_ids > 0
+    del df
+    gc.collect()
+    assert not os.path.exists(made[0])
+
+    keep = str(tmp_path / "orc_keep")
+    kept = documents_orc_roundtrip_profile(spark, SF_SMOKE, work_dir=keep)
+    assert kept.collect()[0].n_docs == row.n_docs
+    assert os.listdir(keep) and len(made) == 1
+
+
 def test_orc_checksum_moves_on_content_drift(spark, tmp_path):
     """The round-trip certificate is content-sensitive: flipping ONE
     character of ONE document between write and read-back moves the

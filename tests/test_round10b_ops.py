@@ -604,21 +604,6 @@ def test_fd_audit_partial_violation(spark):
     assert h.holds is True and h.n_rows_in_violation == 0
 
 
-def test_ivm_fold_is_split_independent(spark):
-    """The IVM algebra must land on the identical state for ANY disjoint
-    batch split — 6 batches, 3 batches, and the degenerate 1-batch run
-    all equal the direct aggregate."""
-    from bigdata_hwk_spark.operators.cdc import ivm_revenue_by_flag
-    from bigdata_hwk_spark.sources.tables import load_table
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    runs = [
-        sorted(map(tuple, ivm_revenue_by_flag(li, n_batches=k).collect()))
-        for k in (1, 3, 6)
-    ]
-    assert runs[0] == runs[1] == runs[2]
-
-
 def test_assoc_rules_rank_is_dense_and_deterministic(spark):
     df = _baskets_df(spark)
     a = ARL.association_rules_topk(df, min_pair_count=1, topk=10).collect()
