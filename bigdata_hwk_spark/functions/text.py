@@ -739,9 +739,8 @@ def chunk_documents(documents: DataFrame, w: int = CHUNK_TOKENS) -> DataFrame:
     chunks of each document, in order; the last chunk keeps the
     remainder. Pure codegen: build the chunk array with
     ``transform(sequence(...), slice(...))`` and ``posexplode`` it — a
-    map-side projection, no shuffle, no Python row path (the UDTF twin
-    below exists to pin the UDTF *surface*, not to run in the hot path).
-    Empty documents yield no chunks (both engines).
+    map-side projection, no shuffle, no Python row path. Empty documents
+    yield no chunks (both engines).
     """
     ws = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     n = F.size(ws)
@@ -778,36 +777,6 @@ SELECT doc_id, CAST(chunk_id AS INTEGER) AS chunk_id,
          AS chunk_text
 FROM idx
 """
-
-
-def chunk_documents_udtf(documents: DataFrame, w: int = CHUNK_TOKENS) -> DataFrame:
-    """The same chunking as a Python UDTF (``@udtf``) — pins the
-    table-function surface (SURVEY.md §2.11): arbitrary one-row→many-rows
-    Python logic with a declared schema, composable in the DataFrame API.
-
-    This is the SLOW path (row-at-a-time Python, pickled transfer) and
-    exists for parity testing and as the template for chunkers that
-    genuinely need Python (a real tokenizer); production chunking is the
-    codegen ``chunk_documents`` above. Tests pin exact output equality
-    between the two.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="doc_id bigint, chunk_id int, n_tokens int, chunk_text string")
-    class ChunkDocs:
-        def eval(self, doc_id, text):
-            toks = [t for t in (text or "").split(" ") if t]
-            for i in range(0, (len(toks) + w - 1) // w):
-                piece = toks[i * w : (i + 1) * w]
-                yield doc_id, i, len(piece), " ".join(piece)
-
-    spark = documents.sparkSession
-    spark.udtf.register("chunk_docs_udtf", ChunkDocs)
-    documents.createOrReplaceTempView("__chunk_udtf_in")
-    return spark.sql(
-        "SELECT t.doc_id, t.chunk_id, t.n_tokens, t.chunk_text "
-        "FROM __chunk_udtf_in, LATERAL chunk_docs_udtf(doc_id, text) AS t"
-    )
 
 
 # Corpus profile: the schema-audit every ingest gate runs before a table

@@ -11,41 +11,24 @@ the corpus and fuse it into a new symbol.
 The scale insight — the one every production BPE trainer uses — is that
 the corpus collapses to its WORD HISTOGRAM first: pair counts only ever
 depend on (distinct word, frequency), and by Heaps' law the vocabulary
-grows ~n^0.7 while the corpus grows ~n, so after one corpus-scale
-groupBy every subsequent merge iteration touches a table orders of
-magnitude smaller than the input. That first groupBy is the ONLY
-corpus-scale shuffle; it map-side combines (word counts are the
-textbook combiner case), and the k merge rounds after it are k tiny
-jobs over the persisted vocabulary.
-
-Segmentation state is a single string per word — each current symbol
-individually WRAPPED in an ASCII unit separator (``"\\x1f"``, absent
-from the corpus by an enforced filter) and concatenated: ``"abc"`` →
-``"␟a␟␟b␟␟c␟"``. Applying merge (l, r) is then ONE literal, leftmost
-non-overlapping ``replace`` of ``"␟l␟␟r␟"`` with ``"␟lr␟"``. The
-per-symbol wrap (rather than a shared joiner) is load-bearing: two
-adjacent pair instances never share a character, so the replace scan
-that continues AFTER each match still sees the next instance intact —
-a shared joiner would let ``[a,a,a,a]`` under-merge to ``[aa,a,a]``
-(the consumed boundary separator hides the second pair) where greedy
-BPE produces ``[aa,aa]``. The wrap also makes boundary coincidences
-impossible (a match must align with a whole symbol: symbol interiors
-never contain the separator), and leftmost non-overlapping scan IS the
-greedy left-to-right pass classic BPE specifies. Successive merges nest as
-literal ``replace`` calls inside one whole-stage-codegen projection —
-iteration k re-derives segmentation from the pristine vocab with k
-nested replaces instead of mutating cached state, so the persisted
-vocab never changes and no lineage/cache churn accumulates.
-
-Per iteration the driver receives exactly ONE row (the argmax pair via
-``orderBy(...).limit(1)``) — bounded metadata, not data — and ties
-break deterministically (count DESC, left ASC, right ASC), making the
-whole merge table reproducible bit-for-bit across engines and runs;
-``tests/test_bpe.py`` pins it against a pure-Python reference trainer.
+grows ~n^0.7 while the corpus grows ~n. That groupBy is the ONLY
+corpus-scale shuffle (it map-side combines — word counts are the
+textbook combiner case); the histogram then collects to the driver,
+where the inherently sequential merge loop runs with incrementally
+maintained pair counts — the reference's MRFFT shape
+(HWK_2/G029HW2.py:81-107: distributed compress, driver kernel on the
+coreset). Ties break deterministically (count DESC, left ASC, right
+ASC), making the whole merge table reproducible bit-for-bit across
+engines and runs; ``tests/test_bpe.py`` pins it against a pure-Python
+reference trainer.
 
 ``bpe_pair_stats`` (round 0 of the same computation: char-level pair
 counts over the word histogram) is fully SQL-expressible and carries
-the DuckDB oracle; the iterative merge loop is rows-only by design.
+the DuckDB oracle; it segments each word as a single string with every
+character individually WRAPPED in an ASCII unit separator (``"\\x1f"``,
+absent from the corpus by an enforced filter): ``"abc"`` →
+``"␟a␟␟b␟␟c␟"``, so splitting on the doubled separator recovers the
+symbols. The iterative merge loop is rows-only by design.
 """
 
 from __future__ import annotations
@@ -54,12 +37,15 @@ import heapq
 import logging
 from collections import Counter
 
-from pyspark.sql import DataFrame, Window
-
-from ..session import bounded_window, local_df
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import persist_scoped
+from ..session import (
+    bounded_window,
+    ensure_package_on_executors,
+    local_df,
+    persist_scoped,
+)
 
 _LOG = logging.getLogger(__name__)
 
@@ -71,22 +57,13 @@ BPE_SEP = "\x1f"
 BPE_PAIR_TOPK = 64
 BPE_MERGES = 12
 BPE_MIN_PAIR_COUNT = 2
-# Broadcast the (word -> n_tokens) side of the encode join only while
-# the measured vocab is comfortably driver-sized; a production-scale
-# vocab (Heaps ~n^0.7 of a 100 TB corpus) must be allowed to degrade to
-# a shuffle hash join on the same key instead of OOMing the broadcast.
-BPE_BROADCAST_MAX_VOCAB = 4_000_000
-# Merge-count knee for the nested-replace codegen path: round k runs a
-# k-deep replace chain, so training cost is O(k²) in expression work and
-# the tree depth eventually breaks codegen/planning outright. Above this
-# threshold the trainer/encoder switch to the histogram path (collect
-# the Heaps-compressed word histogram once, train with incremental pair
-# counts on the driver, encode the vocab via a broadcast-merge-table
-# mapInPandas kernel). Value set from the measured sweep in
-# SCALE_STRESS.json ("bpe_merge_axis"): codegen is still fine at 64
-# merges but its per-round wall grows linearly with k (quadratic total)
-# while the histogram path is flat in k.
-BPE_CODEGEN_MAX_MERGES = 64
+# Driver-sized vocab: the default ``vocab_cap`` on the histogram collect
+# (larger vocabs train on their top words by frequency, logged loudly),
+# and the bound under which the encode join broadcasts its (word ->
+# n_tokens) side — a production-scale vocab (Heaps ~n^0.7 of a 100 TB
+# corpus) degrades to a shuffle hash join on the same key instead of
+# OOMing the broadcast.
+BPE_DRIVER_MAX_VOCAB = 4_000_000
 
 
 def _word_vocab(documents: DataFrame) -> DataFrame:
@@ -197,26 +174,11 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-def _choose_bpe_method(method: str, n_merges: int) -> str:
-    """'auto' → 'codegen' (k-nested-replace, all-JVM) at small merge
-    counts, 'histogram' (driver-incremental train + mapInPandas encode)
-    above ``BPE_CODEGEN_MAX_MERGES`` — the codegen expression tree is
-    k deep, so a production vocab (10k–50k merges) must not take it."""
-    if method == "auto":
-        return (
-            "codegen" if n_merges <= BPE_CODEGEN_MAX_MERGES else "histogram"
-        )
-    if method not in ("codegen", "histogram"):
-        raise ValueError(f"bpe: unknown method {method!r}")
-    return method
-
-
 def bpe_merge_table(
     documents: DataFrame,
     n_merges: int = BPE_MERGES,
     min_count: int = BPE_MIN_PAIR_COUNT,
-    method: str = "auto",
-    vocab_cap: int | None = None,
+    vocab_cap: int = BPE_DRIVER_MAX_VOCAB,
 ) -> DataFrame:
     """(merge_rank, left_sym, right_sym, merged, pair_count): the
     learned BPE merge table — ``n_merges`` greedy rounds, each fusing
@@ -224,110 +186,35 @@ def bpe_merge_table(
     count DESC, left ASC, right ASC; stop early when the best pair's
     count drops below ``min_count``).
 
-    Two physical strategies behind one contract (``method='auto'``
-    picks by ``n_merges``; both produce bit-identical tables, pinned
-    against each other and the pure-Python reference in
-    ``tests/test_bpe.py``):
-
-    * ``codegen`` (k ≤ ``BPE_CODEGEN_MAX_MERGES``): the word histogram
-      is persisted ONCE; iteration k runs one aggregation job over it
-      with the segmentation derived on the fly by k nested literal
-      ``replace`` calls (one codegen projection — the vocab table
-      itself is never rewritten), and ships exactly one argmax row to
-      the driver. All-JVM, but round k re-executes a k-deep expression:
-      O(k²) total, with a planning/codegen depth knee (measured in
-      SCALE_STRESS.json "bpe_merge_axis").
-    * ``histogram`` (large k — production vocab sizes): the ONE
-      corpus-scale shuffle (word count) stays distributed, then the
-      Heaps-compressed histogram collects to the driver (the MRFFT
-      R1-compress/R2-driver-kernel shape, HWK_2/G029HW2.py:81-107;
-      ``vocab_cap`` bounds the collect at open-web scale) and
-      ``bpe_train_incremental`` runs the merge loop with incrementally
-      maintained pair counts — per round it touches only words
-      containing the merged pair, so total work tracks merge
-      applications, not rounds × vocab, and no per-round Spark job
-      latency is paid (32k rounds of even 10 ms scheduling would cost
-      more than the whole training).
+    The ONE corpus-scale shuffle (word count) stays distributed, the
+    Heaps-compressed histogram collects to the driver (``vocab_cap``
+    bounds the collect) and ``bpe_train_incremental`` runs the merge
+    loop there — per round it touches only words containing the merged
+    pair, so total work tracks merge applications, not rounds × vocab,
+    and no per-round Spark job is paid: the job count is the same at
+    any ``n_merges``.
 
     Rows-only by design (an iterative argmax loop is not one SQL
     query).
     """
-    spark = documents.sparkSession
-    mode = _choose_bpe_method(method, n_merges)
     vocab, release = persist_scoped(_word_vocab(documents))
     try:
-        if mode == "histogram":
-            merges = bpe_train_incremental(
-                _collect_word_histogram(vocab, vocab_cap),
-                n_merges,
-                min_count,
-            )
-        else:
-            merges, _ = _train_merges(vocab, n_merges, min_count)
-        return local_df(
-            spark, merges,
-            "merge_rank bigint, left_sym string, right_sym string, "
-            "merged string, pair_count bigint",
-        )
+        hist, _ = _collect_word_histogram(vocab, vocab_cap)
     finally:
         release()
-
-
-def _sized_vocab(vocab: DataFrame) -> DataFrame:
-    """Materialize the persisted vocab and right-size its partitioning:
-    the merge loop runs n_merges tiny jobs over this table, and a
-    Heaps-compressed vocab of a few thousand rows spread over 32 shuffle
-    partitions pays 32 task launches per round for microseconds of work
-    each. Partitions ∝ measured row count (one narrow coalesce on top of
-    the cache — no second shuffle); a production-scale vocab keeps the
-    session's full parallelism."""
-    n = vocab.count()  # also materializes the persist
-    parallelism = vocab.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(parallelism, n // 50_000 + 1))
-    return vocab.coalesce(parts)
-
-
-def _train_merges(
-    vocab: DataFrame, n_merges: int, min_count: int
-) -> tuple[list[tuple[int, str, str, str, int]], F.Column]:
-    """Run the greedy merge loop over a persisted word-histogram and
-    return (merge table rows, final segmentation Column) — the Column
-    is the k-nested-replace projection that segments any word under the
-    learned merges, reused by the encode side."""
-    vocab = _sized_vocab(vocab)
-    syms = _char_syms(F.col("word"))
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        best = (
-            _adjacent_pairs(vocab, syms)
-            .groupBy("left_sym", "right_sym")
-            .agg(F.sum("f").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), "left_sym", "right_sym")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["pair_count"] < min_count:
-            break
-        l, r, c = (
-            best[0]["left_sym"],
-            best[0]["right_sym"],
-            int(best[0]["pair_count"]),
-        )
-        merges.append((rank, l, r, l + r, c))
-        syms = F.replace(
-            syms,
-            F.lit(BPE_SEP + l + BPE_SEP + BPE_SEP + r + BPE_SEP),
-            F.lit(BPE_SEP + l + r + BPE_SEP),
-        )
-    return merges, syms
+    return local_df(
+        documents.sparkSession,
+        bpe_train_incremental(hist, n_merges, min_count),
+        "merge_rank bigint, left_sym string, right_sym string, "
+        "merged string, pair_count bigint",
+    )
 
 
 def bpe_encode_stats(
     documents: DataFrame,
     n_merges: int = BPE_MERGES,
     min_count: int = BPE_MIN_PAIR_COUNT,
-    method: str = "auto",
-    vocab_cap: int | None = None,
+    vocab_cap: int = BPE_DRIVER_MAX_VOCAB,
 ) -> DataFrame:
     """(doc_id, n_words, n_chars, n_tokens): the apply side — encode
     every document under the merge table just trained on the corpus and
@@ -335,88 +222,60 @@ def bpe_encode_stats(
     ratio a tokenizer team reads off a candidate vocab; all-integer
     output so engines cannot disagree).
 
-    Distributed shape: tokens-per-word is computed ONCE per distinct
-    word on the Heaps-compressed vocab — via the trainer's final
-    nested-replace codegen projection at small merge counts, or the
-    broadcast-merge-table ``bpe_apply_batch`` mapInPandas kernel above
-    ``BPE_CODEGEN_MAX_MERGES`` (see ``bpe_merge_table``; the corpus is
-    never re-segmented row by row either way), then documents explode
-    to words and equi-join that
-    (word → n_tokens) table; the vocab side is Heaps-law small relative
-    to the corpus, so the join broadcasts while the MEASURED vocab row
-    count stays under ``BPE_BROADCAST_MAX_VOCAB`` (the count is free —
-    the persisted vocab was already materialized by ``_sized_vocab``);
+    Distributed shape: train as ``bpe_merge_table`` does, then compute
+    tokens-per-word ONCE per distinct word on the Heaps-compressed vocab
+    via the broadcast-merge-table ``bpe_apply_batch`` mapInPandas kernel
+    (the corpus is never re-segmented row by row), then documents
+    explode to words and equi-join that (word → n_tokens) table. The
+    join broadcasts the vocab side while the vocab row count (counted
+    once, for the collect bound) stays under ``BPE_DRIVER_MAX_VOCAB``;
     above it the hint is withheld so AQE picks a shuffle hash join on
-    the same key instead of force-broadcasting an oversized vocab. Docs with no encodable word (empty text, or every
-    word carrying the separator byte) keep a row with zero counts via
-    the left join — conservation (sum(n_chars) is merge-invariant) is
+    the same key. Docs with no encodable word (empty text, or every word
+    carrying the separator byte) keep a row with zero counts via the
+    left join — conservation (sum(n_chars) is merge-invariant) is
     property-tested.
 
     Rows-only by design (the merge table is data-dependent, so no
     static SQL can express train-then-encode); exactness is pinned
     against the pure-Python reference encoder in ``tests/test_bpe.py``.
     """
-    mode = _choose_bpe_method(method, n_merges)
     vocab, release = persist_scoped(_word_vocab(documents))
     try:
-        if mode == "histogram":
-            # merge-count-safe encode: train on the collected histogram,
-            # then segment the vocab via the Arrow-batched rank-order
-            # kernel with the merge table broadcast — plan depth is
-            # constant in k (the codegen twin below nests k replaces)
-            merges = bpe_train_incremental(
-                _collect_word_histogram(vocab, vocab_cap),
-                n_merges,
-                min_count,
-            )
-            word_tok = _word_tokens_mapinpandas(vocab, merges)
-        else:
-            _, syms = _train_merges(vocab, n_merges, min_count)
-            inner = F.split(
-                F.btrim(syms, F.lit(BPE_SEP)), BPE_SEP + BPE_SEP
-            )
-            word_tok = vocab.select(
-                "word",
-                F.length("word").alias("w_chars"),
-                F.size(inner).alias("w_tokens"),
-            )
-        doc_words = documents.select(
-            "doc_id",
-            F.explode(F.split(F.col("text"), " ")).alias("word"),
-        ).filter((F.col("word") != "") & ~F.col("word").contains(BPE_SEP))
-        n_vocab = vocab.count()  # cached; materialized in _sized_vocab
-        tok_side = (
-            F.broadcast(word_tok)
-            if n_vocab <= BPE_BROADCAST_MAX_VOCAB
-            else word_tok
-        )
-        per_doc = (
-            doc_words.join(tok_side, "word")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum("w_chars").alias("n_chars"),
-                F.sum("w_tokens").alias("n_tokens"),
-            )
-        )
-        out = (
-            documents.select("doc_id")
-            .join(per_doc, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("n_words", F.lit(0)).cast("bigint").alias("n_words"),
-                F.coalesce("n_chars", F.lit(0)).cast("bigint").alias("n_chars"),
-                F.coalesce("n_tokens", F.lit(0)).cast("bigint").alias("n_tokens"),
-            )
-        )
-        # releasing the vocab cache here is safe AND correct: the merges
-        # are already driver-side literals baked into `syms`, and the
-        # returned (lazy) plan references the deterministic histogram
-        # exactly once — the cache only ever amortized the train loop's
-        # per-round jobs
-        return out
+        hist, n_vocab = _collect_word_histogram(vocab, vocab_cap)
     finally:
+        # the returned (lazy) plan reads the deterministic histogram
+        # exactly once — the cache only served the count and collect
         release()
+    merges = bpe_train_incremental(hist, n_merges, min_count)
+    word_tok = _word_tokens_mapinpandas(vocab, merges)
+    tok_side = (
+        F.broadcast(word_tok)
+        if n_vocab <= BPE_DRIVER_MAX_VOCAB
+        else word_tok
+    )
+    doc_words = documents.select(
+        "doc_id",
+        F.explode(F.split(F.col("text"), " ")).alias("word"),
+    ).filter((F.col("word") != "") & ~F.col("word").contains(BPE_SEP))
+    per_doc = (
+        doc_words.join(tok_side, "word")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum("w_chars").alias("n_chars"),
+            F.sum("w_tokens").alias("n_tokens"),
+        )
+    )
+    return (
+        documents.select("doc_id")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("n_words", F.lit(0)).cast("bigint").alias("n_words"),
+            F.coalesce("n_chars", F.lit(0)).cast("bigint").alias("n_chars"),
+            F.coalesce("n_tokens", F.lit(0)).cast("bigint").alias("n_tokens"),
+        )
+    )
 
 
 def bpe_apply_reference(
@@ -482,8 +341,7 @@ def bpe_train_reference(
 
 def _merge_pass(syms: list, l: str, r: str) -> list:
     """One greedy leftmost non-overlapping pass merging (l, r) — the
-    exact application semantics of the nested literal ``replace`` and of
-    ``bpe_apply_reference``."""
+    exact application semantics of ``bpe_apply_reference``."""
     merged, i, n = [], 0, len(syms)
     while i < n:
         if i + 1 < n and syms[i] == l and syms[i + 1] == r:
@@ -514,9 +372,7 @@ def bpe_train_incremental(
     proportional to the number of merge APPLICATIONS plus index churn,
     not rounds × vocabulary. The reference trainer re-derives all pair
     counts from scratch every round (O(k·V) — fine as a test oracle,
-    a scale-killer at k = 32k merges), and the codegen path's k-nested
-    replace re-executes a k-deep expression per round (O(k²) total,
-    with a codegen-depth knee measured in SCALE_STRESS.json).
+    a scale-killer at k = 32k merges).
 
     Heap discipline: every count CHANGE pushes a fresh (−count, l, r)
     entry; stale entries are discarded on pop by checking against the
@@ -593,8 +449,8 @@ def bpe_apply_batch(
     encoders use) is load-bearing for train/encode consistency here: a
     later merge can re-CREATE an earlier rank's pair (merge m > k
     producing symbol ``a`` adjacent to ``b`` where (a, b) has rank k),
-    and the trainer's nested-replace semantics leave that pair unmerged
-    — so must the encoder.
+    and the trainer's one-greedy-pass-per-rank semantics leave that pair
+    unmerged — so must the encoder.
     """
     segs: list[list[str]] = [list(w) for w in words]
     occ: dict[tuple[str, str], set[int]] = {}
@@ -621,9 +477,10 @@ def bpe_apply_batch(
 
 
 def _collect_word_histogram(
-    vocab: DataFrame, vocab_cap: int | None
-) -> dict[str, int]:
-    """Collect the (word, f) histogram for the driver-side merge loop.
+    vocab: DataFrame, vocab_cap: int
+) -> tuple[dict[str, int], int]:
+    """Collect the (word, f) histogram for the driver-side merge loop;
+    returns it with the full vocab row count (the call's one count).
 
     The histogram is the Heaps-compressed coreset of the corpus — the
     same R1-compress / R2-driver-kernel shape as MRFFT (reference
@@ -636,32 +493,32 @@ def _collect_word_histogram(
     production tokenizer trainer applies); capping changes counts only
     in the pruned tail and is logged loudly.
     """
-    if vocab_cap is not None:
-        n_vocab = vocab.count()
-        if n_vocab > vocab_cap:
-            _LOG.warning(
-                "bpe: word histogram has %d rows > vocab_cap=%d; "
-                "training on the top-%d by frequency (standard "
-                "rare-word prune — pair counts lose only the tail)",
-                n_vocab,
-                vocab_cap,
-                vocab_cap,
-            )
-            vocab = vocab.orderBy(F.desc("f"), "word").limit(vocab_cap)
-    return {r["word"]: r["f"] for r in vocab.select("word", "f").collect()}
+    n_vocab = vocab.count()
+    if n_vocab > vocab_cap:
+        _LOG.warning(
+            "bpe: word histogram has %d rows > vocab_cap=%d; "
+            "training on the top-%d by frequency (standard "
+            "rare-word prune — pair counts lose only the tail)",
+            n_vocab,
+            vocab_cap,
+            vocab_cap,
+        )
+        vocab = vocab.orderBy(F.desc("f"), "word").limit(vocab_cap)
+    hist = {r["word"]: r["f"] for r in vocab.select("word", "f").collect()}
+    return hist, n_vocab
 
 
 def _word_tokens_mapinpandas(
     vocab: DataFrame, merges: list[tuple[int, str, str, str, int]]
 ) -> DataFrame:
     """(word, w_chars, w_tokens) over the vocab via the Arrow-batched
-    ``bpe_apply_batch`` kernel with the merge table broadcast — the
-    merge-count-safe twin of the k-nested-replace codegen projection
-    (constant plan depth at any k; the merge table is rank-ordered
-    driver metadata, k rows, broadcast once per executor)."""
+    ``bpe_apply_batch`` kernel with the merge table broadcast (constant
+    plan depth at any k; the merge table is rank-ordered driver
+    metadata, k rows, broadcast once per executor)."""
     import pandas as pd
 
     spark = vocab.sparkSession
+    ensure_package_on_executors(spark)  # the kernel calls bpe_apply_batch
     bc = spark.sparkContext.broadcast(merges)
 
     def encode(batches):

@@ -54,6 +54,7 @@ PR_ITERS = 10
 # of silently building a quadratic array (2048² structs ≈ 67 MB is the
 # last survivable size; the old self-join distributed that blowup)
 COPURCHASE_MAX_BASKET = 2048
+PR_TOPK = 20
 
 
 def _bounded_pair_arr(pair_arr):
@@ -69,7 +70,6 @@ def _bounded_pair_arr(pair_arr):
             )
         )
     )
-PR_TOPK = 20
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -84,7 +84,13 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     docstring's edge-volume argument already leans on exactly that
     bound), and ``collect_set`` subsumes the old per-(order, part)
     DISTINCT. Output verified identical on the fixture (2.392M edge
-    rows set-equal; isolated noop wall 2.65 → 2.08 s at sf0.1)."""
+    rows set-equal; isolated noop wall 2.65 → 2.08 s at sf0.1).
+
+    Limit: an order with more than ``COPURCHASE_MAX_BASKET`` (2048)
+    distinct parts fails the query when it runs (Spark ``raise_error``)
+    with "copurchase basket exceeds 2048 parts — the local pair
+    explosion assumes bounded per-order fan-out", instead of building
+    a quadratic pair array in one task."""
     sets = (
         lineitem.select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
@@ -238,6 +244,11 @@ def copurchase_triangles(lineitem: DataFrame) -> DataFrame:
     the DuckDB oracle. ``n_wedges`` is Σ C(d,2) (open+closed paths of
     length 2) so ``global_clustering = 3·triangles / wedges`` is the
     standard transitivity ratio, rounded to 6.
+
+    Limit: same per-order pair explosion as ``copurchase_edges``, so an
+    order with more than ``COPURCHASE_MAX_BASKET`` (2048) distinct parts
+    fails the query with "copurchase basket exceeds 2048 parts — the
+    local pair explosion assumes bounded per-order fan-out".
     """
     # per-order collect_set + local pair explosion (the copurchase_edges
     # r13 device): 2 shuffles to the undirected pair set instead of the

@@ -1274,14 +1274,33 @@ def semdedup_prune(
     same contract as ``similar_pairs_threshold``); the assign pass drops
     them before normalizing so NaN never reaches argmax or the prune.
     """
-    from ..session import finalize_release, persist_scoped
+    from ..session import finalize_release
+
+    out, release = _semdedup_prune(
+        embeddings, k, tau, iters, max_cluster_rows
+    )
+    finalize_release(out, release)
+    return out
+
+
+def _semdedup_prune(
+    embeddings: DataFrame,
+    k: int,
+    tau: float,
+    iters: int,
+    max_cluster_rows: int,
+):
+    """``semdedup_prune``'s plan plus the ``release`` of the persisted
+    corpus it reads: (frame, release). Each public caller ties
+    ``release`` to the frame it returns with ``finalize_release``, so
+    the cache lives exactly as long as that frame."""
+    from ..session import persist_scoped
     from ..sources.tables import fan_out
 
     # ONE persisted (vec_id, embedding) projection feeds the FFT sample,
     # every Lloyd iteration AND the assignment pass below (guide §5;
     # r13 VERDICT item 4) — before, each of those was its own parquet
-    # scan. Released when the returned frame is garbage collected (the
-    # ``similar_pairs_threshold`` finalize_release pattern).
+    # scan. The caller owns ``release`` (see ``semdedup_prune``).
     corpus, release = persist_scoped(
         fan_out(embeddings.select("vec_id", "embedding")),
         StorageLevel.MEMORY_AND_DISK,
@@ -1292,7 +1311,7 @@ def semdedup_prune(
         return empty_df(
             embeddings.sparkSession,
             "vec_id bigint, cluster int, kept boolean, nn_cos double",
-        )
+        ), (lambda: None)
 
     def assign(batches):
         for pdf in batches:
@@ -1396,8 +1415,7 @@ def semdedup_prune(
     out = assigned.groupBy("cluster").applyInPandas(
         prune, schema="vec_id bigint, cluster int, kept boolean, nn_cos double"
     )
-    finalize_release(out, release)
-    return out
+    return out, release
 
 
 def semdedup_kept_counts(
@@ -1412,7 +1430,11 @@ def semdedup_kept_counts(
     means k is too small for the O(c²) per-cluster pass). Rows-only
     registry surface: the kept decision depends on k-means iterations,
     which SQL cannot express; its invariants are property-tested."""
-    pruned = semdedup_prune(embeddings, k=k, tau=tau, iters=iters)
+    from ..session import finalize_release
+
+    pruned, release = _semdedup_prune(
+        embeddings, k, tau, iters, SEMDEDUP_MAX_CLUSTER
+    )
     out = (
         pruned
         .groupBy("cluster")
@@ -1422,11 +1444,7 @@ def semdedup_kept_counts(
         )
         .orderBy("cluster")
     )
-    # keep the prune frame (and so its scoped corpus cache — see the
-    # finalize_release in semdedup_prune) alive until THIS frame dies,
-    # so the assignment pass still reads the cache when the caller
-    # finally runs the aggregate
-    out._semdedup_pruned_ref = pruned
+    finalize_release(out, release)
     return out
 
 

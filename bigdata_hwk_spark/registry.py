@@ -1075,19 +1075,6 @@ register(
     "bpe_encode_stats",
     lambda spark, sf: BPE.bpe_encode_stats(_docs(spark, sf)),
 )
-# the merge-count-safe production path (round 10): histogram-collected
-# incremental trainer + broadcast-merge-table mapInPandas encoder —
-# bit-identical output to bpe_encode_stats (pinned in tests/test_bpe.py;
-# SCALE_STRESS.json "bpe_merge_axis" shows why this path exists: the
-# codegen chain is quadratic in merge count, this one is flat). Running
-# it through the driver gate keeps the large-k path continuously
-# exercised, not just unit-tested.
-register(
-    "bpe_encode_stats_histogram",
-    lambda spark, sf: BPE.bpe_encode_stats(
-        _docs(spark, sf), method="histogram"
-    ),
-)
 
 # similarity search family
 register(
@@ -1349,8 +1336,7 @@ register(
 )
 
 # fixed-window sequence chunking (context-window prep): map-side
-# posexplode of slice-built chunk arrays, no shuffle; the UDTF twin
-# (chunk_documents_udtf) pins the table-function surface in tests
+# posexplode of slice-built chunk arrays, no shuffle
 register(
     "doc_chunks",
     lambda spark, sf: TX.chunk_documents(_docs(spark, sf)),

@@ -372,8 +372,8 @@ HEAVY_QUERIES = [
     # BPE train-then-encode (round 9): the heaviest new r9 op — the
     # claim under test is the Heaps collapse (per-replica alphabet
     # permutations grow the vocab ~linearly in replicas, the WORST case
-    # for the word-histogram compression, while the merge loop's k jobs
-    # stay vocab-sized) plus the encode join's broadcast posture
+    # for the word-histogram compression, while the driver-side merge
+    # loop stays vocab-sized) plus the encode join's broadcast posture
     "bpe_encode_stats",
     # k-core peeling (round 10, session 3): the session's highest 8x
     # ratio (3.63 — denser graph, deeper peel); the 64x point pins

@@ -11,11 +11,14 @@ to every Arrow batch, the per-position piece-membership hit rate inside
 forward-backward, and the O(seed)-row driver fold per iteration; and
 (b) EM ITERATIONS: each is one full Arrow pass over the histogram.
 
-Like the BPE sweep, the fixture's own vocabulary (~31 distinct words)
-saturates instantly, so the sweep reuses the SAME vocab-enriched
-derived corpus (deterministic per-occurrence hash suffixes → ~30k
-distinct words, corpus size and char distribution anchored to the
-fixture — ``scripts/bpe_merge_axis.build_enriched_corpus``).
+The fixture's own vocabulary (~31 distinct words) saturates
+instantly, so the sweep derives a vocab-enriched corpus FROM the
+fixture (``build_enriched_corpus``, the scale-stress pattern: derived
+fixtures in a /tmp workdir, never hand-rolled data): every word
+occurrence is deterministically suffixed with a hash bucket
+(``word-<hex>``), lifting the histogram to a production-shaped ~30k
+distinct words while keeping corpus size and character distribution
+anchored to the fixture.
 
 Writes the section ``unigram_seed_axis`` into SCALE_STRESS.json via the
 same read-modify-write helper the other deep sweeps use.
@@ -35,15 +38,45 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from bigdata_hwk_spark.operators import unigram_lm as UL  # noqa: E402
 from bigdata_hwk_spark.session import get_spark  # noqa: E402
-from scripts.bpe_merge_axis import build_enriched_corpus  # noqa: E402
 from scripts.scale_stress import _merge_into_artifact  # noqa: E402
 
 SEED_SIZES = [2048, 8192, 32768, 131072]
 ITER_AXIS = [1, 2, 4, 8]
 ITER_AXIS_SEED = 8192
 KEEP = 512  # fixture default — the axis under test is seeding/EM cost
+VARIANTS = 1024  # hash buckets per base word -> ~30k distinct words
+
+
+def build_enriched_corpus(spark, sf_dir: str, out_path: str):
+    if not os.path.exists(out_path):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        words = docs.select(
+            "doc_id",
+            F.posexplode(F.split("text", " ")).alias("pos", "word"),
+        ).filter(F.col("word") != "")
+        variant = F.concat(
+            "word",
+            F.lit("-"),
+            F.lower(
+                F.hex(
+                    F.pmod(
+                        F.xxhash64("word", "doc_id", "pos"),
+                        F.lit(VARIANTS),
+                    )
+                )
+            ),
+        )
+        (
+            words.groupBy("doc_id")
+            .agg(F.concat_ws(" ", F.collect_list(variant)).alias("text"))
+            .write.mode("overwrite")
+            .parquet(out_path)
+        )
+    return spark.read.parquet(out_path)
 
 
 def timed_vocab(docs, seed_size: int, n_iters: int) -> tuple[float, int]:
@@ -57,7 +90,7 @@ def timed_vocab(docs, seed_size: int, n_iters: int) -> tuple[float, int]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    work = os.environ.get("UNI_AXIS_WORKDIR", "/tmp/bpe_merge_axis")
+    work = os.environ.get("UNI_AXIS_WORKDIR", "/tmp/unigram_seed_axis")
     budget = float(os.environ.get("UNI_AXIS_BUDGET_SEC", "300"))
     spark = get_spark(
         app_name="bigdata_hwk_spark-unigram-seed-axis",
@@ -110,7 +143,7 @@ def main() -> None:
     ]
     out["notes"] = (
         "Both axes measured on the 30.9k-distinct-word enriched corpus "
-        "(the BPE sweep's derived fixture). SEED AXIS: near-flat — 64x "
+        "(build_enriched_corpus). SEED AXIS: near-flat — 64x "
         "the seed size (2048 -> 131072 candidate pieces) costs 1.34x "
         "wall, because per-word forward-backward enumerates substring "
         "windows (O(len x max_len) dict probes) independent of seed "
@@ -119,9 +152,7 @@ def main() -> None:
         "AXIS: per-iteration marginal is constant (~0.93 s/EM pass on "
         "this corpus) — linear in iterations, each one Arrow pass over "
         "the distinct-word histogram. NO KNEE on either axis at "
-        "production-shaped vocab; no gate needed (contrast "
-        "bpe_merge_axis, where the codegen path's quadratic merge axis "
-        "forced BPE_CODEGEN_MAX_MERGES=64)."
+        "production-shaped vocab; no gate needed."
     )
     path = _merge_into_artifact("unigram_seed_axis", out)
     print(f"# wrote {path}", file=sys.stderr)

@@ -43,7 +43,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # one global max band let sub-second queries drift 1.2 s unflagged).
 SAMPLE = [
     "ann_pq_rerank_topk",
-    "bpe_encode_stats_histogram",
+    "bpe_encode_stats",
     "chunk_dedup_docs",
     "lineitem_checksum",
     "text_repetition_stats",

@@ -128,6 +128,19 @@ def assert_matches_oracle(spark_df, sql: str, sf_dir: str, float_round: int | No
     pd.testing.assert_frame_equal(g, w, check_dtype=False, check_exact=float_round is None)
 
 
+def jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched) — counted through the
+    status tracker under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def pick_existing_row(df, cols: list[str]):
     """(row, predicate) for a row that PROVABLY exists in ``df``.
 

@@ -1,7 +1,7 @@
 """BPE tokenizer training: oracle parity for pair stats, bit-for-bit
-equality of the distributed merge loop vs a pure-Python reference
-trainer, and the separator-algebra edge cases (overlapping runs) that
-motivated the per-symbol-wrapped segmentation encoding."""
+equality of the histogram-collect trainer and encoder vs a pure-Python
+reference, the overlap-prone merge shapes (runs), and a job-count pin
+(training costs the same Spark jobs at any merge count)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_hwk_spark.operators import bpe
-from tests.conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from tests.conftest import (
+    SF_CORRECT,
+    SF_SMOKE,
+    assert_matches_oracle,
+    jobs_in_group,
+)
 
 
 def _docs(spark, sf_dir):
@@ -82,9 +87,10 @@ def test_merge_table_invariants(spark):
     ],
 )
 def test_merge_application_matches_greedy_on_runs(spark, word, freq, n):
-    """The literal-replace merge application agrees with the Python
-    greedy pass exactly on the overlap-prone shapes (the single-joiner
-    encoding bug class this module's docstring documents)."""
+    """Merge application agrees with the reference trainer's greedy
+    leftmost non-overlapping pass exactly on the overlap-prone shapes:
+    an even run of ``a`` must merge every pair, an odd run leaves one
+    ``a``, and alternating runs merge pairwise."""
     docs = spark.createDataFrame(
         [(0, " ".join([word] * freq))], "doc_id bigint, text string"
     )
@@ -184,8 +190,7 @@ def test_encode_stats_keeps_unencodable_docs(spark):
 
 
 # ---------------------------------------------------------------------------
-# Merge-count-safe histogram path (round-10): bit-equality vs the
-# codegen path and the pure-Python reference at every seam.
+# Driver-side kernels: bit-equality vs the pure-Python reference.
 
 
 def test_incremental_trainer_equals_reference_on_fixture(spark):
@@ -201,42 +206,6 @@ def test_incremental_trainer_equals_reference_on_fixture(spark):
         assert bpe.bpe_train_incremental(
             freqs, n_merges=n, min_count=1
         ) == bpe.bpe_train_reference(freqs, n_merges=n, min_count=1), n
-
-
-def test_merge_table_histogram_path_equals_codegen(spark):
-    docs = _docs(spark, SF_SMOKE)
-    a = sorted(
-        map(tuple, bpe.bpe_merge_table(docs, n_merges=12, method="codegen").collect())
-    )
-    b = sorted(
-        map(tuple, bpe.bpe_merge_table(docs, n_merges=12, method="histogram").collect())
-    )
-    assert a == b
-
-
-def test_encode_stats_histogram_path_equals_codegen(spark):
-    docs = _docs(spark, SF_SMOKE)
-    a = sorted(
-        map(tuple, bpe.bpe_encode_stats(docs, n_merges=12, method="codegen").collect())
-    )
-    b = sorted(
-        map(tuple, bpe.bpe_encode_stats(docs, n_merges=12, method="histogram").collect())
-    )
-    assert a == b
-
-
-def test_auto_dispatch_crosses_threshold(spark, monkeypatch):
-    """auto picks codegen at/below the knee and histogram above; both
-    sides of the boundary produce the same table for the same k."""
-    docs = _docs(spark, SF_SMOKE)
-    monkeypatch.setattr(bpe, "BPE_CODEGEN_MAX_MERGES", 3)
-    auto = sorted(
-        map(tuple, bpe.bpe_merge_table(docs, n_merges=4).collect())
-    )  # 4 > 3 -> histogram
-    explicit = sorted(
-        map(tuple, bpe.bpe_merge_table(docs, n_merges=4, method="codegen").collect())
-    )
-    assert auto == explicit
 
 
 def test_apply_batch_equals_reference_encoder(spark):
@@ -260,7 +229,7 @@ def test_apply_batch_rank_order_not_lowest_rank_loop():
     """Constructed case where a later merge re-creates an earlier rank's
     pair: rank-order semantics leave it unmerged (one greedy pass per
     rank); a lowest-rank-first loop would merge it. Pins the batch
-    kernel to the trainer's nested-replace semantics."""
+    kernel to the trainer's one-greedy-pass-per-rank semantics."""
     # merges: rank1 (b,c)->bc ; rank2 (a,bc)? no — build explicitly:
     # rank1: (x,y)->xy ; rank2: (w,x)->wx where wx == 'x'? impossible.
     # Instead: rank1 (a,b)->ab, rank2 (c,a)->ca — word "cab":
@@ -275,10 +244,9 @@ def test_apply_batch_rank_order_not_lowest_rank_loop():
 
 
 def test_encode_stats_large_merge_count_runs(spark):
-    """The r9 verdict's headline gap: encode must be green at
-    n_merges >= 1024 (histogram path; the nested-replace chain cannot
-    hold there). Conservation: n_chars is merge-invariant and n_tokens
-    is monotone non-increasing in merge count."""
+    """Encode must be green at n_merges >= 1024 (production vocab
+    sizes). Conservation: n_chars is merge-invariant and n_tokens is
+    monotone non-increasing in merge count."""
     docs = _docs(spark, SF_SMOKE)
     big = {
         r["doc_id"]: (r["n_chars"], r["n_tokens"])
@@ -304,7 +272,29 @@ def test_vocab_cap_prunes_tail_loudly(spark, caplog):
 
     with caplog.at_level(_logging.WARNING, logger="bigdata_hwk_spark.operators.bpe"):
         rows = bpe.bpe_merge_table(
-            docs, n_merges=1, min_count=1, method="histogram", vocab_cap=1
+            docs, n_merges=1, min_count=1, vocab_cap=1
         ).collect()
     assert any("vocab_cap" in rec.message for rec in caplog.records)
     assert [tuple(r) for r in rows] == [(1, "a", "a", "aa", 4)]
+
+
+@pytest.mark.parametrize(
+    "fn,max_jobs",
+    [(bpe.bpe_merge_table, 5), (bpe.bpe_encode_stats, 13)],
+    ids=["merge_table", "encode_stats"],
+)
+def test_job_count_independent_of_merge_count(spark, fn, max_jobs):
+    """The merge loop runs on the driver over the collected histogram,
+    so training launches the same jobs at 1 merge as at 40 (one vocab
+    count, one collect, plus the encode join) — no job per round."""
+    docs = _docs(spark, SF_SMOKE)
+    jobs = {
+        k: jobs_in_group(
+            spark,
+            f"bpe-{fn.__name__}-{k}",
+            lambda: fn(docs, n_merges=k, min_count=1).collect(),
+        )[1]
+        for k in (1, 40)
+    }
+    assert jobs[1] == jobs[40], jobs
+    assert jobs[40] <= max_jobs, jobs

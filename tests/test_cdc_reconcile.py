@@ -16,7 +16,12 @@ from bigdata_hwk_spark.operators import cdc as CDC
 from bigdata_hwk_spark.operators import reconcile as RC
 from bigdata_hwk_spark.sources.tables import load_table
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import (
+    SF_CORRECT,
+    SF_SMOKE,
+    assert_matches_oracle,
+    jobs_in_group,
+)
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -220,19 +225,6 @@ def test_ivm_fold_is_split_independent(spark):
     assert runs[0] == runs[1] == runs[2]
 
 
-def _jobs_in_group(spark, group, fn):
-    """(fn(), number of Spark jobs fn launched) — counted through the
-    status tracker under a fresh job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_ivm_fold_is_one_lazy_plan(spark):
     """All deltas are applied in one refresh: building the registry
     query launches no job, and collecting it at most 4 (the loader's
@@ -240,13 +232,13 @@ def test_ivm_fold_is_one_lazy_plan(spark):
     shuffle and the result) — the eager fold took 16."""
     from bigdata_hwk_spark import registry
 
-    df, n_build = _jobs_in_group(
+    df, n_build = jobs_in_group(
         spark,
         "ivm-build",
         lambda: registry.QUERIES["ivm_revenue_by_flag"](spark, SF_CORRECT),
     )
     assert n_build == 0
-    rows, n_collect = _jobs_in_group(spark, "ivm-collect", df.collect)
+    rows, n_collect = jobs_in_group(spark, "ivm-collect", df.collect)
     assert len(rows) > 0
     assert n_collect <= 4
 

@@ -895,37 +895,6 @@ def test_bloom_prune_no_false_negatives_and_effective(spark):
     assert "Exchange" not in plan
 
 
-def test_chunking_udtf_twin_equals_codegen(spark):
-    """The Python-UDTF chunker (the §2.11 table-function surface) must
-    produce exactly the codegen chunker's rows, including chunk order,
-    remainders, and empty-doc elision."""
-    from bigdata_hwk_spark.functions.text import (
-        chunk_documents,
-        chunk_documents_udtf,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join(f"w{i}" for i in range(130))),  # 64+64+2
-            (2, "exactly " + " ".join(f"t{i}" for i in range(63))),  # one full
-            (3, "tiny doc"),
-            (4, ""),  # no chunks
-            (5, "   "),  # whitespace only → no chunks
-        ],
-        "doc_id bigint, text string",
-    )
-    cg = sorted(map(tuple, chunk_documents(docs).collect()))
-    ut = sorted(map(tuple, chunk_documents_udtf(docs).collect()))
-    assert cg == ut
-    assert {r[0] for r in cg} == {1, 2, 3}
-    by_doc = {}
-    for doc_id, chunk_id, n_tokens, _ in cg:
-        by_doc.setdefault(doc_id, []).append((chunk_id, n_tokens))
-    assert by_doc[1] == [(0, 64), (1, 64), (2, 2)]
-    assert by_doc[2] == [(0, 64)]
-    assert by_doc[3] == [(0, 2)]
-
-
 def test_mixture_resample_rate_math_hand_case(spark):
     """Two sources with token totals 100 and 400: the rare source keeps
     everything (r_ppm = 1e6 exactly, so EVERY row passes the ppm

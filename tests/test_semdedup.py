@@ -128,6 +128,26 @@ def test_semdedup_kept_counts_consistent(spark):
     assert sum(r.n_kept for r in summary) < n
 
 
+def test_kept_counts_holds_corpus_cache_until_released(spark):
+    """The persisted corpus that the prune reads lives exactly as long
+    as the frame ``semdedup_kept_counts`` returns: still cached across
+    a garbage collection while the frame is referenced, unpersisted
+    once it is dropped."""
+    import gc
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    gc.collect()
+    baseline = persisted().size()
+    summary = semdedup_kept_counts(emb)
+    gc.collect()
+    assert persisted().size() > baseline
+    assert summary.count() > 0
+    del summary
+    gc.collect()
+    assert persisted().size() == baseline
+
+
 def test_zero_norm_vectors_excluded_not_poisonous(spark):
     """A zero-norm embedding (cosine undefined) must be EXCLUDED from
     the prune output, and must not corrupt the centroids: without the
