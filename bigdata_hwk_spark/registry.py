@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import text as TX
-from .session import local_df
+from .session import local_df, persist_once, shared
 from .operators import cdc as CDC
 from .operators import dedup as D
 from .operators import kcenter as KC
@@ -703,36 +703,24 @@ register(
 # need the same shingle→MinHash→LSH→verify pair table (and the latter two
 # its connected components). Each query rebuilding the ~equal-cost
 # pipeline tripled the bench/driver wall time for this family, so the
-# registry memoizes ONE persisted pair table + component table per
-# (session, sf_dir, tau). A production run would materialize the pair
-# table once the same way; the cache is bounded and evicts (unpersists)
-# the oldest entry so long test sessions touching many SFs don't leak
-# executor storage.
-_LSH_CACHE: dict[tuple[str, str, float], tuple[DataFrame, DataFrame]] = {}
-_LSH_CACHE_MAX = 4
-
-# One persisted shingle inverted index per (session, corpus), shared by the
-# n-gram Jaccard AND MinHash-LSH families — re-shingling the corpus is the
-# single largest shared cost in the dedup family (measured ~4s of the 5s
+# registry shares ONE persisted pair table + component table per
+# (session, sf_dir, tau) through ``session.shared``. A production run
+# would materialize the pair table once the same way.
+#
+# The shingle inverted index is shared the same way by the n-gram Jaccard
+# AND MinHash-LSH families — re-shingling the corpus is the single
+# largest shared cost in the dedup family (measured ~4s of the 5s
 # warm-pass dedup_ngram_jaccard at sf0.1).
-_SHINGLE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame | None]] = {}
 
 
 def _shingle_shared(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame | None]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        while len(_SHINGLE_CACHE) >= _LSH_CACHE_MAX:
-            oldest = next(iter(_SHINGLE_CACHE))
-            for df in _SHINGLE_CACHE.pop(oldest):
-                if df is not None:
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-        _SHINGLE_CACHE[key] = D._shingle_index(_docs(spark, sf_dir))
-    return _SHINGLE_CACHE[key]
+    return shared(
+        spark,
+        ("shingle_index", sf_dir),
+        lambda: D._shingle_index(_docs(spark, sf_dir)),
+    )
 
 
 def _lsh_shared(
@@ -740,26 +728,19 @@ def _lsh_shared(
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, components) for the MinHash-LSH near-dup pipeline, persisted
     and shared across every registry consumer in this session."""
-    from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, tau)
-    if key not in _LSH_CACHE:
-        while len(_LSH_CACHE) >= _LSH_CACHE_MAX:
-            oldest = next(iter(_LSH_CACHE))  # dicts preserve insert order
-            old_pairs, old_comp = _LSH_CACHE.pop(oldest)
-            for df in (old_pairs, old_comp):
-                try:
-                    df.unpersist()
-                except Exception:  # session of the evicted entry may be gone
-                    pass
-        pairs = D.minhash_lsh_pairs(
-            _docs(spark, sf_dir), tau=tau, index=_shingle_shared(spark, sf_dir)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        comp = D.connected_components(pairs).persist(
-            StorageLevel.MEMORY_AND_DISK
+    def build():
+        # persisted before connected_components reads it eagerly
+        pairs = persist_once(
+            D.minhash_lsh_pairs(
+                _docs(spark, sf_dir),
+                tau=tau,
+                index=_shingle_shared(spark, sf_dir),
+            )
         )
-        _LSH_CACHE[key] = (pairs, comp)
-    return _LSH_CACHE[key]
+        return pairs, D.connected_components(pairs)
+
+    return shared(spark, ("lsh", sf_dir, tau), build)
 
 
 register(
@@ -1098,26 +1079,14 @@ register(
 
 
 # embedding-cosine near-dup collapse shares the pair table with
-# embedding_similar_pairs (same memoization rationale as _LSH_CACHE: one
-# persisted pair table per session/SF, not one per consumer)
-_EMB_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# embedding_similar_pairs (same rationale as _lsh_shared: one persisted
+# pair table per session/SF, not one per consumer)
 def _emb_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_PAIRS_CACHE:
-        while len(_EMB_PAIRS_CACHE) >= _LSH_CACHE_MAX:
-            oldest = next(iter(_EMB_PAIRS_CACHE))
-            try:
-                _EMB_PAIRS_CACHE.pop(oldest).unpersist()
-            except Exception:
-                pass
-        _EMB_PAIRS_CACHE[key] = SIM.similar_pairs_threshold(
-            _embs(spark, sf_dir)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    return _EMB_PAIRS_CACHE[key]
+    return shared(
+        spark,
+        ("emb_pairs", sf_dir),
+        lambda: SIM.similar_pairs_threshold(_embs(spark, sf_dir)),
+    )
 
 
 register(

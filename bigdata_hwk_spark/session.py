@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -159,6 +159,11 @@ def local_df(spark, rows, schema: str):
     )
 
 
+def _held(df) -> bool:
+    sl = df.storageLevel
+    return sl.useMemory or sl.useDisk or sl.useOffHeap
+
+
 def persist_once(df, storage_level=None):
     """``persist`` unless the CacheManager already holds this logical plan.
 
@@ -171,8 +176,7 @@ def persist_once(df, storage_level=None):
     """
     from pyspark import StorageLevel
 
-    sl = df.storageLevel
-    if sl.useMemory or sl.useDisk or sl.useOffHeap:
+    if _held(df):
         return df
     return df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
 
@@ -188,11 +192,60 @@ def persist_scoped(df, storage_level=None):
     consumer, forcing recomputation mid-use. Scoped callers (cache for the
     duration of one algorithm, then release) should use this instead.
     """
-    sl = df.storageLevel
-    if sl.useMemory or sl.useDisk or sl.useOffHeap:
+    if _held(df):
         return df, (lambda: None)
     persisted = persist_once(df, storage_level)
     return persisted, (lambda: persisted.unpersist())
+
+
+_SHARED: dict[tuple, DataFrame | tuple[DataFrame | None, ...]] = {}
+
+
+def _frames(value) -> list:
+    members = value if isinstance(value, tuple) else (value,)
+    return [df for df in members if df is not None]
+
+
+def _unpersist(value) -> None:
+    for df in _frames(value):
+        try:
+            df.unpersist()
+        except Exception:  # the entry's session may be gone
+            pass
+
+
+def shared(spark: SparkSession, key: tuple, build):
+    """One persisted intermediate per ``(applicationId, *key)``, shared by
+    every consumer in the session (Shark's shared in-memory table).
+
+    ``build()`` returns a DataFrame or a tuple of DataFrames (``None``
+    members allowed); each frame is ``persist_once``d at MEMORY_AND_DISK
+    and later calls return the same handles. The lifetime contract:
+
+    - A hit whose frames the CacheManager no longer holds (after
+      ``spark.catalog.clearCache()`` or an outside ``unpersist``) is a
+      miss: the frames still held are unpersisted and ``build`` runs
+      again. Handing out an unpersisted handle would make every consumer
+      recompute the shared pipeline — and a range-partitioned layout
+      would resample its bounds per evaluation.
+    - A miss evicts the entries of OTHER applications (their session may
+      be gone, so the unpersist is guarded). Entries of the live
+      application are never evicted: a derived plan may still read them.
+    """
+    app_id = spark.sparkContext.applicationId
+    full_key = (app_id, *key)
+    value = _SHARED.get(full_key)
+    if value is not None:
+        if all(_held(df) for df in _frames(value)):
+            return value
+        _unpersist(value)
+    for k in [k for k in _SHARED if k[0] != app_id]:
+        _unpersist(_SHARED.pop(k))
+    value = build()
+    for df in _frames(value):
+        persist_once(df)  # persist() returns the same handle
+    _SHARED[full_key] = value
+    return value
 
 
 def bounded_window(*cols):

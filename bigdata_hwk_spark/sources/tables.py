@@ -253,13 +253,6 @@ STREAM_SQL_BODY = (
 )
 
 
-# Memoized persisted sorted layout per (applicationId, sf_dir) — see
-# stream_from_events docstring. Mirrors the registry's bounded-evict
-# pattern (_LSH_CACHE).
-_STREAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-_STREAM_CACHE_MAX = 4
-
-
 def stream_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer item stream (seq, item) replayed from events.
 
@@ -286,39 +279,25 @@ def stream_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale this is honest cost accounting: a total-order assignment IS a
     sort, and MEMORY_AND_DISK spills rather than re-sorting per consumer.
 
-    The persisted layout is memoized per (applicationId, sf_dir) with
-    bounded eviction — without it every call (bench warm + timed passes,
-    repeated registry queries) pinned a fresh copy and executor storage
-    grew monotonically.
+    The persisted layout is one ``session.shared`` entry per
+    (applicationId, sf_dir) — without it every call (bench warm + timed
+    passes, repeated registry queries) pinned a fresh copy and executor
+    storage grew monotonically — and is rebuilt once ``clearCache``
+    dropped it, so ids are never assigned over an unpersisted layout.
     """
-    from pyspark import StorageLevel
-
+    from ..session import shared
     from .points_csv import with_point_ids
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _STREAM_CACHE:
-        # Evict dead-application entries first; entries of the LIVE app are
-        # never evicted — unpersisting a pinned sorted layout that a derived
-        # plan still references would let a re-execution resample the range
-        # partitioner bounds and corrupt the deterministic seq assignment.
-        stale = [k for k in _STREAM_CACHE if k[0] != app_id]
-        for k in stale:
-            if len(_STREAM_CACHE) < _STREAM_CACHE_MAX:
-                break
-            try:
-                _STREAM_CACHE.pop(k).unpersist()
-            except Exception:  # session of the evicted entry may be gone
-                _STREAM_CACHE.pop(k, None)
-        ev = load_table(spark, sf_dir, "events")
+    def build():
         n_parts = max(spark.sparkContext.defaultParallelism, 1)
-        ordered = (
-            ev.select("ts", "event_id", "user_id")
+        return (
+            load_table(spark, sf_dir, "events")
+            .select("ts", "event_id", "user_id")
             .repartitionByRange(n_parts, "ts", "event_id")
             .sortWithinPartitions("ts", "event_id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _STREAM_CACHE[key] = ordered
-    return with_point_ids(_STREAM_CACHE[key]).select(
+
+    ordered = shared(spark, ("stream_layout", sf_dir), build)
+    return with_point_ids(ordered).select(
         F.col("point_id").alias("seq"), F.col("user_id").alias("item")
     )

@@ -122,6 +122,73 @@ def test_persist_scoped_respects_outer_cache_ownership(spark):
     assert not cached.storageLevel.useMemory
 
 
+def test_shared_hits_reuse_handles_without_jobs(spark):
+    """Two hits run ``build`` once, return the very handles the miss
+    persisted, and launch no Spark job (the hit probe is a CacheManager
+    lookup, not an action)."""
+    from bigdata_hwk_spark.session import shared
+
+    from .conftest import jobs_in_group
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(50).selectExpr("id", "id * 5 AS v")
+
+    key = ("test_shared_hits",)
+    first = shared(spark, key, build)
+    first.count()
+    second = shared(spark, key, build)
+    third, jobs = jobs_in_group(
+        spark, "shared-hit", lambda: shared(spark, key, build)
+    )
+    assert len(calls) == 1
+    assert second is first and third is first
+    assert jobs == 0
+    assert first.storageLevel.useMemory
+    first.unpersist()
+
+
+def test_shared_rebuilds_entry_dropped_by_clear_cache(spark):
+    """After ``clearCache`` a hit is a miss: ``build`` runs again and the
+    returned frames are persisted, never the stale unpersisted handles.
+    A ``(df, None)`` entry takes the same path."""
+    from bigdata_hwk_spark.session import shared
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(40).selectExpr("id", "id * 7 AS w"), None
+
+    key = ("test_shared_clear",)
+    df, none = shared(spark, key, build)
+    df.count()
+    assert none is None and df.storageLevel.useMemory
+    assert shared(spark, key, build) == (df, None)
+    spark.catalog.clearCache()
+    assert not df.storageLevel.useMemory
+    df2, none2 = shared(spark, key, build)
+    assert len(calls) == 2
+    assert none2 is None and df2.storageLevel.useMemory
+    df2.unpersist()
+
+
+def test_lsh_shared_frames_held_after_clear_cache(spark):
+    """The registry's LSH memo hands out persisted (pairs, components)
+    after ``clearCache`` — not handles whose every read recomputes the
+    whole shingle → MinHash → LSH pipeline."""
+    from bigdata_hwk_spark import registry
+
+    from .conftest import SF_SMOKE
+
+    registry._lsh_shared(spark, SF_SMOKE)
+    spark.catalog.clearCache()
+    pairs, comp = registry._lsh_shared(spark, SF_SMOKE)
+    assert pairs.storageLevel.useMemory and comp.storageLevel.useMemory
+
+
 def test_empty_df_plans_as_empty_local_relation(spark):
     """``empty_df`` reads nothing through Python workers: its optimized
     plan is an empty ``LocalRelation`` (not a ``LogicalRDD`` over

@@ -152,13 +152,9 @@ def test_filters_reach_the_scan_and_columns_prune(spark, name):
     assert pruned_col not in plan, f"{name}: scan reads unused column {pruned_col}"
 
 
-def test_global_windows_only_via_bounded_window():
-    """Every unpartitioned ``Window.orderBy`` must route through
-    ``session.bounded_window`` — the single annotated origin for
-    WindowExec's move-all-data-to-one-partition warning, whose contract
-    is a bounded (post-limit / histogram-sized) input. A raw global
-    window anywhere else is either an unaudited scale bug or an
-    unannotated bounded site; both fail here."""
+def _package_lines_matching(pattern: str) -> list[str]:
+    """``rel:lineno: line`` for every package line matching ``pattern``,
+    outside ``session.py`` (home of the sanctioned helpers)."""
     import os
     import re
 
@@ -166,20 +162,44 @@ def test_global_windows_only_via_bounded_window():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "bigdata_hwk_spark",
     )
-    offenders = []
+    hits = []
     for root, _, files in os.walk(pkg):
         for fname in files:
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(root, fname)
             rel = os.path.relpath(path, pkg)
+            if rel == "session.py":
+                continue
             with open(path, encoding="utf-8") as fh:
                 for lineno, line in enumerate(fh, start=1):
-                    if re.search(r"\bWindow\.orderBy\(", line):
-                        if rel == "session.py":  # the helper itself
-                            continue
-                        offenders.append(f"{rel}:{lineno}: {line.strip()}")
+                    if re.search(pattern, line):
+                        hits.append(f"{rel}:{lineno}: {line.strip()}")
+    return hits
+
+
+def test_global_windows_only_via_bounded_window():
+    """Every unpartitioned ``Window.orderBy`` must route through
+    ``session.bounded_window`` — the single annotated origin for
+    WindowExec's move-all-data-to-one-partition warning, whose contract
+    is a bounded (post-limit / histogram-sized) input. A raw global
+    window anywhere else is either an unaudited scale bug or an
+    unannotated bounded site; both fail here."""
+    offenders = _package_lines_matching(r"\bWindow\.orderBy\(")
     assert offenders == [], (
         "raw global Window.orderBy outside session.bounded_window:\n"
+        + "\n".join(offenders)
+    )
+
+
+def test_dataframe_memos_only_via_session_shared():
+    """A module-level dict of DataFrames is a hand-rolled memo: its hit
+    check cannot see ``spark.catalog.clearCache()`` (it hands out
+    unpersisted handles afterwards) and its eviction rule is one more
+    copy. Intermediates shared across calls go through
+    ``session.shared``, whose one lifetime contract covers both."""
+    offenders = _package_lines_matching(r"^\w+\s*:\s*dict\[.*\bDataFrame\b")
+    assert offenders == [], (
+        "module-level DataFrame memo outside session.shared:\n"
         + "\n".join(offenders)
     )

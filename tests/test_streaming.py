@@ -24,6 +24,23 @@ def test_true_frequent_matches_oracle(spark, sf_dir):
     )
 
 
+def test_stream_seq_is_a_permutation_after_clear_cache(spark):
+    """``clearCache`` (run by bench.py before every query) drops the
+    persisted sorted layout; the next call must rebuild it. Ids assigned
+    over an unpersisted range-partitioned layout resample its bounds per
+    evaluation and collide. SF_CORRECT, because SF_SMOKE's 1,000 rows do
+    not reproduce the collision."""
+    stream_from_events(spark, SF_CORRECT)
+    spark.catalog.clearCache()
+    stream = stream_from_events(spark, SF_CORRECT)
+    row = stream.agg(
+        F.count("seq").alias("n"),
+        F.countDistinct("seq").alias("distinct"),
+        F.max("seq").alias("hi"),
+    ).first()
+    assert (row.n, row.distinct, row.hi) == (10_000, 10_000, 9_999)
+
+
 def test_replay_deterministic_and_exact_section(spark):
     stream = stream_from_events(spark, SF_SMOKE)
     r1 = FI.replay_frequent_items(stream, n=500, phi=0.02, eps=0.01, delta=0.1)
