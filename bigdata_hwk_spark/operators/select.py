@@ -8,87 +8,46 @@ algorithm is (1 − 1/e)-optimal (Nemhauser, Wolsey & Fisher 1978 —
 public) and is how "diverse subset" selection is actually run
 (facility-location / coverage variants of submodular data selection).
 
-Scale shape per round (exact path): ONE anti-join of the persisted
-shingle index against the covered set (keyed on the 8-byte shingle
-hash) + one map-side-combined per-doc gain count + a TakeOrdered(1) —
-the argmax travels to the driver as a SINGLE row per round (bounded
-driver traffic, k rows total; the one legal driver-side accumulation).
-The covered set grows by the winner's shingles only and is
-``localCheckpoint``-ed per round. Total work is O(k·corpus): k
-sequential full-index gain aggregations — the shape that breaks first
-at production k (round-10 VERDICT item 2).
+The algorithm is Minoux's (1978) lazy greedy, batch-distributed.
+Marginal gains only SHRINK as the covered set grows (submodularity), so
+each document's last-known gain is a sound upper bound on its current
+one. A round probes the top-B stale bounds, recomputes true gains for
+those candidates only, and accepts the best iff it STRICTLY beats the
+best un-recomputed bound, doubling B until it does. Strict dominance
+makes the doc_id tie-break exact, so the trace is the exact greedy
+trace, not merely a (1 − 1/e)-equivalent one.
 
-``lazy_greedy_coverage_select`` is the scale path (Minoux 1978's lazy
-greedy, batch-distributed): marginal gains only SHRINK as the covered
-set grows (submodularity), so last-known gains are sound upper bounds.
-Each round recomputes true gains for only the top-B stale candidates
-in one candidate-pruned job and accepts the best iff it STRICTLY beats
-the best un-recomputed stale bound — escalating B (doubling) until it
-does. The trace is BIT-IDENTICAL to exact greedy (strict-dominance
-acceptance makes the doc_id tie-break exact), but each round's
-aggregation shuffles only the candidates' postings instead of the
-whole corpus; the full-index groupBy happens exactly once (round-1
-bound seeding, which exact greedy also pays). ``greedy_coverage_select``
-auto-delegates above ``COVERAGE_LAZY_GATE_K``.
+Why this path and not a full gain aggregate per round: the full-index
+groupBy runs once (bound seeding), and every later round shuffles only
+the candidates' postings. SCALE_STRESS ``coverage_bytes_axis`` (64×
+fixture, Spark task metrics, traces asserted equal) measured the
+per-round work of the two shapes: a full-aggregate round is exactly
+corpus-linear (2.80 GB input + 3.21 MB shuffle), while a lazy round
+with ``index_dir`` reads 116.9 MB (24× less, the pushed-down
+``In(doc_id)`` row-group pruning) and shuffles 14.9 KB (215× less),
+under the tie-adversarial worst case.
 
-Measured regime boundary (SCALE_STRESS ``coverage_k_axis``, 64×
-fixture): at single-box fixture scale the two paths TIE on per-round
-marginal wall (~1.7 s/round both — the shared covered-set checkpoint
-and job scheduling dominate, hiding exact's per-round full-aggregate
-cost), and the replicated fixture is lazy's adversarial case (every
-gain is a ≥64-way tie across alphabet-permuted replica twins, so
-strict dominance recomputes whole tie classes — degrading soundly to
-exact rounds, never to a wrong trace).
-
-Measured WORK asymmetry (SCALE_STRESS ``coverage_bytes_axis``, 64×,
-Spark task metrics with bit-identical traces asserted): exact greedy's
-per-round marginal is EXACTLY corpus-linear — 2.80 GB input +
-3.21 MB shuffle per round (input bytes 5.6 GB at k=2 → 28.0 GB at
-k=10) — while lazy+``index_dir`` reads 116.9 MB/round (24× less, the
-pushed-down ``In(doc_id)`` row-group pruning) and shuffles
-14.9 KB/round (215× less), measured under the tie-adversarial worst
-case. The wall-clock crossover still needs a document count where
-those bytes dominate scheduling (~millions of docs, past this box's
-fixture); ``greedy_coverage_select`` therefore keeps exact as the
-default below ``COVERAGE_LAZY_GATE_K``.
+The covered set is never held on the driver. Only the winner ids
+(≤ k) are; each round the covered relation is the plan
+``index[doc_id IN winners].h``, broadcast into the recompute
+anti-join, so its bound is the postings of the k winners.
 
 Determinism: gains are exact integer counts; ties break by doc_id; the
 greedy trace is therefore bit-identical under any layout — pinned by an
-exact Python-mirror test (both paths).
+exact Python-mirror test.
 """
 
 from __future__ import annotations
 
+import heapq
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import empty_df, local_df
-
-def _covered_df(spark, covered_hashes: set[int]):
-    """The driver-held covered set as a broadcastable (h bigint) frame.
-
-    Arrow path (pandas/NumPy), not a Python tuple list: the set is
-    re-shipped every round, and pickling 10⁴–10⁵ tuples through py4j
-    measurably dominated the round (guide §6 'Arrow for driver
-    transfers'); the int64 ndarray crosses in one Arrow batch. Sorted
-    for a deterministic frame (the join result is set-semantics either
-    way)."""
-    if not covered_hashes:
-        return empty_df(spark, "h bigint")
-    import numpy as np
-    import pandas as pd
-
-    arr = np.fromiter(covered_hashes, dtype=np.int64, count=len(covered_hashes))
-    arr.sort()
-    return spark.createDataFrame(pd.DataFrame({"h": arr}))
-
+from ..session import local_df
 
 COVERAGE_K = 10
 COVERAGE_SHINGLE_W = 3
-# above this budget the exact path's O(k·corpus) shape dominates and
-# greedy_coverage_select auto-switches to the lazy path (identical
-# output, candidate-pruned per-round work)
-COVERAGE_LAZY_GATE_K = 32
 LAZY_PROBE_BATCH = 64
 # touched-set spelling gate for the lazy bounds view: up to this many
 # ids the NOT-IN stays a literal In-list (cheapest to plan and execute);
@@ -108,93 +67,14 @@ def greedy_coverage_select(
     documents: DataFrame,
     k: int = COVERAGE_K,
     w: int = COVERAGE_SHINGLE_W,
+    probe_batch: int = LAZY_PROBE_BATCH,
+    stats: dict | None = None,
+    index_dir: str | None = None,
 ) -> DataFrame:
     """(rnk, doc_id, marginal_gain, covered_total): the greedy
     max-coverage trace — round i picks the document adding the most
     not-yet-covered distinct word-``w``-gram hashes (ties by doc_id);
     stops early when the best marginal gain hits 0.
-
-    Budgets above ``COVERAGE_LAZY_GATE_K`` delegate to the lazy path
-    (identical output, candidate-pruned rounds)."""
-    if k > COVERAGE_LAZY_GATE_K:
-        return lazy_greedy_coverage_select(documents, k=k, w=w)
-    from ..functions.hashing import md5_hash64
-    from ..session import persist_scoped
-    from .dedup import doc_shingles
-
-    spark = documents.sparkSession
-    trace: list[tuple[int, int, int, int]] = []
-    total = 0
-    # The big shingle index is materialized ONCE and only ever SCANNED
-    # after that: each round anti-joins it against the COVERED set —
-    # which is at most k winner-docs' worth of hashes, so it broadcasts
-    # and the index side never reshuffles or rewrites. (A "shrinking
-    # remaining" variant that localCheckpoints the survivor table each
-    # round rewrites the whole index k times — strictly worse I/O at
-    # scale.) r14: persist_scoped instead of localCheckpoint — the
-    # persist piggybacks on round 1's gain job instead of paying its own
-    # materialization job, and MEMORY_AND_DISK keeps the spill posture.
-    sh, release_sh = persist_scoped(
-        doc_shingles(documents, w=w).select(
-            "doc_id", md5_hash64(F.col("sh")).alias("h")
-        )
-    )
-    # The covered set lives on the DRIVER as a plain hash set: it is
-    # bounded by the union of the k winners' shingle hashes — exactly
-    # the relation the previous implementation broadcast to every
-    # executor each round, so the memory posture is unchanged — and the
-    # driver-side union replaces the per-round union→distinct shuffle +
-    # localCheckpoint job with one pushed-down single-doc collect.
-    # r14: ONE action per round — the winner's UNCOVERED hashes ride
-    # the gain job itself (broadcast-join the top-1 doc id back onto the
-    # anti-joined index), so `len(rows)` IS the marginal gain (the index
-    # is per-doc-distinct) and the separate winner-fetch job disappears
-    # (measured: 2 jobs/round → 1; the covered union only ever needed
-    # the winner's uncovered hashes — the covered ones are in the set
-    # already).
-    covered_hashes: set[int] = set()
-    try:
-        for i in range(1, k + 1):
-            covered = _covered_df(spark, covered_hashes)
-            uncovered = sh.join(F.broadcast(covered), "h", "left_anti")
-            top1 = (
-                uncovered.groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("g"))
-                .orderBy(F.col("g").desc(), F.col("doc_id").asc())
-                .limit(1)
-            )
-            rows = (
-                uncovered.join(
-                    F.broadcast(top1.select("doc_id")), "doc_id"
-                )
-                .select("doc_id", "h")
-                .collect()
-            )
-            if not rows:  # no uncovered posting anywhere: every
-                break     # remaining gain is 0 — exact greedy stops
-            doc, g = int(rows[0].doc_id), len(rows)
-            total += g
-            trace.append((i, doc, g, total))
-            covered_hashes.update(int(r.h) for r in rows)
-    finally:
-        release_sh()
-    return local_df(
-        spark, trace,
-        "rnk int, doc_id bigint, marginal_gain bigint, covered_total bigint",
-    )
-
-
-def lazy_greedy_coverage_select(
-    documents: DataFrame,
-    k: int = COVERAGE_K,
-    w: int = COVERAGE_SHINGLE_W,
-    probe_batch: int = LAZY_PROBE_BATCH,
-    stats: dict | None = None,
-    index_dir: str | None = None,
-    reuse_index: bool = False,
-) -> DataFrame:
-    """Lazy greedy (Minoux 1978, public) — BIT-IDENTICAL trace to
-    ``greedy_coverage_select``, candidate-pruned per-round work.
 
     Invariant: a ``bounds(doc_id, g)`` table holds each unselected
     document's LAST RECOMPUTED marginal gain. Submodularity makes every
@@ -203,9 +83,10 @@ def lazy_greedy_coverage_select(
 
     1. probe the top ``B+1`` stale bounds (one bounded collect —
        ``B+1`` rows of driver traffic, never the table);
-    2. recompute TRUE gains for the top ``B`` candidates in ONE job —
-       an ``isin``-pruned scan of the index, anti-joined against the
-       broadcast covered set, aggregated over candidate postings only;
+    2. recompute TRUE gains for the top ``B`` candidates in one
+       collect — an ``isin``-pruned scan of the index, anti-joined
+       against the broadcast covered set (the winners' postings),
+       aggregated over candidate postings only;
     3. accept the best recomputed (g desc, doc_id asc) iff its gain
        STRICTLY exceeds the (B+1)-th stale bound: every non-candidate's
        true gain ≤ its stale bound ≤ that threshold < g*, so the
@@ -217,21 +98,20 @@ def lazy_greedy_coverage_select(
        degenerates to an exact-greedy round (sound fallback, hit only
        when gains are near-flat).
     4. fold the recomputed gains back into ``bounds`` (zero-gain docs
-       drop — they can never win a future round) and extend the
-       covered set by the winner's postings.
+       drop — they can never win a future round) and append the winner to
+       the trace, whose doc ids define the covered set.
 
-    Scale shape: the full-index groupBy runs ONCE (bound seeding —
-    exact greedy pays the same round-1 aggregate); every later round
-    shuffles only candidate postings. With the default in-memory index
-    the per-round SCAN remains (the ``isin`` prunes post-scan); pass
-    ``index_dir`` to persist the index as a doc_id-RANGE-SORTED parquet
-    artifact instead — then every candidate recompute is a pushed-down
+    Scale shape: the full-index groupBy runs ONCE (bound seeding, the
+    round-1 gains); every later round shuffles only candidate postings.
+    With the default in-memory index the per-round SCAN remains (the
+    ``isin`` prunes post-scan); pass ``index_dir`` to persist the index
+    as a doc_id-RANGE-SORTED parquet artifact instead — then every
+    candidate recompute (and the covered-set read) is a pushed-down
     ``doc_id IN (...)`` parquet read whose row-group min/max stats SKIP
     the non-candidate ranges, so per-round I/O is candidate-sized too
-    (the production posture; measured against the exact path on the
-    64× fixture in SCALE_STRESS ``coverage_k_axis``). Driver traffic:
-    (B+1) probe rows + one winner row per round; the bounds table
-    itself never collects.
+    (the production posture; SCALE_STRESS ``coverage_bytes_axis``).
+    Driver traffic: (B+1) probe rows + ≤B recomputed gains per round;
+    neither the bounds table nor the covered set ever collects.
 
     ``stats`` (optional) receives {"recomputes": int, "probes": int,
     "rounds": int, "escalations": int} — the laziness evidence the
@@ -249,34 +129,27 @@ def lazy_greedy_coverage_select(
         # doc_id so every file/row-group carries tight doc_id min/max
         # stats — a candidate IN-filter then reads only candidate
         # row groups (ParquetScan PushedFilters: In(doc_id, ...)).
-        # reuse_index=True honors the build-once contract across calls
-        # (caller asserts the artifact matches this corpus/w).
-        import os
-
-        if not (
-            reuse_index
-            and os.path.isfile(os.path.join(index_dir, "_SUCCESS"))
-        ):
-            (
-                sh_plan.repartitionByRange(INDEX_RANGE_PARTITIONS, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .parquet(index_dir)
-            )
+        (
+            sh_plan.repartitionByRange(INDEX_RANGE_PARTITIONS, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .parquet(index_dir)
+        )
         sh = spark.read.parquet(index_dir)
     else:
         sh = sh_plan.localCheckpoint()
-    # round-1 bound seeding == exact greedy's first gain aggregate.
+    # round-1 bound seeding: the one full-index gain aggregate.
     # The SEEDED table (corpus-sized) stays distributed and is
     # checkpointed exactly once; every later round's mutations — drop
     # the winner/zero-gain docs, overwrite ≤B recomputed bounds — are
     # tiny by construction (each entry came off a bounded probe/
     # recompute collect), so they live on the DRIVER as a drop-set +
-    # override-dict and the probe view is base.filter(NOT IN touched)
-    # ∪ parallelize(overrides). That removes the per-round bounds
-    # rebuild (filter→union→localCheckpoint job) entirely; the touched
-    # set grows by ≤B per round, bounded by the total recompute count
-    # the `stats` contract already reports.
+    # override-dict. A probe takes the top of base.filter(NOT IN
+    # touched) in Spark and merges it with the overrides on the driver
+    # (the top-n of a union is the top-n of the two sides' top-n), so
+    # the bounds are never rebuilt and the overrides never re-shipped;
+    # the touched set grows by ≤B per round, bounded by the total
+    # recompute count the `stats` contract already reports.
     bounds_base = (
         sh.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("g"))
@@ -285,7 +158,8 @@ def lazy_greedy_coverage_select(
     dropped: set[int] = set()
     overrides: dict[int, int] = {}
 
-    def bounds_view():
+    def probe(n):
+        """The top ``n`` (doc_id, bound) pairs, g desc then doc_id asc."""
         touched = list(dropped) + list(overrides)
         if not touched:
             view = bounds_base
@@ -300,26 +174,25 @@ def lazy_greedy_coverage_select(
                 "doc_id bigint",
             )
             view = bounds_base.join(F.broadcast(t), "doc_id", "left_anti")
-        if overrides:
-            view = view.union(
-                local_df(
-                    spark, sorted(overrides.items()), "doc_id bigint, g bigint"
-                )
-            )
-        return view
+        top = view.orderBy(F.col("g").desc(), F.col("doc_id").asc()).limit(n)
+        rows = [(int(r.doc_id), int(r.g)) for r in top.collect()]
+        return heapq.nsmallest(
+            n, rows + list(overrides.items()), key=lambda dg: (-dg[1], dg[0])
+        )
 
-    # covered set on the DRIVER (bounded by the k winners' shingle
-    # hashes — the same relation every probe already broadcast): the
-    # per-round covered extension becomes one pushed-down single-doc
-    # collect instead of an anti-join→union→localCheckpoint job.
-    covered_hashes: set[int] = set()
     trace: list[tuple[int, int, int, int]] = []
     total = 0
     n_recomputes = n_probes = n_escalations = 0
     fresh_round = 1  # bounds are TRUE gains while covered is empty
     for i in range(1, k + 1):
         b = probe_batch
-        covered = _covered_df(spark, covered_hashes)
+        # the covered set stays a plan: the winners' postings, re-read
+        # from the index each round and broadcast into the recompute
+        # anti-join (postings shared by two winners are harmless
+        # duplicates under left-anti), so only the ≤k winner ids of the
+        # trace live on the driver
+        winners = [d for _, d, _, _ in trace]
+        covered = sh.filter(F.col("doc_id").isin(winners)).select("h")
         # this round's recomputed TRUE gains, carried ACROSS escalations:
         # the probe ordering is deterministic, so each doubling's top-b
         # is a superset of the last — without the carry every escalation
@@ -329,22 +202,15 @@ def lazy_greedy_coverage_select(
         truth: dict[int, int] = {}
         while True:
             n_probes += 1
-            top = (
-                bounds_view()
-                .orderBy(F.col("g").desc(), F.col("doc_id").asc())
-                .limit(b + 1)
-                .collect()
-            )
+            top = probe(b + 1)
             if not top:
                 winner = None
                 break
-            cands = [int(r.doc_id) for r in top[:b]]
-            threshold = int(top[b].g) if len(top) > b else -1
+            cands = [d for d, _ in top[:b]]
+            threshold = top[b][1] if len(top) > b else -1
             if fresh_round:
                 # seeding round: bounds ARE true gains; top-1 is exact
-                best = top[0]
-                truth = {int(r.doc_id): int(r.g) for r in top[:b]}
-                winner = (int(best.doc_id), int(best.g))
+                winner = top[0]
                 break
             new_cands = [d for d in cands if d not in truth]
             if new_cands:
@@ -375,27 +241,17 @@ def lazy_greedy_coverage_select(
         doc, g = winner
         total += g
         trace.append((i, doc, g, total))
-        # covered extension: one pushed-down single-doc read (Arrow
-        # transfer); the driver set-union dedups (the old anti-join's
-        # job)
-        covered_hashes.update(
-            sh.filter(F.col("doc_id") == doc).select("h").toPandas()["h"]
-        )
-        if fresh_round:
-            # seeding round: the probe read TRUE gains straight from the
-            # freshly aggregated bounds — re-folding them back would be
-            # a no-op; only the winner leaves the pool
-            dropped.add(doc)
-            overrides.pop(doc, None)
-        else:
-            # fold recomputed truths back as the new stale bounds; the
-            # winner leaves the pool, zero-gain docs can never win
-            for d, g2 in truth.items():
-                if d == doc or g2 == 0:
-                    dropped.add(d)
-                    overrides.pop(d, None)
-                else:
-                    overrides[d] = g2
+        # fold recomputed truths back as the new stale bounds (none in the
+        # seeding round, whose bounds were already true gains). The
+        # winner's own gain is now 0: it leaves the pool with every other
+        # zero-gain doc, none of which can ever win
+        truth[doc] = 0
+        for d, g2 in truth.items():
+            if g2 == 0:
+                dropped.add(d)
+                overrides.pop(d, None)
+            else:
+                overrides[d] = g2
         fresh_round = 0
     if stats is not None:
         stats.update(

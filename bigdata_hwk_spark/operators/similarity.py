@@ -1989,7 +1989,8 @@ def _exact_rerank(
     (vec_id, embedding) corpus. At 100 TB that reads the row groups
     holding a few hundred vectors instead of scanning the whole table
     to broadcast-join it — the same In-pushdown candidate-fetch
-    precedent as ``coverage_select_topk_lazy``; at bench scale it also
+    precedent as ``greedy_coverage_select``'s candidate recompute
+    (``coverage_select_topk``); at bench scale it also
     drops the mapInPandas tail whose Python-worker startup dominated
     the leg (r12 watchlist close-out). The rerank itself is one NumPy
     matmul over the bounded shortlist on the driver (the sanctioned

@@ -2276,22 +2276,15 @@ register(
     lambda spark, sf: UL.unigram_lm_encode_stats(_docs(spark, sf)),
 )
 
-# Greedy max-coverage selection (rows-only: iterative greedy; the exact
-# trace is pinned by a Python-mirror test and layout invariance)
+# Greedy max-coverage selection by lazy greedy (Minoux 1978): a probe
+# and a candidate recompute per round, the exact greedy trace by
+# strict-dominance acceptance (rows-only: iterative greedy; the trace is
+# pinned by a Python-mirror test and layout invariance)
 from .operators import select as SEL  # noqa: E402
 
 register(
     "coverage_select_topk",
     lambda spark, sf: SEL.greedy_coverage_select(_docs(spark, sf)),
-)
-# Lazy-greedy twin (Minoux 1978): bit-identical trace by construction
-# (strict-dominance acceptance), candidate-pruned per-round work — the
-# scale path greedy_coverage_select auto-gates to above
-# COVERAGE_LAZY_GATE_K. Registered so the bench/stress sweeps measure
-# its growth exponent next to the exact path's.
-register(
-    "coverage_select_topk_lazy",
-    lambda spark, sf: SEL.lazy_greedy_coverage_select(_docs(spark, sf)),
 )
 
 # Oracle-checked release funnel: eval cut -> exact dedup -> quality gate

@@ -447,19 +447,14 @@ HEAVY_QUERIES = [
     # co-purchase degree distributions constant, so wedge volume should
     # scale ∝ edges and the 64× exponent should hold near the 8× fit
     "copurchase_triangle_stats",
-    # exact greedy coverage selection: k sequential full-index rounds —
-    # the O(k·corpus) shape round-10 flagged as weak; measured here
-    # NEXT TO its lazy twin so the committed artifact carries the
-    # shape comparison, not just the claim
+    # greedy coverage selection (lazy greedy): one full-index gain
+    # aggregate to seed the bounds, then k rounds that each shuffle only
+    # the probed candidates' postings — the claim is that per-round work
+    # tracks the candidates, not the corpus. The replication transform
+    # is lazy greedy's adversarial case (every gain becomes a >=64-way
+    # tie across replica twins, so strict dominance recomputes whole tie
+    # classes) — the 64x exponent is that worst case, not the typical one
     "coverage_select_topk",
-    # lazy-greedy twin (round-10 VERDICT item 2): bit-identical trace,
-    # candidate-pruned rounds. MEASURED OUTCOME (see coverage_k_axis +
-    # the second_decade annotation): on this fixture the corpus-axis
-    # exponent is ABOVE the exact path's — the replication transform is
-    # lazy greedy's adversarial tie-factory and both paths are
-    # scheduling-bound at fixture doc counts; the entry stays as the
-    # honest record of that regime boundary
-    "coverage_select_topk_lazy",
     # Unigram-LM EM training: the corpus-scale work is the word
     # histogram collapse; EM itself is Arrow passes over the DISTINCT-
     # word table, so the Heaps-law vocab compression is the claim —
@@ -526,27 +521,6 @@ SECOND_DECADE_ANNOTATIONS = {
         "The 79.7x wall ratio against 4096x candidate volume is ~51x "
         "SUBLINEAR in the real work; still within the 1.3N budget "
         "even uncorrected."
-    ),
-    "coverage_select_topk_lazy": (
-        "exponent above the exact twin's (0.30 vs 0.084) is the honest "
-        "record of a regime boundary, not a defect: the replication "
-        "transform is lazy greedy's adversarial case (each replica "
-        "carries the same documents over disjoint permuted alphabets, "
-        "so every marginal gain is a >=64-way tie and strict-dominance "
-        "acceptance recomputes whole tie classes — sound degradation "
-        "to exact-greedy rounds, bit-identical trace asserted), while "
-        "at fixture doc counts BOTH paths are bound by per-round "
-        "scheduling + the covered-set checkpoint (coverage_k_axis: "
-        "equal 1.7 s/round marginal for exact and lazy at k=8->32 on "
-        "the 64x dir). The lazy path's saving targets exact's per-round "
-        "O(|docs|)-group gain shuffle — invisible below ~millions of "
-        "docs; greedy_coverage_select therefore keeps exact as the "
-        "default below COVERAGE_LAZY_GATE_K. The r12 coverage_bytes_axis "
-        "section measures the per-round WORK asymmetry the walls hide: "
-        "exact 2.80 GB input + 3.21 MB shuffle per round (exactly "
-        "corpus-linear) vs lazy+index_dir 116.9 MB + 14.9 KB — 24x/215x "
-        "less, under lazy's tie-adversarial worst case, traces "
-        "bit-identical."
     ),
     "fuzzy_link_summary_ed2": (
         "match-volume physics of the replication transform, not an "

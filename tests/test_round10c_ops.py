@@ -1,12 +1,12 @@
 """Round-10c operators: trigram stupid-backoff, PSI drift (+ streaming
 monitor), grid DBSCAN, BFS hop distances, Misra-Gries (+ streaming
 ingest), item-item CF, per-type daily OLS trend, the oracle-checked
-release funnel, event debounce, degree assortativity, k-core, Apriori
-triples, and greedy coverage selection. The registry oracle sweep
-(test_outliers.py / test_extensions.py) proves hash equality vs DuckDB
-at the gate SFs; these tests pin operator-level semantics on hand-built
-inputs where every branch is computed by hand, plus the
-streaming ≡ batch equality pins."""
+release funnel, event debounce, degree assortativity, k-core and Apriori
+triples (greedy coverage selection is in test_select.py). The registry
+oracle sweep (test_outliers.py / test_extensions.py) proves hash
+equality vs DuckDB at the gate SFs; these tests pin operator-level
+semantics on hand-built inputs where every branch is computed by hand,
+plus the streaming ≡ batch equality pins."""
 
 from __future__ import annotations
 
@@ -535,56 +535,6 @@ def test_frequent_triples_hand_case(spark):
     assert r.support == round(2 / 3, 6)
 
 
-def test_greedy_coverage_python_mirror(spark):
-    """The greedy max-coverage trace must equal an exact Python replay
-    (same shingles, same tie-break), and be layout-invariant."""
-    from bigdata_hwk_spark.operators.select import greedy_coverage_select
-
-    texts = {
-        1: "a b c d e f",        # 4 3-grams
-        2: "a b c d e f",        # exact dup of 1: gain 0 after 1 picked
-        3: "x y z w",            # 2 fresh 3-grams
-        4: "a b c q r s t",      # overlaps 1 on "a b c"
-        5: "m n",                # too short for a 3-gram: never selected
-    }
-    docs = spark.createDataFrame(
-        list(texts.items()), "doc_id bigint, text string"
-    )
-    got = [
-        (r.rnk, r.doc_id, r.marginal_gain, r.covered_total)
-        for r in greedy_coverage_select(docs, k=10, w=3)
-        .orderBy("rnk")
-        .collect()
-    ]
-
-    def grams(t, w=3):
-        ws = t.split(" ")
-        return {" ".join(ws[i:i + w]) for i in range(len(ws) - w + 1)}
-
-    sets = {d: grams(t) for d, t in texts.items() if len(t.split()) >= 3}
-    covered: set = set()
-    want = []
-    for i in range(1, 11):
-        best = max(
-            sorted(sets),
-            key=lambda d: (len(sets[d] - covered), -d),
-        )
-        g = len(sets[best] - covered)
-        if g == 0:
-            break
-        covered |= sets[best]
-        want.append((i, best, g, len(covered)))
-    assert got == want
-    # layout invariance
-    got_rep = [
-        (r.rnk, r.doc_id, r.marginal_gain, r.covered_total)
-        for r in greedy_coverage_select(docs.repartition(7), k=10, w=3)
-        .orderBy("rnk")
-        .collect()
-    ]
-    assert got_rep == want
-
-
 def test_multitouch_credit_hand_case(spark):
     from pyspark.sql import functions as F
 
@@ -803,138 +753,6 @@ def test_unigram_seed_char_coverage_floor():
     assert "z" in pieces and "a" in pieces and "b" in pieces
     probs = {p: pr for _, p, pr, _ in out}
     assert UL.viterbi_segment("za", probs, 4) != []
-
-
-def _coverage_trace(df):
-    return [
-        (r.rnk, r.doc_id, r.marginal_gain, r.covered_total)
-        for r in df.orderBy("rnk").collect()
-    ]
-
-
-def test_lazy_greedy_coverage_bit_identical_and_lazy(spark):
-    """Lazy greedy must produce the exact greedy trace BIT-IDENTICALLY
-    (strict-dominance acceptance) while recomputing far fewer gains
-    than exact greedy's rounds×docs — the laziness evidence."""
-    from bigdata_hwk_spark.operators.select import (
-        greedy_coverage_select,
-        lazy_greedy_coverage_select,
-    )
-
-    # 20 docs with well-separated vocabularies: doc i contributes i
-    # unique 3-grams plus a shared prefix, so gains are distinct and
-    # lazy probing settles each round in one top-B probe.
-    texts = {}
-    for i in range(1, 21):
-        toks = [f"w{i}_{j}" for j in range(i + 2)]  # i distinct 3-grams
-        texts[i] = " ".join(toks)
-    docs = spark.createDataFrame(
-        list(texts.items()), "doc_id bigint, text string"
-    )
-    want = _coverage_trace(greedy_coverage_select(docs, k=8, w=3))
-    stats: dict = {}
-    got = _coverage_trace(
-        lazy_greedy_coverage_select(docs, k=8, w=3, probe_batch=2, stats=stats)
-    )
-    assert got == want and len(got) == 8
-    # disjoint vocabularies: stale bounds are exact, so after the
-    # seeding round every round recomputes at most probe_batch docs
-    assert stats["rounds"] == 8
-    assert stats["recomputes"] <= 2 * 8
-    assert stats["escalations"] == 0
-
-
-def test_lazy_greedy_tie_at_threshold_escalates_not_guesses(spark):
-    """Two equal-gain docs with probe_batch=1: the first probe's best
-    recomputed gain TIES the excluded stale bound — the lazy path must
-    escalate (recompute both) and keep the doc_id tie-break, never
-    accept on a tie."""
-    from bigdata_hwk_spark.operators.select import (
-        greedy_coverage_select,
-        lazy_greedy_coverage_select,
-    )
-
-    texts = {
-        2: "z1 z2 z3 z4 z5 z6 z7 z8",  # 6 grams: clear round-1 winner
-        7: "a1 a2 a3 a4 a5",   # 3 grams
-        3: "b1 b2 b3 b4 b5",   # 3 grams, equal gain, smaller id wins
-        9: "c1 c2 c3",         # 1 gram
-    }
-    docs = spark.createDataFrame(
-        list(texts.items()), "doc_id bigint, text string"
-    )
-    want = _coverage_trace(greedy_coverage_select(docs, k=5, w=3))
-    stats: dict = {}
-    got = _coverage_trace(
-        lazy_greedy_coverage_select(docs, k=5, w=3, probe_batch=1, stats=stats)
-    )
-    assert got == want
-    # round 2: probe sees only doc 3, its gain TIES doc 7's stale bound
-    # → must escalate and resolve the tie by doc_id, picking 3 before 7
-    assert got[1][1] == 3 and got[2][1] == 7
-    assert stats["escalations"] >= 1
-
-
-def test_lazy_greedy_fixture_trace_matches_exact(spark):
-    """On the real sf0.001 documents table the lazy path must reproduce
-    the registry row's exact trace."""
-    from bigdata_hwk_spark.operators.select import (
-        greedy_coverage_select,
-        lazy_greedy_coverage_select,
-    )
-    from bigdata_hwk_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    want = _coverage_trace(greedy_coverage_select(docs, k=10, w=3))
-    got = _coverage_trace(lazy_greedy_coverage_select(docs, k=10, w=3))
-    assert got == want and len(got) > 0
-
-
-def test_greedy_coverage_gate_delegates_to_lazy(spark, monkeypatch):
-    """Budgets above COVERAGE_LAZY_GATE_K must route through the lazy
-    path (the round-10 'ship it behind a gate' contract)."""
-    from bigdata_hwk_spark.operators import select as SEL
-
-    called = {}
-
-    def spy(documents, k, w):
-        called["k"] = k
-        return "LAZY"
-
-    monkeypatch.setattr(SEL, "lazy_greedy_coverage_select", spy)
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
-    assert SEL.greedy_coverage_select(docs, k=SEL.COVERAGE_LAZY_GATE_K + 1) == "LAZY"
-    assert called["k"] == SEL.COVERAGE_LAZY_GATE_K + 1
-
-
-def test_lazy_greedy_pruned_index_trace_and_pushdown(spark, tmp_path):
-    """index_dir mode: the doc-sorted parquet index must (a) leave the
-    trace bit-identical, and (b) push the candidate doc_id IN-filter
-    into the parquet scan so row-group stats can prune I/O."""
-    from pyspark.sql import functions as F
-
-    from bigdata_hwk_spark.operators.select import (
-        greedy_coverage_select,
-        lazy_greedy_coverage_select,
-    )
-    from bigdata_hwk_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    want = _coverage_trace(greedy_coverage_select(docs, k=6, w=3))
-    idx = str(tmp_path / "cov_index")
-    got = _coverage_trace(
-        lazy_greedy_coverage_select(docs, k=6, w=3, index_dir=idx)
-    )
-    assert got == want and len(got) == 6
-    # the pruned-read shape: an IN(doc_id ...) filter must reach the scan
-    plan = (
-        spark.read.parquet(idx)
-        .filter(F.col("doc_id").isin([1, 2, 3]))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [In(doc_id" in plan, plan
 
 
 def test_hard_negative_topk_hand_case(spark):

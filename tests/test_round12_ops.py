@@ -153,42 +153,6 @@ def test_neyman_big_strata_decimal_promotion(spark):
     assert duck == want
 
 
-def test_lazy_greedy_escalation_carries_truth(spark):
-    """r11 ADVICE: escalation (b *= 2) must not re-recompute candidates
-    already recomputed earlier in the same round. On the planted
-    tie-at-threshold fixture the escalating round recomputes doc 3 once
-    (b=1) then ONLY doc 7 at b=2 — total 4 recomputes across all
-    rounds, not the 5 the un-carried version paid."""
-    from bigdata_hwk_spark.operators.select import (
-        greedy_coverage_select,
-        lazy_greedy_coverage_select,
-    )
-
-    texts = {
-        2: "z1 z2 z3 z4 z5 z6 z7 z8",
-        7: "a1 a2 a3 a4 a5",
-        3: "b1 b2 b3 b4 b5",
-        9: "c1 c2 c3",
-    }
-    docs = spark.createDataFrame(
-        list(texts.items()), "doc_id bigint, text string"
-    )
-    stats: dict = {}
-    got = [
-        tuple(r)
-        for r in lazy_greedy_coverage_select(
-            docs, k=5, w=3, probe_batch=1, stats=stats
-        ).collect()
-    ]
-    want = [
-        tuple(r) for r in greedy_coverage_select(docs, k=5, w=3).collect()
-    ]
-    assert got == want
-    assert stats["escalations"] == 1
-    # seeding round free; round 2 = {3} then {7 only}; rounds 3,4 = 1 each
-    assert stats["recomputes"] == 4
-
-
 def test_symmetric_edge_probe_rejects_one_direction_list(spark):
     """r11 ADVICE: hop_distances/kcore_members enforce (not assume) the
     symmetric-edge-list precondition via a sampled probe — a

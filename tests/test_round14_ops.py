@@ -8,9 +8,6 @@ semantics under the restructured plan.
 * _band_keys_from_shingles: non-divisible (h, bands) configs must emit
   the trailing partial band exactly as the long form does (r13 ADVICE —
   the fused form silently dropped it).
-* lazy greedy coverage: above the In-list threshold the touched-set
-  filter switches to a broadcast anti-join; the trace must stay
-  bit-identical to exact greedy.
 * local_df: a None in a numeric column degrades to the classic (pickled)
   createDataFrame path instead of NaN-widening (r13 ADVICE).
 * kmeans_fit: the persisted-corpus loop returns bit-identical centroids
@@ -104,20 +101,6 @@ def test_fused_band_keys_emit_partial_band(spark):
 
     per_doc = Counter(d for d, _ in fused)
     assert max(per_doc.values()) == -(-h // r)  # ceil(16/3) = 6
-
-
-def test_lazy_greedy_anti_join_touched_path_matches_exact(spark, monkeypatch):
-    """Force the touched-set size over the In-list threshold so every
-    round after the first runs the broadcast-anti-join branch; the trace
-    must stay bit-identical to exact greedy (the lazy path's contract)."""
-    from bigdata_hwk_spark.operators import select as SEL
-
-    monkeypatch.setattr(SEL, "COVERAGE_TOUCHED_INLIST_MAX", 1)
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    lazy = SEL.lazy_greedy_coverage_select(docs, k=5).collect()
-    exact = SEL.greedy_coverage_select(docs, k=5).collect()
-    assert [tuple(r) for r in lazy] == [tuple(r) for r in exact]
-    assert len(lazy) == 5
 
 
 def test_local_df_none_numeric_falls_back(spark):
