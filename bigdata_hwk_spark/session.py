@@ -21,10 +21,17 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     process may import us by file path with a cwd outside the repo, in
     which case executor workers can't resolve ``bigdata_hwk_spark`` from
     their own sys.path. Idempotent per SparkContext; works in both local
-    and cluster mode (the zip is distributed with the job).
+    and cluster mode (the zip is distributed with the job). A no-op when
+    the workers fork from ``worker_daemon`` (``get_spark`` under a local
+    master): the daemon imported this package from the source tree before
+    forking, so the workers never read the zip.
     """
     sc = spark.sparkContext
     if sc._jsc is None or getattr(sc, "_bigdata_hwk_pyfile", False):
+        return
+    daemon = sc.getConf().get("spark.python.daemon.module")
+    if daemon == "bigdata_hwk_spark.worker_daemon":
+        sc._bigdata_hwk_pyfile = True
         return
     import pathlib
     import tempfile
@@ -75,6 +82,21 @@ def get_spark(
     Parameters are env-overridable so the same code path serves pytest
     (local[*], small shuffle fanout) and a real cluster (spark-submit
     provides master/partitions; our settings only fill gaps).
+
+    Python workers: under a ``local[...]`` master the workers fork from
+    ``worker_daemon`` (``spark.python.daemon.module``), with this
+    package's parent directory on their ``PYTHONPATH`` so the daemon
+    imports from any cwd. Spark's worker calls
+    ``importlib.invalidate_caches()`` per task, which on CPython 3.11/3.12
+    re-reads the central directory of every zip on the worker path (~0.2 s
+    CPU per task). The daemon's guard re-reads an archive only when its
+    ``(st_mtime_ns, st_size)`` changed or it is gone, so ``addPyFile`` zips
+    still import; on CPython 3.13, where the call is lazy, the daemon
+    installs no guard. The daemon imports this package from the source
+    tree before forking, so local workers run the live source, and
+    ``ensure_package_on_executors`` ships no zip. Other masters keep
+    Spark's stock daemon: the package path need not exist on their
+    executors.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -90,10 +112,17 @@ def get_spark(
             str(shuffle_partitions) if shuffle_partitions else "32",
         )
     )
+    if not master and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    if master and master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "bigdata_hwk_spark.worker_daemon"
+        ).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -26,6 +26,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -57,32 +58,30 @@ def _session_fn(gap_min: int):
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            ts_us = pdf["ts"].astype("int64") // 1000  # ns → µs
-            for t, v in zip(ts_us.to_numpy(), pdf["value"].to_numpy()):
+            ts_all = pdf["ts"].astype("int64").to_numpy()
+            order = np.lexsort((pdf["event_id"].to_numpy(), ts_all))
+            ts_us = (ts_all[order] // 1000).tolist()  # ns → µs
+            for t, v in zip(ts_us, pdf["value"].to_numpy()[order].tolist()):
                 if last is not None and t - last > gap_us:
-                    closed.append((user_id, start, last, n, round(val, 2)))
+                    closed.append((start, last, n, round(val, 2)))
                     start, last, n, val = None, None, 0, 0.0
                 if start is None:
-                    start = int(t)
-                last = int(t)
+                    start = t
+                last = t
                 n += 1
-                val += float(v)
+                val += v
         state.update((start, last, n, val))
         if closed:
-            out = pd.DataFrame(
-                closed,
-                columns=[
-                    "user_id",
-                    "session_start",
-                    "session_end",
-                    "n_events",
-                    "session_value",
-                ],
+            starts, ends, counts, values = zip(*closed)
+            yield pd.DataFrame(
+                {
+                    "user_id": np.full(len(closed), user_id, dtype="int64"),
+                    "session_start": np.array(starts, dtype="datetime64[us]"),
+                    "session_end": np.array(ends, dtype="datetime64[us]"),
+                    "n_events": np.array(counts, dtype="int64"),
+                    "session_value": np.array(values, dtype="float64"),
+                }
             )
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-            yield out
 
     return fn
 
