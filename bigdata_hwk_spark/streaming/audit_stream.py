@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.audit import LINEITEM_KEY, LINEITEM_ROW_CHECKS
 from ..operators.sketches import HLL_P, _hll_alpha, hll_registers
+from .sources import drain_file_stream
 
 LINEITEM_STREAM_SCHEMA = (
     "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
@@ -98,12 +99,11 @@ def run_audit_stream(
     orders: DataFrame,
     counts_dir: str,
     registers_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
-    """Replay the parquet files of ``source_dir`` (one micro-batch per
-    file, file order) through the incremental audit, appending additive
-    (constraint, violations) partials to ``counts_dir`` and per-batch
-    HLL register tables over the PK to ``registers_dir``."""
+    """Replay ``source_dir`` (``drain_file_stream``) through the
+    incremental audit, appending additive (constraint, violations)
+    partials to ``counts_dir`` and per-batch HLL register tables over
+    the PK to ``registers_dir``."""
     # freeze the dim's key projection once, EXECUTOR-side: localCheckpoint
     # materializes the distinct keys so no batch recomputes them, without
     # ever collecting a (potentially corpus-sized) key set to the driver —
@@ -126,16 +126,7 @@ def run_audit_stream(
             batch_df.select(_pk_item().alias("item")), "item"
         ).write.mode("overwrite").parquet(f"{registers_dir}/epoch={epoch_id}")
 
-    stream = (
-        spark.readStream.schema(LINEITEM_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, LINEITEM_STREAM_SCHEMA, process_batch)
 
 
 def merged_registers(spark: SparkSession, registers_dir: str) -> DataFrame:

@@ -29,6 +29,7 @@ from ..operators.behavior import (
     bursts_from_daily,
 )
 from ..session import empty_df
+from .sources import drain_file_stream
 
 
 def run_burst_monitor_stream(
@@ -36,9 +37,8 @@ def run_burst_monitor_stream(
     source_dir: str,
     w: int = BURST_TRAIL_DAYS,
     sigmas: int = BURST_SIGMAS,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Replay ``source_dir``'s parquet files as micro-batches,
+    """Replay ``source_dir`` (``drain_file_stream``),
     accumulate the daily histogram additively, and return the burst
     report of the accumulated traffic."""
     from .cdc_stream import EVENTS_STREAM_SCHEMA
@@ -55,14 +55,5 @@ def run_burst_monitor_stream(
             .localCheckpoint()
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
     return bursts_from_daily(state["daily"], w=w, sigmas=sigmas)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cdc import merge_upsert, reduce_changelog
 from ..session import empty_df
+from .sources import drain_file_stream, write_chunk_files
 
 EVENTS_STREAM_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -41,14 +42,9 @@ SNAPSHOT_SCHEMA = (
 )
 
 
-def run_cdc_merge_stream(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Replay the parquet files of ``source_dir`` (one micro-batch per
-    file, file order) through the MERGE loop; returns the final keyed
-    snapshot as a DataFrame (still distributed — callers aggregate or
+def run_cdc_merge_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """Replay ``source_dir`` (``drain_file_stream``) through the MERGE
+    loop; returns the final keyed snapshot as a DataFrame (still distributed — callers aggregate or
     write it, they don't collect it)."""
     state = {"df": empty_df(spark, SNAPSHOT_SCHEMA)}
 
@@ -60,16 +56,7 @@ def run_cdc_merge_stream(
             .localCheckpoint()  # materialize + truncate per-batch lineage
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
     return state["df"]
 
 
@@ -78,7 +65,6 @@ def run_running_checksum_stream(
     source_dir: str,
     schema: str,
     canon: list[tuple[str, str]],
-    max_files_per_trigger: int = 1,
 ) -> tuple[int, int, int]:
     """Maintain a table content checksum AT INGEST TIME: each micro-batch
     folds into a running (n_rows, ck_a, ck_b) via ``checksum_delta`` —
@@ -100,43 +86,12 @@ def run_running_checksum_stream(
         state["a"] ^= d.dk_a
         state["b"] ^= d.dk_b
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, schema, process_batch)
     return state["n"], state["a"], state["b"]
 
 
 def chunk_events_by_day(events: DataFrame, out_dir: str) -> int:
-    """Test/replay helper: write ``events`` as one FLAT parquet file per
-    calendar day with ascending mtimes (the file source orders
-    micro-batches by modification time), so the replay delivers
+    """Test/replay helper: write ``events`` as one micro-batch file per
+    calendar day (``write_chunk_files``), so the replay delivers
     time-monotonic micro-batches. Returns the chunk count."""
-    import os
-    import shutil
-    import time
-
-    days = sorted(
-        r.d for r in events.select(F.to_date("ts").alias("d")).distinct().collect()
-    )
-    staging = os.path.join(out_dir, "_staging")
-    os.makedirs(out_dir, exist_ok=True)
-    base = time.time() - 3600
-    for i, d in enumerate(days):
-        events.filter(F.to_date("ts") == F.lit(d)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = next(
-            f for f in os.listdir(staging) if f.endswith(".parquet")
-        )
-        dst = os.path.join(out_dir, f"{i:04d}.parquet")
-        shutil.move(os.path.join(staging, part), dst)
-        os.utime(dst, (base + i, base + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    return len(days)
+    return write_chunk_files(events, out_dir, F.to_date("ts"))

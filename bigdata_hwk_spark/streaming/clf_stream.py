@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.classifier import CLF_DIM, ridge_score
 from .mixture_stream import DOCS_STREAM_SCHEMA
+from .sources import drain_file_stream
 
 
 def run_classifier_score_stream(
@@ -38,12 +39,10 @@ def run_classifier_score_stream(
     weights: np.ndarray,
     out_dir: str,
     dim: int = CLF_DIM,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Replay the parquet files of ``source_dir`` (one micro-batch per
-    file, file order) through the frozen-weights scorer, appending
-    (doc_id, score, pred) rows to ``out_dir``; returns the sink as a
-    DataFrame.
+    """Replay ``source_dir`` (``drain_file_stream``) through the
+    frozen-weights scorer, appending (doc_id, score, pred) rows to
+    ``out_dir``; returns the sink as a DataFrame.
 
     ``weights`` — the float64[dim+1] artifact from ``ridge_fit`` (last
     entry = bias). Weights are a driver-held constant; each batch pays
@@ -56,14 +55,5 @@ def run_classifier_score_stream(
             out_dir
         )
 
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, DOCS_STREAM_SCHEMA, process_batch)
     return spark.read.parquet(out_dir)

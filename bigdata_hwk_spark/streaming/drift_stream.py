@@ -21,15 +21,15 @@ from pyspark.sql import functions as F
 
 from ..operators.robust import psi_report, psi_value_buckets
 from ..session import empty_df
+from .sources import drain_file_stream
 
 
 def run_psi_monitor_stream(
     spark: SparkSession,
     source_dir: str,
     ref_cells: DataFrame,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Replay ``source_dir``'s parquet files as micro-batches,
+    """Replay ``source_dir`` (``drain_file_stream``),
     accumulate the bucket histogram additively, and return the PSI
     report of the accumulated traffic against the frozen ``ref_cells``
     ((event_type, bucket, n), e.g. ``psi_value_buckets`` of a reference
@@ -50,14 +50,5 @@ def run_psi_monitor_stream(
             .localCheckpoint()
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
     return psi_report(ref_cells, state["cur"])

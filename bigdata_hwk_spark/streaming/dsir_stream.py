@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import DSIR_BUCKETS, dsir_score_against_dist
 from .mixture_stream import DOCS_STREAM_SCHEMA
+from .sources import drain_file_stream
 
 
 def run_dsir_score_stream(
@@ -39,12 +40,10 @@ def run_dsir_score_stream(
     dist: DataFrame,
     out_dir: str,
     buckets: int = DSIR_BUCKETS,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Replay the parquet files of ``source_dir`` (one micro-batch per
-    file, file order) through the frozen-distribution scorer, appending
-    (doc_id, n_feats, dsir_logratio) rows to ``out_dir``; returns the
-    sink as a DataFrame.
+    """Replay ``source_dir`` (``drain_file_stream``) through the
+    frozen-distribution scorer, appending (doc_id, n_feats,
+    dsir_logratio) rows to ``out_dir``; returns the sink as a DataFrame.
 
     ``dist`` is a (b, cr, ct) table — typically
     ``dsir_feature_dist(reference_corpus)``. It is materialized to a
@@ -64,14 +63,5 @@ def run_dsir_score_stream(
             "append"
         ).parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, DOCS_STREAM_SCHEMA, process_batch)
     return spark.read.parquet(out_dir)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import empty_df
+from .sources import drain_file_stream
 
 # ---------------------------------------------------------------------------
 # Sketches (driver-side sequential state)
@@ -296,18 +297,16 @@ def run_structured_stream(
     eps: float,
     delta: float,
     seed: int = 42,
-    max_files_per_trigger: int = 1,
 ) -> StreamReport:
     """Structured Streaming driver: file source → ``foreachBatch`` feeding
     the same sketches, stopping after the first n items.
 
     Mirrors the reference's socket → ``foreachRDD`` → driver-state →
     ``ssc.stop()`` shape (HWK_3/G029HW3.py:103-114) on the modern API:
-    ``writeStream.foreachBatch`` + ``query.stop()`` once the cutoff batch
-    crosses n (Structured Streaming has no declarative row-limit trigger —
-    SURVEY.md §4.3.2). Each input file is one micro-batch
-    (``maxFilesPerTrigger=1``); batches arrive in file order, rows within a
-    batch are sorted by ``seq`` so the run is deterministic.
+    ``drain_file_stream`` replays the files, and batches after the one
+    that crosses n are no-ops (Structured Streaming has no declarative
+    row-limit trigger — SURVEY.md §4.3.2). Rows within a batch are
+    sorted by ``seq`` so the run is deterministic.
     """
     state = _SketchState(n=n, phi=phi, eps=eps, delta=delta, seed=seed)
     done = {"flag": False}
@@ -319,20 +318,10 @@ def run_structured_stream(
         if state.add_batch(items):
             done["flag"] = True
 
-    stream = (
-        spark.readStream.schema("seq bigint, item bigint")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    # a stream that drains without reaching n reports on what arrived
+    drain_file_stream(
+        spark, source_dir, "seq bigint, item bigint", process_batch
     )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        while not done["flag"]:
-            query.processAllAvailable()
-            if not done["flag"]:
-                # stream drained without reaching n → report on what arrived
-                break
-    finally:
-        query.stop()
     return state.report()
 
 
@@ -602,10 +591,9 @@ def run_distributed_sticky_stream(
     delta: float,
     num_partitions: int | None = None,
     seed: int = 42,
-    max_files_per_trigger: int = 1,
 ) -> list[int]:
     """Streaming deployment form of the distributed sticky sampler
-    (round-7 VERDICT item 7): file-replay source → ``foreachBatch``, with
+    (round-7 VERDICT item 7): ``drain_file_stream``, with
     ALL sketch state kept in a Spark DataFrame updated by a cogrouped
     ``applyInPandas`` — the driver holds a DataFrame handle and a boolean,
     never the tracked-item map (the sequential wrapper
@@ -679,16 +667,9 @@ def run_distributed_sticky_stream(
         if mx is not None and mx >= n - 1:
             state["done"] = True  # first-n cutoff (reference A10)
 
-    stream = (
-        spark.readStream.schema("seq bigint, item bigint")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    drain_file_stream(
+        spark, source_dir, "seq bigint, item bigint", process_batch
     )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
     merged = (
         state["df"]
         .filter(F.col("item") >= 0)
@@ -706,12 +687,11 @@ def run_distributed_reservoir_stream(
     n: int,
     num_reservoirs: int | None = None,
     seed: int = 42,
-    max_files_per_trigger: int = 1,
 ) -> tuple[list[int], int]:
     """Streaming deployment form of the distributed reservoir (r9
     VERDICT item 7 — the sticky sampler has had this since round 8;
     the reservoir previously deployed only via the sequential
-    driver-state wrapper): file-replay source → ``foreachBatch`` with
+    driver-state wrapper): ``drain_file_stream`` with
     ALL reservoir state in a Spark DataFrame advanced by a cogrouped
     ``applyInPandas`` — per group p, the current sample slots, the
     population count, and the group RNG's pickled Mersenne state. The
@@ -784,16 +764,9 @@ def run_distributed_reservoir_stream(
         if mx is not None and mx >= n - 1:
             state["done"] = True  # first-n cutoff (reference A10)
 
-    stream = (
-        spark.readStream.schema("seq bigint, item bigint")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    drain_file_stream(
+        spark, source_dir, "seq bigint, item bigint", process_batch
     )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
     partials = state["df"].collect()
     return _fold_reservoir_partials(partials, m, seed)
 
@@ -826,7 +799,6 @@ def run_mg_ingest_stream(
     k: int | None = None,
     chunk: int | None = None,
     fanin: int | None = None,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming deployment of the Misra-Gries mergeable summary
     (``operators/sketches.py misra_gries_summary``): maintain heavy
@@ -919,16 +891,7 @@ def run_mg_ingest_stream(
         ).localCheckpoint()
         state["active_chunk"] = hi
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
     leaves = state["done"].union(
         _mg_compress(state["active"], k)
     ).localCheckpoint()

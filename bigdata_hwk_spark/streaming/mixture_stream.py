@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.splits import _token_projection, mixture_keep
+from .sources import drain_file_stream, write_chunk_files
 
 DOCS_STREAM_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -36,11 +37,10 @@ def run_mixture_resample_stream(
     spark: SparkSession,
     source_dir: str,
     rates: DataFrame,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Replay the parquet files of ``source_dir`` (one micro-batch per
-    file, file order) through the frozen-rate resampler; returns the
-    final (source, n_docs, n_kept, kept_tokens) tally as a DataFrame.
+    """Replay ``source_dir`` (``drain_file_stream``) through the
+    frozen-rate resampler; returns the final (source, n_docs, n_kept,
+    kept_tokens) tally as a DataFrame.
 
     ``rates`` is a (source, r_ppm) table — typically
     ``mixture_rates(reference_corpus)``; sources absent from it are
@@ -72,16 +72,7 @@ def run_mixture_resample_stream(
             t[1] += r["n_kept"]
             t[2] += r["kept_tokens"]
 
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, DOCS_STREAM_SCHEMA, process_batch)
     return spark.createDataFrame(
         [(s, *v) for s, v in sorted(totals.items())],
         "source string, n_docs bigint, n_kept bigint, kept_tokens bigint",
@@ -91,25 +82,10 @@ def run_mixture_resample_stream(
 def chunk_documents_into_files(
     documents: DataFrame, out_dir: str, n_chunks: int = 4
 ) -> int:
-    """Test/replay helper (same shape as ``chunk_events_by_day``): write
-    the corpus as ``n_chunks`` FLAT parquet files — one per doc_id
-    residue class, ascending mtimes so the file source replays them as
-    separate micro-batches. The tally is order-independent; the mtimes
-    only make the batch count deterministic. Returns the chunk count."""
-    import os
-    import shutil
-    import time
-
-    staging = os.path.join(out_dir, "_staging")
-    os.makedirs(out_dir, exist_ok=True)
-    base = time.time() - 3600
-    for i in range(n_chunks):
-        documents.filter(
-            F.pmod(F.col("doc_id"), F.lit(n_chunks)) == i
-        ).coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
-        dst = os.path.join(out_dir, f"{i:04d}.parquet")
-        shutil.move(os.path.join(staging, part), dst)
-        os.utime(dst, (base + i, base + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    return n_chunks
+    """Test/replay helper: write the corpus as one micro-batch file per
+    doc_id residue class mod ``n_chunks`` (``write_chunk_files``). The
+    tally is order-independent; the file order only makes the batch
+    sequence deterministic. Returns the chunk count."""
+    return write_chunk_files(
+        documents, out_dir, F.pmod(F.col("doc_id"), F.lit(n_chunks))
+    )

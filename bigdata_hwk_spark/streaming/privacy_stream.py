@@ -42,6 +42,7 @@ from ..operators.privacy import (
     qi_user_cells,
 )
 from ..session import empty_df
+from .sources import drain_file_stream
 
 _UC_SCHEMA = (
     "event_type string, day bigint, bucket int, "
@@ -129,11 +130,10 @@ def run_k_anonymity_monitor_stream(
     spark: SparkSession,
     source_dir: str,
     k: int = K_ANON,
-    max_files_per_trigger: int = 1,
     late_days: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Replay ``source_dir``'s parquet files as micro-batches,
+    """Replay ``source_dir`` (``drain_file_stream``),
     accumulate the per-user QI-cell table additively (compacting closed
     days to census rows when ``late_days`` is set), and return the
     k-anonymity census of the accumulated traffic.
@@ -152,16 +152,7 @@ def run_k_anonymity_monitor_stream(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fold_privacy_batch(state, qi_user_cells(batch_df), late_days)
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
     if stats is not None:
         stats.update(
             {
@@ -182,7 +173,6 @@ def run_l_diversity_monitor_stream(
     spark: SparkSession,
     source_dir: str,
     l_min: int | None = None,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming l-diversity monitor — the deployment form of
     ``l_diversity_audit``. Unlike the k-monitor, the state here is the
@@ -215,14 +205,5 @@ def run_l_diversity_monitor_stream(
             .localCheckpoint()
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
     return l_census_from_type_cells(state["tri"], l_min=l_min)

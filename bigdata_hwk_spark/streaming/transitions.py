@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..session import empty_df
 from .cdc_stream import EVENTS_STREAM_SCHEMA
+from .sources import drain_file_stream
 
 _LAST_SCHEMA = (
     "user_id bigint, ts timestamp, event_id bigint, event_type string"
@@ -43,12 +44,8 @@ def _ordered(df: DataFrame) -> Window:
     )
 
 
-def run_transition_stream(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Replay ``source_dir``'s parquet files as micro-batches through the
+def run_transition_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """Replay ``source_dir`` (``drain_file_stream``) through the
     stateful transition counter; returns the final (from_type, to_type,
     n_transitions, prob) matrix — identical to the batch operator over
     the concatenated log."""
@@ -115,14 +112,7 @@ def run_transition_stream(
             .localCheckpoint()
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    query = stream.writeStream.foreachBatch(process_batch).start()
-    query.processAllAvailable()
-    query.stop()
+    drain_file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA, process_batch)
 
     wf = Window.partitionBy("from_type")
     return state["counts"].select(

@@ -24,7 +24,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # names (parametrizations inherit the mark); every other test, including
 # all oracle-comparison sweeps, stays in the default gate.
 SLOWGATE_TESTS = {
-    # tests/test_streaming.py — the 16 heavy replays (27 fast ones stay)
+    # tests/test_streaming.py — the 16 heavy replays (its fast tests stay)
     "test_windowed_sketch_checkpoint_restart_exact",
     "test_structured_stream_equals_batch_replay",
     "test_sessionization_checkpoint_restart_exact",
@@ -41,7 +41,7 @@ SLOWGATE_TESTS = {
     "test_windowed_hll_registers_streaming_equals_batch",
     "test_native_session_window_streaming_equals_batch",
     "test_available_now_incremental_batch_exactly_once",
-    # stream-equals-batch replay twins elsewhere
+    # tests/test_streaming.py — the stream-runner ≡ batch pins
     "test_transition_stream_equals_batch",
     "test_k_anonymity_monitor_compaction_equals_batch",
     "test_mg_ingest_stream_equals_batch",

@@ -203,3 +203,26 @@ def test_dataframe_memos_only_via_session_shared():
         "module-level DataFrame memo outside session.shared:\n"
         + "\n".join(offenders)
     )
+
+
+def test_file_replay_only_via_streaming_sources():
+    """One micro-batch is one flat parquet file, replayed in mtime order:
+    ``streaming/sources.py`` owns that contract (``file_item_stream``,
+    ``drain_file_stream``). A runner that opens its own file stream or
+    drains its own query re-types it, and a copy can drift (one copy
+    stopped its query only on success, leaving an active query behind
+    after a failing batch)."""
+    import os
+
+    home = os.path.join("streaming", "sources.py") + ":"
+    offenders = [
+        hit
+        for hit in _package_lines_matching(
+            r"\breadStream\b|processAllAvailable\(|maxFilesPerTrigger"
+        )
+        if not hit.startswith(home)
+    ]
+    assert offenders == [], (
+        "file-replay stream outside streaming/sources.py:\n"
+        + "\n".join(offenders)
+    )

@@ -698,36 +698,6 @@ def test_phrase_search_no_hit_phrase_yields_no_rows(spark):
     assert lit == target.n_matches
 
 
-def test_classifier_stream_equals_batch_with_frozen_weights(spark, tmp_path):
-    """The deployment property: scoring the corpus in 4 micro-batches
-    against FROZEN ridge weights produces byte-identical per-doc rows to
-    scoring it in one batch — a score is a function of (the doc's hashed
-    counts, the frozen weights) alone, never of its chunking."""
-    from bigdata_hwk_spark.operators import classifier as CL
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.clf_stream import (
-        run_classifier_score_stream,
-    )
-    from bigdata_hwk_spark.streaming.mixture_stream import (
-        chunk_documents_into_files,
-    )
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    label = F.array_contains(F.split(F.col("text"), " "), "dup").cast("int")
-    w = CL.ridge_fit(docs, label)
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    chunk_documents_into_files(docs, src, n_chunks=4)
-    streamed = run_classifier_score_stream(spark, src, w, sink)
-    want = {
-        r.doc_id: (r.score, r.pred)
-        for r in CL.ridge_score(docs, w).collect()
-    }
-    got = {r.doc_id: (r.score, r.pred) for r in streamed.collect()}
-    assert got == want
-    assert sum(p for _, p in got.values()) == 25  # the 25 marker docs
-
-
 def test_ridge_moments_are_additive_across_slices(spark):
     """The sufficient statistics are exact integers, so fit-on-union must
     equal solve-over-summed-moments BIT FOR BIT — the incremental-refit

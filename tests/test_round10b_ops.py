@@ -348,39 +348,6 @@ def test_retention_cohorts_hand_case(spark):
     assert (b, 1) not in out
 
 
-def test_transition_stream_equals_batch(spark, tmp_path):
-    """The stateful streaming transition counter over day-chunked
-    micro-batches must reproduce the batch matrix BIT-exactly — boundary
-    transitions (last event of batch k → first event of batch k+1 per
-    user) are the part a per-batch window drops."""
-    from bigdata_hwk_spark.operators.behavior import event_transition_matrix
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-    from bigdata_hwk_spark.streaming.transitions import run_transition_stream
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 3
-    got = {
-        (r.from_type, r.to_type): (r.n_transitions, r.prob)
-        for r in run_transition_stream(
-            spark, str(tmp_path / "days"), max_files_per_trigger=1
-        ).collect()
-    }
-    want = {
-        (r.from_type, r.to_type): (r.n_transitions, r.prob)
-        for r in event_transition_matrix(events).collect()
-    }
-    assert got == want
-    # boundary coverage is provable from totals: over the whole log every
-    # event except each user's LAST emits exactly one transition, so the
-    # sum must be N_events − N_users — a per-batch-only tally loses one
-    # transition per (user, batch-boundary) and cannot reach this total
-    n_events = events.count()
-    n_users = events.select("user_id").distinct().count()
-    assert sum(n for n, _ in got.values()) == n_events - n_users
-
-
 def test_ab_report_hand_case_and_determinism(spark):
     from datetime import datetime
 

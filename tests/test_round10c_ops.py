@@ -251,34 +251,6 @@ def test_item_cf_user_cap(spark):
     assert items == {(1, 2), (2, 1)}
 
 
-def test_mg_ingest_stream_equals_batch(spark, tmp_path):
-    """The streaming MG deployment (additive active-chunk state,
-    compress-on-complete leaves, final tree fold) must land bit-equal on
-    the batch twin over the same rows."""
-    from bigdata_hwk_spark.operators import sketches as SK
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-    from bigdata_hwk_spark.streaming.frequent_items import run_mg_ingest_stream
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 3
-    k, chunk = 16, 512
-    got = {
-        r.item: r.est_count
-        for r in run_mg_ingest_stream(
-            spark, str(tmp_path / "days"), k=k, chunk=chunk
-        ).collect()
-    }
-    want = {
-        r.item: r.est_count
-        for r in SK.misra_gries_summary(
-            events, item_col="user_id", seq_col="event_id", k=k, chunk=chunk
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_event_type_daily_trend_hand_case(spark):
     from pyspark.sql import functions as F
 
@@ -426,43 +398,6 @@ def test_degree_mixing_regular_graph_degenerate(spark):
     r = GR.copurchase_degree_mixing(li).collect()[0]
     assert (r.n_nodes, r.n_edges, r.max_degree) == (3, 3, 2)
     assert r.assortativity == 0.0
-
-
-def test_psi_monitor_stream_equals_batch(spark, tmp_path):
-    """Frozen-reference streaming PSI (additive alphabet-bounded state)
-    must reproduce the batch two-half query exactly."""
-    from pyspark.sql import functions as F
-
-    from bigdata_hwk_spark.operators import robust as RB
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-    from bigdata_hwk_spark.streaming.drift_stream import run_psi_monitor_stream
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    day = F.floor(F.col("ts").cast("long") / 86400)
-    lo, hi = events.agg(F.min(day), F.max(day)).first()
-    mid = lo + (hi - lo) // 2
-    ref = RB.psi_value_buckets(events.filter(day <= mid))
-    # batch twin on the whole table
-    want = {r.event_type: tuple(r) for r in RB.value_drift_psi(events).collect()}
-    # batch psi_report path over the same two halves (refactor pin)
-    cur = RB.psi_value_buckets(events.filter(day > mid))
-    got_batch = {
-        r.event_type: tuple(r) for r in RB.psi_report(ref, cur).collect()
-    }
-    assert got_batch == want
-    # streaming path: replay the second half in day files
-    n_days = chunk_events_by_day(
-        events.filter(day > mid), str(tmp_path / "days")
-    )
-    assert n_days > 2
-    got = {
-        r.event_type: tuple(r)
-        for r in run_psi_monitor_stream(
-            spark, str(tmp_path / "days"), ref
-        ).collect()
-    }
-    assert got == want
 
 
 def test_kcore_clique_and_pendant(spark):
@@ -690,45 +625,6 @@ def test_unigram_lm_encode_stats_matches_python(spark):
     assert r.compression_pct == round(100.0 * (1.0 - n_pieces / n_chars), 6)
 
 
-def test_mg_ingest_stream_rejects_out_of_order_chunks(spark, tmp_path):
-    """The streaming MG twin's bit-equality with the batch path rides on
-    event-id-monotone file delivery; that contract is ENFORCED — a late
-    batch carrying cells for an already-closed chunk must raise loudly
-    (duplicate leaf = silent divergence), not diverge silently."""
-    import os
-    import time
-
-    import pytest
-
-    from bigdata_hwk_spark.streaming.frequent_items import run_mg_ingest_stream
-
-    chunk = 512
-    src = tmp_path / "ooo"
-    os.makedirs(src)
-
-    def write_file(name, ids, mtime):
-        df = spark.createDataFrame(
-            [(int(i), None, int(i) % 7, "t", 0.0, None) for i in ids],
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string",
-        )
-        staging = str(tmp_path / "staging")
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
-        dst = str(src / name)
-        os.rename(os.path.join(staging, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    base = time.time() - 3600
-    # file 0 (delivered first): events in chunk 5; file 1 (later mtime,
-    # second micro-batch): a LATE event for chunk 1 — already closed.
-    write_file("0000.parquet", range(5 * chunk, 5 * chunk + 20), base)
-    write_file("0001.parquet", range(1 * chunk, 1 * chunk + 20), base + 1)
-
-    with pytest.raises(Exception, match="out-of-order stream delivery"):
-        run_mg_ingest_stream(spark, str(src), k=8, chunk=chunk)
-
-
 def test_unigram_seed_char_coverage_floor():
     """A single char whose quantized expected count rounds to 0 must NOT
     vanish from the vocabulary: every seed single-char piece is carried
@@ -842,32 +738,6 @@ def test_event_type_bursts_hand_case(spark):
     assert got2 == {3: 0}
 
 
-def test_burst_monitor_stream_equals_batch(spark, tmp_path):
-    """The streaming burst monitor (additive daily state + the shared
-    scoring leg) must reproduce the batch query BIT-EQUAL on the same
-    rows, regardless of micro-batch chunking."""
-    from bigdata_hwk_spark.operators import behavior as BH
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.burst_stream import run_burst_monitor_stream
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = {
-        (r.event_type, r.day): tuple(r)
-        for r in BH.event_type_bursts(events).collect()
-    }
-    assert len(want) > 0
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 3
-    got = {
-        (r.event_type, r.day): tuple(r)
-        for r in run_burst_monitor_stream(
-            spark, str(tmp_path / "days")
-        ).collect()
-    }
-    assert got == want
-
-
 def test_neyman_allocation_hand_case(spark):
     """Largest-remainder arithmetic by hand: two strata with known
     variances; allocations sum exactly to the budget; the zero-variance
@@ -931,31 +801,3 @@ def test_k_anonymity_audit_hand_case(spark):
         "a": (2, 1, 8, 5, 62.5),
         "b": (1, 1, 2, 2, 100.0),
     }
-
-
-def test_k_anonymity_monitor_stream_equals_batch(spark, tmp_path):
-    """The streaming k-anonymity monitor (additive per-user cell state —
-    distinct users are NOT additive, so the state carries the user
-    granularity — plus the batch scoring leg) must reproduce the batch
-    audit bit-equal on the same rows."""
-    from bigdata_hwk_spark.operators import privacy as PV
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-    from bigdata_hwk_spark.streaming.privacy_stream import (
-        run_k_anonymity_monitor_stream,
-    )
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = {
-        r.event_type: tuple(r) for r in PV.k_anonymity_audit(events).collect()
-    }
-    assert len(want) > 0
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 3  # users recur across day files: additivity is exercised
-    got = {
-        r.event_type: tuple(r)
-        for r in run_k_anonymity_monitor_stream(
-            spark, str(tmp_path / "days")
-        ).collect()
-    }
-    assert got == want

@@ -268,39 +268,6 @@ def test_k_anonymity_enforce_invariant_and_oracle(spark):
     )
 
 
-def test_k_anonymity_monitor_compaction_equals_batch(spark, tmp_path):
-    """VERDICT r11 item 7: with late_days set, the monitor collapses
-    closed days' per-user rows to census cells; on a time-monotonic
-    replay the final census stays BIT-EQUAL to the batch audit and the
-    open state is bounded to the watermark window."""
-    from bigdata_hwk_spark.operators import privacy as PV
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-    from bigdata_hwk_spark.streaming.privacy_stream import (
-        run_k_anonymity_monitor_stream,
-    )
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = {
-        r.event_type: tuple(r)
-        for r in PV.k_anonymity_audit(events).collect()
-    }
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 4
-    stats: dict = {}
-    got = {
-        r.event_type: tuple(r)
-        for r in run_k_anonymity_monitor_stream(
-            spark, str(tmp_path / "days"), late_days=2, stats=stats
-        ).collect()
-    }
-    assert got == want
-    # state bound: open user-cells span at most late_days+1 days and
-    # most days were actually compacted away into census cells
-    assert stats["open_days"] <= 3
-    assert stats["closed_cells"] > 0
-
-
 def test_privacy_fold_rejects_late_data_past_watermark(spark):
     """A batch carrying a row for an already-closed day must fail
     loudly (the MG-ingest monotone-chunk contract), never silently
@@ -572,33 +539,6 @@ def test_linkage_blocking_metrics_hand_case(spark):
     # (2,2) ed("ab","abc")=1 ok; (9,9) ed("wyz","wxyz")=1 ok
     assert r.n_verified_pairs == 4
     assert r.reduction_ratio == round(1 - 4 / 9, 6)
-
-
-def test_l_diversity_monitor_stream_equals_batch(spark, tmp_path):
-    """The streaming l-diversity monitor's state is the fully-additive
-    (day, bucket, type) cell table — the accumulated census must be
-    bit-equal to the batch audit under day-chunked replay."""
-    from bigdata_hwk_spark.operators import privacy as PV
-    from bigdata_hwk_spark.sources.tables import load_table
-    from bigdata_hwk_spark.streaming.cdc_stream import chunk_events_by_day
-    from bigdata_hwk_spark.streaming.privacy_stream import (
-        run_l_diversity_monitor_stream,
-    )
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    want = {
-        r.day: tuple(r) for r in PV.l_diversity_audit(events).collect()
-    }
-    assert len(want) > 3
-    n = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n > 3
-    got = {
-        r.day: tuple(r)
-        for r in run_l_diversity_monitor_stream(
-            spark, str(tmp_path / "days")
-        ).collect()
-    }
-    assert got == want
 
 
 def test_rrf_hybrid_fusion_hand_case(spark):

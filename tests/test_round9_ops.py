@@ -101,90 +101,6 @@ def test_pii_release_audit_fingerprint_detects_missed_mask(spark):
     assert all(clean[s] != unscrubbed[s] for s in clean)
 
 
-# ---------------------------------------------- streaming checksum
-def test_windowed_checksum_streaming_equals_batch(spark, tmp_path):
-    """Streaming per-window checksums (append + watermark, file replay)
-    must equal the batch twin for closed windows, and xor-combining ALL
-    batch windows must reproduce the whole-table fold (xor associativity
-    across any window partitioning — audit at any granularity)."""
-    from bigdata_hwk_spark.streaming.windowed import windowed_checksum
-
-    events = load_table(spark, SF_CORRECT, "events")
-    src = tmp_path / "ck_src"
-    src.mkdir()
-    ordered = events.orderBy("ts").collect()
-    mid = len(ordered) // 2
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    for name, chunk in (("a", ordered[:mid]), ("b", ordered[mid:])):
-        spark.createDataFrame(
-            [tuple(r) for r in chunk], schema
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / name))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        windowed_checksum(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_ck_win")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r.win_start: (r.n_rows, r.ck_a, r.ck_b)
-            for r in spark.table("t_ck_win").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        r.win_start: (r.n_rows, r.ck_a, r.ck_b)
-        for r in windowed_checksum(events).collect()
-    }
-    assert got and set(got) <= set(want)
-    for k, v in got.items():
-        assert v == want[k]
-
-    # rollup: per-window folds combine to the whole-table checksum
-    n = sum(v[0] for v in want.values())
-    xa = xb = 0
-    for v in want.values():
-        xa ^= v[1]
-        xb ^= v[2]
-    total = RC.table_checksum(
-        events, RC.EVENTS_CANON, multiplicity=False
-    ).collect()[0]
-    assert (n, xa, xb) == (total.n_rows, total.ck_a, total.ck_b)
-
-
-def test_running_checksum_stream_equals_batch(spark, tmp_path):
-    """The ingest-time running checksum (three driver integers, folded
-    per micro-batch via checksum_delta) must land exactly on the batch
-    table_checksum of everything ingested."""
-    from bigdata_hwk_spark.streaming.cdc_stream import (
-        EVENTS_STREAM_SCHEMA,
-        chunk_events_by_day,
-        run_running_checksum_stream,
-    )
-
-    events = load_table(spark, SF_CORRECT, "events")
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 3
-    got = run_running_checksum_stream(
-        spark, str(tmp_path / "days"), EVENTS_STREAM_SCHEMA, RC.EVENTS_CANON
-    )
-    want = RC.table_checksum(
-        events, RC.EVENTS_CANON, multiplicity=False
-    ).collect()[0]
-    assert got == (want.n_rows, want.ck_a, want.ck_b)
-
-
 # --------------------------------------- checksum-verified maintenance
 def test_zorder_relayout_verified_by_checksum(spark, tmp_path):
     """Z-order re-clustering is the other re-layout the checksum family
@@ -258,32 +174,6 @@ def test_ann_candidate_counts_diagnostic(spark):
     )
     n_pairs = SIM.ann_lsh_pairs(embs, tau=-1.0).count()  # every candidate
     assert 0 < n_pairs <= row.n_candidates
-
-
-# -------------------------------------------------------- streaming CDC
-def test_cdc_stream_equals_batch_state(spark, tmp_path):
-    """The foreachBatch MERGE loop over day-chunked micro-batches must
-    land on EXACTLY log_state of the whole log (the compaction algebra
-    applied inductively over the batch sequence) — including deletes and
-    delete-then-reinsert keys."""
-    from bigdata_hwk_spark.operators.cdc import log_state
-    from bigdata_hwk_spark.streaming.cdc_stream import (
-        chunk_events_by_day,
-        run_cdc_merge_stream,
-    )
-
-    events = load_table(spark, SF_CORRECT, "events")
-    n_days = chunk_events_by_day(events, str(tmp_path / "days"))
-    assert n_days > 3  # multi-batch, or the test proves nothing
-    got = run_cdc_merge_stream(
-        spark, str(tmp_path / "days"), max_files_per_trigger=1
-    )
-    want = log_state(events)
-    g = {r.user_id: (r.state_type, r.state_value, r.updated_at)
-         for r in got.collect()}
-    w = {r.user_id: (r.state_type, r.state_value, r.updated_at)
-         for r in want.collect()}
-    assert g == w
 
 
 # ------------------------------------------- partition checksums / diff
@@ -390,65 +280,6 @@ def test_table_diff_classifies_drift(spark):
             assert r.n_right == 2 * r.n_left  # duplicated
         else:  # pragma: no cover - would mean a spurious diff row
             raise AssertionError(f"unexpected diff row {r}")
-
-
-# ------------------------------------------- streaming mixture resample
-def test_mixture_stream_equals_batch_with_frozen_rates(spark, tmp_path):
-    """The frozen-rate streaming resampler over file-chunked micro-batches
-    must land on EXACTLY the batch tally computed with the same rates —
-    the keep decision is a pure function of (salt, doc_id, r_ppm), so
-    chunking cannot move it. Also pins the freeze semantics: a source
-    absent from the rate table is dropped entirely."""
-    from pyspark.sql import functions as F
-
-    from bigdata_hwk_spark.operators.splits import (
-        _token_projection,
-        mixture_keep,
-        mixture_rates,
-    )
-    from bigdata_hwk_spark.streaming.mixture_stream import (
-        chunk_documents_into_files,
-        run_mixture_resample_stream,
-    )
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    rates = mixture_rates(docs)
-    n = chunk_documents_into_files(docs, str(tmp_path / "chunks"), n_chunks=4)
-    assert n == 4
-    got = run_mixture_resample_stream(
-        spark, str(tmp_path / "chunks"), rates, max_files_per_trigger=1
-    )
-    keep = mixture_keep()
-    want = (
-        _token_projection(docs)
-        .join(F.broadcast(rates.select("source", "r_ppm")), "source")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(keep, 1).otherwise(0)).cast("bigint").alias("n_kept"),
-            F.sum(F.when(keep, F.col("toks")).otherwise(0))
-            .cast("bigint")
-            .alias("kept_tokens"),
-        )
-    )
-    g = {r["source"]: (r["n_docs"], r["n_kept"], r["kept_tokens"])
-         for r in got.collect()}
-    w = {r["source"]: (r["n_docs"], r["n_kept"], r["kept_tokens"])
-         for r in want.collect()}
-    assert g == w
-    assert sum(v[1] for v in g.values()) > 0
-
-    # freeze semantics: drop one source from the rate table -> its docs
-    # vanish from the tally, everyone else's numbers are untouched
-    some = sorted(g)[0]
-    pruned = rates.filter(F.col("source") != some)
-    got2 = run_mixture_resample_stream(
-        spark, str(tmp_path / "chunks"), pruned, max_files_per_trigger=2
-    )
-    g2 = {r["source"]: (r["n_docs"], r["n_kept"], r["kept_tokens"])
-          for r in got2.collect()}
-    assert some not in g2
-    assert g2 == {s: v for s, v in g.items() if s != some}
 
 
 # ------------------------------------------------- cross-doc shared spans
