@@ -991,12 +991,10 @@ def connected_components(
     contracts the remaining parent pointers (small-star). Rounds are
     O(log n) even on adversarial chains — unlike min-label propagation,
     whose round count is the graph DIAMETER (a 1M-long chain would need
-    1M shuffling rounds; the alternation needs ~20). Convergence = the
-    edge multiset reaching a fixpoint (count + hash-sum signature, one
-    cheap agg per round); ``localCheckpoint`` truncates lineage each
-    round (plans nest two join layers per round otherwise) — on a
-    cluster with dynamic executors, swap for a reliable ``checkpoint()``
-    directory.
+    1M shuffling rounds; the alternation needs ~20). The rounds run
+    through ``session.fixpoint``; convergence = the edge multiset
+    reaching a fixpoint (count + hash-sum signature, one cheap agg per
+    round).
 
     Labels are node ids, so cluster_id = min doc_id in the component —
     deterministic, identical on both paths, and directly usable as the
@@ -1013,7 +1011,7 @@ def connected_components(
     # Scoped cache (round-8 ADVICE): release() is a no-op when an outer
     # consumer already cached this exact plan, so we can't yank a shared
     # CacheManager entry out from under it mid-use.
-    from ..session import persist_scoped
+    from ..session import fixpoint, persist_scoped
 
     edges, release_edges = persist_scoped(edges, StorageLevel.MEMORY_AND_DISK)
     n_edges = edges.count()  # also materializes the persist
@@ -1037,33 +1035,16 @@ def connected_components(
         rows = [(n, find(n)) for n in parent]
         release_edges()
         return local_df(spark, rows, "node bigint, cluster_id bigint")
-    e = edges
-    prev_sig = None
-    converged = False
-    for _ in range(max_iter):
-        e = _star_round(e).localCheckpoint()
-        sig = tuple(
-            e.agg(
-                F.count(F.lit(1)),
-                # decimal sum: exact, order-independent, and immune to the
-                # ANSI long-overflow a bigint sum of 64-bit hashes hits
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            ).first()
+    # signature: count + decimal hash-sum — exact, order-independent, and
+    # immune to the ANSI long-overflow a bigint sum of 64-bit hashes hits
+    sig = F.count(F.lit(1)), F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
+    try:
+        e = fixpoint(
+            "connected_components", edges, _star_round, max_iter=max_iter,
+            probe=lambda e: tuple(e.agg(*sig).first()),
         )
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    release_edges()
-    if not converged:
-        # Partial pointers are WRONG labels: a downstream leakage-safe
-        # split would place near-dup docs in different train/test splits
-        # with no signal. Fail loudly rather than return silently-bad
-        # clusters (round-2 ADVICE).
-        raise RuntimeError(
-            f"connected_components: star alternation did not converge in "
-            f"{max_iter} rounds"
-        )
+    finally:
+        release_edges()
     # fixpoint is a star per component: every non-min node points at the
     # component min; add the (min, min) self-labels the callers expect
     return e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id")).union(

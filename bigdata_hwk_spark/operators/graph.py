@@ -23,12 +23,12 @@ Scale shape: the edge table is built once, persisted, and partitioned
 by ``src``; each iteration is ONE equi-join of the (|parts|-row) rank
 table against the persisted edges — AQE broadcasts the rank side when
 it fits (parts ≪ edges at every SF) — plus one map-side-combined
-groupBy on ``dst``. The rank table is ``localCheckpoint``-ed per
-iteration, truncating what would otherwise become a T-deep join
-lineage (the connected-components device at ``dedup.py``). Driver
-traffic per iteration: zero (no collect; checkpoint materializes on
-executors). With no dangling nodes (symmetric edges ⇒ every node has
-out-weight), total rank stays at 1 up to float addition error.
+groupBy on ``dst``. The rounds run through ``session.fixpoint``, whose
+checkpoints truncate what would otherwise become a T-deep join
+lineage. Driver traffic per iteration: zero (no collect; checkpoint
+materializes on executors). With no dangling nodes (symmetric edges ⇒
+every node has out-weight), total rank stays at 1 up to float addition
+error.
 
 Determinism: iteration count is FIXED (no float convergence test), the
 emitted rank is rounded to 9 before the top-k ordering (partial-sum
@@ -38,11 +38,10 @@ BM25/TF-IDF device), ties break by part key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
-from ..session import bounded_window, local_df
+from ..session import bounded_window, fixpoint, local_df
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 PR_DAMPING = 0.85
 PR_ITERS = 10
@@ -120,14 +119,13 @@ def pagerank(
     damping: float = PR_DAMPING,
     iters: int = PR_ITERS,
 ) -> DataFrame:
-    """(node, rank) after ``iters`` weighted PageRank iterations.
+    """(node, rank) after ``iters`` weighted PageRank iterations, run
+    through ``session.fixpoint``.
 
     ``edges`` must be symmetric (every node reachable as both src and
     dst) — true for ``copurchase_edges`` by construction — so there are
     no dangling nodes and no residual redistribution term.
     """
-    from pyspark.sql import Window
-
     from ..session import persist_scoped
 
     # Row-normalize with a WINDOW over src, not a self-referencing
@@ -142,8 +140,7 @@ def pagerank(
             "src",
             "dst",
             (F.col("weight") / F.sum("weight").over(wsrc)).alias("p"),
-        ),
-        StorageLevel.MEMORY_AND_DISK,
+        )
     )
     try:
         # symmetric edges ⇒ every node occurs as src; one distinct off
@@ -154,11 +151,12 @@ def pagerank(
         ranks = nodes.select(
             "node", F.lit(1.0 / n_nodes).alias("rank")
         ).localCheckpoint()
-        for it in range(iters):
+
+        def step(ranks):
             # symmetric edges ⇒ every node also occurs as dst, so the
             # inflow aggregate already covers the full node set — no
             # node-table left join needed to re-complete it
-            ranks = (
+            return (
                 walk.join(ranks, walk["src"] == ranks["node"])
                 .groupBy(F.col("dst").alias("node"))
                 .agg(
@@ -169,17 +167,10 @@ def pagerank(
                     ).alias("rank")
                 )
             )
-            # checkpoint every SECOND round (and always the last): a
-            # 2-join-deep lineage plans fine, and halving the eager
-            # materializations halves the sequential job count — the
-            # actual wall cost of a fixed-point loop at this node scale
-            # (measured: rank rows are tiny; scheduling dominates)
-            if it % 2 == 1 or it == iters - 1:
-                ranks = ranks.localCheckpoint()
-        # the final ranks table is checkpoint-materialized — the scoped
-        # caches are not referenced by it (round-10 ADVICE hygiene:
-        # scoped persist, scoped release)
-        return ranks
+
+        # the last round is checkpointed, so the result never reads the
+        # scoped walk cache released below
+        return fixpoint("pagerank", ranks, step, max_iter=iters)
     finally:
         release_walk()
 
@@ -196,8 +187,6 @@ def part_pagerank_topk(
     uniform-walk baseline), rounded to 6 — scale-free across SFs and
     stable under partial-sum reordering.
     """
-    from pyspark.sql import Window
-
     edges = copurchase_edges(lineitem)
     ranks = pagerank(edges, damping=damping, iters=iters)
     n_nodes = ranks.count()
@@ -427,16 +416,14 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     Scale shape per round: ONE equi-join of the |V|-row label table
     against the edge table (AQE broadcasts the label side when it fits)
     + one map-side-combined (node, label) tally + one per-node window —
-    two keyed shuffles, no driver traffic; ``localCheckpoint`` every
-    second round truncates the loop lineage (the ``pagerank`` device).
+    two keyed shuffles, no driver traffic. The rounds run through
+    ``session.fixpoint``.
     """
     from ..session import persist_scoped
 
-    # persist the edge table for the duration of the loop: every round's
-    # tally joins it, and without the cache each checkpoint job re-ran
-    # the caller's whole edge-construction pipeline (for
-    # copurchase_communities: the lineitem self-join + groupBy) — the
-    # same fix pagerank applies to its normalized walk table
+    # persist the edge table for the loop: every round's tally joins it,
+    # and each checkpoint would otherwise re-run the caller's whole
+    # edge-construction pipeline
     edges, release_edges = persist_scoped(edges)
     try:
         labels = (
@@ -445,25 +432,23 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
             .withColumn("label", F.col("node"))
             .localCheckpoint()
         )
-        from pyspark.sql import Window
+        win = Window.partitionBy("src").orderBy(
+            F.col("w").desc(), F.col("label").asc()
+        )
 
-        for it in range(iters):
+        def step(labels):
             tally = (
                 edges.join(labels, edges["dst"] == labels["node"])
                 .groupBy("src", "label")
                 .agg(F.sum("weight").alias("w"))
             )
-            win = Window.partitionBy("src").orderBy(
-                F.col("w").desc(), F.col("label").asc()
-            )
-            labels = (
+            return (
                 tally.withColumn("rn", F.row_number().over(win))
                 .filter(F.col("rn") == 1)
                 .select(F.col("src").alias("node"), "label")
             )
-            if it % 2 == 1 or it == iters - 1:
-                labels = labels.localCheckpoint()
-        return labels
+
+        return fixpoint("label_propagation", labels, step, max_iter=iters)
     finally:
         release_edges()
 
@@ -474,8 +459,6 @@ def copurchase_communities(
     """Top-``topk`` co-purchase communities by size: (rnk, community,
     n_members). ``community`` is the shared label (a part key — stable,
     not positional); ties in size break by label."""
-    from pyspark.sql import Window
-
     edges = copurchase_edges(lineitem).select(
         "src", "dst", F.col("weight").cast("bigint").alias("weight")
     )
@@ -565,9 +548,8 @@ def hop_distances(
     (both shuffle FRONTIER-sized tables, never the corpus); round count
     is the fixed ``max_hops`` (diameter-bounded work, the device that
     makes BFS tractable where per-pair shortest-path is not);
-    ``localCheckpoint`` truncates the per-round lineage (the PageRank /
-    connected-components device). The early-exit probe is a one-row
-    count per round — bounded driver traffic.
+    ``localCheckpoint`` truncates the per-round lineage. The early-exit
+    probe is a one-row ``isEmpty`` per round — bounded driver traffic.
 
     Determinism: purely set-algebraic (min-hop level is unique), no
     floats, no partition-order dependence.
@@ -779,13 +761,10 @@ def kcore_members(
     core.
 
     Algorithm: synchronous peeling — drop every node whose current
-    degree < k, restrict the edge list to survivors, repeat to fixpoint.
+    degree < k, restrict the edge list to survivors, repeat to fixpoint
+    through ``session.fixpoint`` (at most ``max_iter`` rounds).
     Set-algebraic and deterministic under any layout (no tie-breaks:
-    each round's drop set is a pure predicate). Termination: the node
-    set strictly shrinks until fixpoint (≤ |V| rounds in theory; peeling
-    cascades are diameter-ish in practice) — bounded by ``max_iter``
-    with a LOUD failure rather than a silently partial core (the
-    connected-components convergence contract).
+    each round's drop set is a pure predicate).
 
     Precondition: ``edges`` is a SYMMETRIC edge list — both directions
     of every undirected edge present (``copurchase_edges`` emits this
@@ -796,9 +775,8 @@ def kcore_members(
     ``validate=False``.
 
     Scale shape: per round one map-side-combined degree aggregate and
-    two survivor semi-joins keyed on the endpoints (each round's edge
-    list only shrinks), ``localCheckpoint`` truncating lineage; the
-    convergence probe is a one-row count.
+    two survivor semi-joins keyed on the endpoints; the convergence
+    probe is a one-row count of the edge list.
     """
     e = (
         edges.select("src", "dst")
@@ -808,31 +786,23 @@ def kcore_members(
     )
     if validate:
         assert_symmetric_sample(e)
-    prev_n = None
-    for _ in range(max_iter):
+
+    def peel(e):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("src").localCheckpoint()
-        n = keep.count()
-        if n == 0:
-            return keep.select(
-                F.col("src").alias("part_id"), F.lit(0).cast("bigint").alias("core_degree")
-            )
-        if n == prev_n:
-            final = e.groupBy("src").agg(
-                F.count(F.lit(1)).cast("bigint").alias("core_degree")
-            )
-            return final.select(
-                F.col("src").alias("part_id"), "core_degree"
-            )
-        prev_n = n
-        e = (
+        keep = deg.filter(F.col("d") >= k).select("src")
+        return (
             e.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
-            .localCheckpoint()
         )
-    raise RuntimeError(
-        f"kcore_members: peeling did not converge in {max_iter} rounds"
+
+    # the edge list only shrinks, so an unchanged edge count is an
+    # unchanged node set: the fixpoint
+    core = fixpoint(
+        "kcore_members", e, peel, max_iter=max_iter, probe=DataFrame.count
+    )
+    return core.groupBy(F.col("src").alias("part_id")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("core_degree")
     )
 
 

@@ -8,9 +8,13 @@ compare bit-for-bit against the DuckDB oracle.
 
 from __future__ import annotations
 
+import logging
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+_LOG = logging.getLogger("bigdata_hwk_spark")
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -295,3 +299,44 @@ def bounded_window(*cols):
     from pyspark.sql import Window
 
     return Window.orderBy(*cols)
+
+
+def fixpoint(
+    name: str, state: DataFrame, step, *, max_iter: int, probe=None
+) -> DataFrame:
+    """Iterate ``state = step(state)``: the round driver of ``pagerank``,
+    ``label_propagation``, ``kcore_members`` and the star alternation of
+    ``connected_components``.
+
+    Without ``probe`` it runs exactly ``max_iter`` rounds and checkpoints
+    after every second round and after the last: a two-round lineage
+    plans fine, and each checkpoint is one more sequential job. With
+    ``probe`` it checkpoints every round (the probe reads it), stops at
+    the first round whose ``probe(state)`` (never ``None``) equals the
+    previous round's, and raises ``RuntimeError`` naming ``name`` when
+    ``max_iter`` rounds do not converge: partial state is a wrong answer.
+    Each round logs name, round, probe value and seconds at INFO on the
+    ``bigdata_hwk_spark`` logger. No action runs beyond the checkpoints
+    and the probe, and no job group is set: jobs stay in the caller's.
+
+    Loops left hand-written:
+
+    - hop_distances: max_hops bounds its output; an empty frontier ends it.
+    - mg_tree_fold: it stops at one chunk; an "unchanged" probe costs a round.
+    - the numpy Lloyd loops (similarity.py): their state is not a DataFrame.
+    """
+    last = None
+    for rnd in range(1, max_iter + 1):
+        t0 = time.perf_counter()
+        state = step(state)
+        if probe or rnd % 2 == 0 or rnd == max_iter:
+            state = state.localCheckpoint()
+        value = probe(state) if probe else None
+        secs = time.perf_counter() - t0
+        _LOG.info("%s round %d: probe=%s, %.3f s", name, rnd, value, secs)
+        if value is not None and value == last:
+            return state
+        last = value
+    if probe:
+        raise RuntimeError(f"{name}: did not converge in {max_iter} rounds")
+    return state

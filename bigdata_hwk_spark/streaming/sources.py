@@ -82,7 +82,9 @@ def write_chunk_files(df: DataFrame, out_dir: str, chunk: Column) -> int:
     """Write ``df`` as one FLAT parquet file per distinct value of
     ``chunk``, in ascending value order and with ascending mtimes, so
     ``file_item_stream`` replays the chunks as separate micro-batches in
-    that order. Returns the file count."""
+    that order. Returns the file count. ``df`` is materialized once, so
+    its plan is evaluated once whatever the chunk count."""
+    df = df.localCheckpoint()
     values = sorted(r[0] for r in df.select(chunk).distinct().collect())
     staging = os.path.join(out_dir, "_staging")
     os.makedirs(out_dir, exist_ok=True)

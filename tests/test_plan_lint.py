@@ -226,3 +226,64 @@ def test_file_replay_only_via_streaming_sources():
         "file-replay stream outside streaming/sources.py:\n"
         + "\n".join(offenders)
     )
+
+
+# Loops in operators/ that keep their own localCheckpoint, and why.
+HAND_WRITTEN_CHECKPOINT_LOOPS = {
+    "hop_distances": "max_hops is part of its output contract, not a "
+    "failure, and an empty frontier ends it early",
+    "mg_tree_fold": "it stops at one chunk; an 'unchanged' probe would "
+    "cost one more fold round",
+}
+
+
+def _checkpoint_loops(pkg: str) -> dict[str, str]:
+    """``{"file:line": function}`` for every ``for``/``while`` loop under
+    ``pkg/operators`` whose body calls ``.localCheckpoint()``, named by
+    the innermost function holding it."""
+    import ast
+    import os
+
+    ops = os.path.join(pkg, "operators")
+    found = {}
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fname), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        # ast.walk is breadth-first: an inner function overwrites the
+        # entry its enclosing function made for the same loop
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for loop in ast.walk(fn):
+                if isinstance(loop, (ast.For, ast.While)) and any(
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                    for stmt in loop.body
+                    for node in ast.walk(stmt)
+                ):
+                    found[f"{fname}:{loop.lineno}"] = fn.name
+    return found
+
+
+def test_checkpoint_loops_only_via_session_fixpoint():
+    """An operator loop that checkpoints its own state picks its own
+    stride, convergence probe and failure rule, and logs no rounds:
+    iterate through ``session.fixpoint`` instead. The allowlisted loops
+    say why they stay hand-written."""
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bigdata_hwk_spark",
+    )
+    offenders = [
+        f"{where} in {fn}"
+        for where, fn in _checkpoint_loops(pkg).items()
+        if fn not in HAND_WRITTEN_CHECKPOINT_LOOPS
+    ]
+    assert offenders == [], (
+        "checkpointing loop outside session.fixpoint:\n" + "\n".join(offenders)
+    )

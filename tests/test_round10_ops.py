@@ -1,11 +1,10 @@
-"""Round-10 operator contracts: BM25 retrieval, asymmetric containment,
-robust (median/MAD/IQR) screens, and co-purchase PageRank.
+"""Round-10 operator contracts: BM25 retrieval, asymmetric containment
+and robust (median/MAD/IQR) screens (the co-purchase graph pins are in
+test_graph.py).
 
 The registry oracle rows pin cross-engine equality (BM25, containment,
 robust — the parametrized sweep covers them at up to 3 SFs); these
-tests pin the operators' OWN semantics on hand-computable inputs and
-pin the rows-only PageRank against an independent NumPy power-iteration
-twin.
+tests pin the operators' OWN semantics on hand-computable inputs.
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from bigdata_hwk_spark import registry
-from bigdata_hwk_spark.operators import graph as G
 from bigdata_hwk_spark.operators import retrieval as RV
 from bigdata_hwk_spark.operators import robust as RB
 from bigdata_hwk_spark.operators.dedup import containment_pairs
@@ -265,93 +263,6 @@ def test_shard_manifest_detects_layout_drift(spark):
     s = diff[0]
     assert moved[s].n_tokens == base[s].n_tokens + 1
     assert (base[s].ck_a, base[s].ck_b) != (moved[s].ck_a, moved[s].ck_b)
-
-
-# ------------------------------------------------------------ pagerank
-def test_pagerank_matches_numpy_power_iteration(spark):
-    """The distributed fixed-iteration loop equals an independent dense
-    NumPy power iteration on the same edges to 1e-9, and total rank
-    mass is 1 (no dangling nodes in the symmetric co-purchase graph)."""
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    edges = G.copurchase_edges(li)
-    rows = edges.collect()
-    got = {r["node"]: r["rank"] for r in G.pagerank(edges).collect()}
-
-    nodes = sorted({r["src"] for r in rows})
-    idx = {n: i for i, n in enumerate(nodes)}
-    n = len(nodes)
-    w = np.zeros((n, n))
-    for r in rows:
-        w[idx[r["src"]], idx[r["dst"]]] = r["weight"]
-    p = w / w.sum(axis=1, keepdims=True)
-    rank = np.full(n, 1.0 / n)
-    for _ in range(G.PR_ITERS):
-        rank = (1 - G.PR_DAMPING) / n + G.PR_DAMPING * (p.T @ rank)
-
-    assert set(got) == set(nodes)
-    assert max(abs(got[v] - rank[idx[v]]) for v in nodes) < 1e-9
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-def test_copurchase_edges_symmetric(spark):
-    """Edge construction emits both directions with equal weight and no
-    self-loops — the no-dangling-node precondition pagerank() states."""
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    rows = G.copurchase_edges(li).collect()
-    w = {(r.src, r.dst): r.weight for r in rows}
-    assert all(src != dst for src, dst in w)
-    assert all(w[(b, a)] == c for (a, b), c in w.items())
-
-
-def test_triangles_match_oracle_smoke(spark):
-    assert_matches_oracle(
-        registry.QUERIES["copurchase_triangle_stats"](spark, SF_SMOKE),
-        registry.ORACLES["copurchase_triangle_stats"],
-        SF_SMOKE,
-    )
-
-
-def test_triangles_match_oracle_gate_sf(spark):
-    assert_matches_oracle(
-        registry.QUERIES["copurchase_triangle_stats"](spark, SF_CORRECT),
-        registry.ORACLES["copurchase_triangle_stats"],
-        SF_CORRECT,
-    )
-
-
-def test_triangles_hand_cases(spark):
-    """K4 (one 4-item order): C(4,3)=4 triangles, transitivity 1. A
-    star (hub order pairs each spoke with the hub only... not
-    expressible per-order) — instead: two disjoint 3-item orders give
-    exactly 2 triangles; adding a 2-item bridge order adds an edge but
-    no triangle and no new wedge closure."""
-    k4 = spark.createDataFrame(
-        [(1, p) for p in (10, 11, 12, 13)], "l_orderkey long, l_partkey long"
-    )
-    r = G.copurchase_triangles(k4).collect()[0]
-    assert (r.n_nodes, r.n_edges, r.n_triangles) == (4, 6, 4)
-    assert r.global_clustering == 1.0
-
-    two_tris = spark.createDataFrame(
-        [(1, p) for p in (10, 11, 12)]
-        + [(2, p) for p in (20, 21, 22)]
-        + [(3, p) for p in (12, 20)],  # bridge edge, closes nothing
-        "l_orderkey long, l_partkey long",
-    )
-    r2 = G.copurchase_triangles(two_tris).collect()[0]
-    assert r2.n_triangles == 2
-    assert r2.n_edges == 7
-
-
-def test_pagerank_topk_deterministic(spark):
-    """Two independent runs return the identical top-k listing (round-
-    before-rank makes the ordering insensitive to partial-sum order)."""
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    a = [tuple(r) for r in G.part_pagerank_topk(li).collect()]
-    b = [tuple(r) for r in G.part_pagerank_topk(li).collect()]
-    assert a == b
-    assert len(a) == G.PR_TOPK
-    assert [r[1] for r in a] == list(range(1, G.PR_TOPK + 1))
 
 
 # ------------------------------------------- sorted-neighborhood blocking

@@ -1,5 +1,5 @@
-"""Round-10b operators: association rules, skyline, fuzzy linkage, LPA,
-URL canonicalization. The registry oracle sweep (test_outliers.py) covers
+"""Round-10b operators: association rules, skyline, fuzzy linkage,
+URL canonicalization (the LPA pins are in test_graph.py). The registry oracle sweep (test_outliers.py) covers
 oracle equality at both SFs; these tests pin the operator-level semantics
 on hand-built inputs where the fixture data can't isolate them."""
 
@@ -200,57 +200,6 @@ def test_fuzzy_linkage_self_recovery_is_total(spark):
     assert len(out) > 1  # non-degenerate histogram
     for r in out:
         assert r.n_self_matched == r.n_dirty  # ed(dirty, self)=1 always
-
-
-def _planted_edges(spark, bridge_weight=1):
-    """Two triangles {1,2,3} and {4,5,6} with heavy intra edges, joined by
-    one light bridge 3–4; symmetric rows."""
-    intra = [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6)]
-    rows = []
-    for u, v in intra:
-        rows += [(u, v, 3), (v, u, 3)]
-    rows += [(3, 4, bridge_weight), (4, 3, bridge_weight)]
-    return spark.createDataFrame(
-        rows, "src bigint, dst bigint, weight bigint"
-    )
-
-
-def test_lpa_separates_planted_communities(spark):
-    from bigdata_hwk_spark.operators.graph import label_propagation
-
-    labels = {
-        r.node: r.label
-        for r in label_propagation(_planted_edges(spark), iters=4).collect()
-    }
-    assert len(labels) == 6
-    left = {labels[n] for n in (1, 2, 3)}
-    right = {labels[n] for n in (4, 5, 6)}
-    assert len(left) == 1 and len(right) == 1
-    assert left != right  # the light bridge must not merge the cliques
-    assert left == {1} and right == {4}  # min-label tie-break
-
-
-def test_lpa_partitioning_invariant(spark):
-    from bigdata_hwk_spark.operators.graph import label_propagation
-
-    e = _planted_edges(spark)
-    a = sorted(map(tuple, label_propagation(e, iters=4).collect()))
-    b = sorted(
-        map(tuple, label_propagation(e.repartition(7), iters=4).collect())
-    )
-    assert a == b
-
-
-def test_copurchase_communities_registry_shape(spark):
-    from bigdata_hwk_spark import registry
-
-    out = registry.QUERIES["copurchase_communities"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert len(out) >= 1
-    assert [r.rnk for r in out] == list(range(1, len(out) + 1))
-    sizes = [r.n_members for r in out]
-    assert sizes == sorted(sizes, reverse=True)
 
 
 def test_url_canonicalizer_rules(spark):

@@ -1,12 +1,13 @@
 """Round-10c operators: trigram stupid-backoff, PSI drift (+ streaming
-monitor), grid DBSCAN, BFS hop distances, Misra-Gries (+ streaming
-ingest), item-item CF, per-type daily OLS trend, the oracle-checked
-release funnel, event debounce, degree assortativity, k-core and Apriori
-triples (greedy coverage selection is in test_select.py). The registry
-oracle sweep (test_outliers.py / test_extensions.py) proves hash
-equality vs DuckDB at the gate SFs; these tests pin operator-level
-semantics on hand-built inputs where every branch is computed by hand,
-plus the streaming ≡ batch equality pins."""
+monitor), grid DBSCAN, Misra-Gries (+ streaming ingest), item-item CF,
+per-type daily OLS trend, the oracle-checked release funnel, event
+debounce and Apriori triples (greedy coverage selection is in
+test_select.py; BFS hop distances, degree assortativity and k-core are
+in test_graph.py). The registry oracle sweep (test_outliers.py /
+test_extensions.py) proves hash equality vs DuckDB at the gate SFs;
+these tests pin operator-level semantics on hand-built inputs where
+every branch is computed by hand, plus the streaming ≡ batch equality
+pins."""
 
 from __future__ import annotations
 
@@ -125,34 +126,6 @@ def test_grid_dbscan_hand_case(spark):
         ).collect()
     }
     assert rows_rep == rows
-
-
-def test_bfs_hop_distances_hand_case(spark):
-    from bigdata_hwk_spark.operators import graph as GR
-
-    # chain 0 - 5 - 7 - 9 - 11 - 13 plus a disconnected pair {3, 4};
-    # seeds (pk % 5 == 0): {0, 5}
-    orders = [(1, 0), (1, 5), (2, 5), (2, 7), (3, 7), (3, 9),
-              (4, 9), (4, 11), (5, 11), (5, 13), (6, 3), (6, 4),
-              (2, 7)]  # duplicate line: must not affect distances
-    li = spark.createDataFrame(orders, "l_orderkey bigint, l_partkey bigint")
-    got = {
-        r.part_id: r.hops
-        for r in GR.copurchase_hop_distances(li, seed_mod=5, max_hops=4).collect()
-    }
-    assert got == {0: 0, 5: 0, 7: 1, 9: 2, 11: 3, 13: 4}
-    # early exit: raising max_hops adds nothing once the frontier drains
-    got10 = {
-        r.part_id: r.hops
-        for r in GR.copurchase_hop_distances(li, seed_mod=5, max_hops=10).collect()
-    }
-    assert got10 == got
-    # tighter budget drops the far tail
-    got2 = {
-        r.part_id: r.hops
-        for r in GR.copurchase_hop_distances(li, seed_mod=5, max_hops=2).collect()
-    }
-    assert got2 == {0: 0, 5: 0, 7: 1, 9: 2}
 
 
 def _mg_stream(spark, items):
@@ -371,86 +344,6 @@ def test_event_debounce_hand_case(spark):
     got = {r.event_type: r for r in BH.event_debounce_stats(ev).collect()}
     assert (got["a"].n_events, got["a"].n_kept, got["a"].n_dropped) == (4, 3, 1)
     assert (got["b"].n_events, got["b"].n_kept, got["b"].n_dropped) == (2, 1, 1)
-
-
-def test_degree_mixing_star_graph(spark):
-    from bigdata_hwk_spark.operators import graph as GR
-
-    # star K1,3: center 0 paired with leaves 1..3 (one order per edge)
-    li = spark.createDataFrame(
-        [(1, 0), (1, 1), (2, 0), (2, 2), (3, 0), (3, 3)],
-        "l_orderkey bigint, l_partkey bigint",
-    )
-    r = GR.copurchase_degree_mixing(li).collect()[0]
-    assert (r.n_nodes, r.n_edges, r.max_degree) == (4, 3, 3)
-    assert r.mean_degree == 1.5
-    assert r.assortativity == -1.0  # a star is perfectly disassortative
-
-
-def test_degree_mixing_regular_graph_degenerate(spark):
-    from bigdata_hwk_spark.operators import graph as GR
-
-    # triangle: every degree 2 -> zero variance -> pinned 0.0
-    li = spark.createDataFrame(
-        [(1, 0), (1, 1), (2, 1), (2, 2), (3, 2), (3, 0)],
-        "l_orderkey bigint, l_partkey bigint",
-    )
-    r = GR.copurchase_degree_mixing(li).collect()[0]
-    assert (r.n_nodes, r.n_edges, r.max_degree) == (3, 3, 2)
-    assert r.assortativity == 0.0
-
-
-def test_kcore_clique_and_pendant(spark):
-    from bigdata_hwk_spark.operators import graph as GR
-
-    # K4 clique (order 1 holds parts 1..4) + pendant path 4-5-6
-    li = spark.createDataFrame(
-        [(1, 1), (1, 2), (1, 3), (1, 4), (2, 4), (2, 5), (3, 5), (3, 6)],
-        "l_orderkey bigint, l_partkey bigint",
-    )
-    got = {
-        r.part_id: r.core_degree
-        for r in GR.copurchase_kcore(li, k=3).collect()
-    }
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
-
-
-def test_kcore_cascading_peel(spark):
-    from bigdata_hwk_spark.operators import graph as GR
-
-    # triangle 1-2-3 with a tail 3-4-5: k=2 peels 5 then 4 (two rounds)
-    li = spark.createDataFrame(
-        [(1, 1), (1, 2), (2, 2), (2, 3), (3, 3), (3, 1),
-         (4, 3), (4, 4), (5, 4), (5, 5)],
-        "l_orderkey bigint, l_partkey bigint",
-    )
-    got = {
-        r.part_id: r.core_degree
-        for r in GR.copurchase_kcore(li, k=2).collect()
-    }
-    assert got == {1: 2, 2: 2, 3: 2}
-    # empty core when k exceeds the densest region
-    assert GR.copurchase_kcore(li, k=3).count() == 0
-
-
-def test_kcore_fixture_invariant(spark):
-    from pyspark.sql import functions as F
-
-    from bigdata_hwk_spark.operators import graph as GR
-    from bigdata_hwk_spark.sources.tables import load_table
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem").filter(
-        F.col("l_orderkey") % 7 == 0
-    )
-    k = 4
-    core = GR.copurchase_kcore(li, k=k)
-    rows = core.collect()
-    assert len(rows) > 0
-    # invariant: every member's degree WITHIN the core is >= k
-    assert all(r.core_degree >= k for r in rows)
-    # layout invariance
-    rows_rep = GR.copurchase_kcore(li.repartition(9), k=k).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, rows_rep))
 
 
 def test_frequent_triples_hand_case(spark):

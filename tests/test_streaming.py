@@ -1559,6 +1559,25 @@ def test_replay_contract_one_batch_per_chunk_file_in_order(spark, tmp_path):
     assert seen == [(0, [0, 1, 2]), (1, [3, 4, 5]), (2, [6, 7, 8])]
 
 
+def test_chunk_writer_evaluates_its_input_once(spark, tmp_path):
+    """``write_chunk_files`` evaluates its input plan once, whatever the
+    chunk count: a Python UDF that bumps an accumulator runs once per
+    row, not once per chunk write plus once for the chunk values. The
+    chunk key reads the UDF column, so no write can prune it."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        calls.add(1)
+        return x
+
+    df = spark.range(12).select(
+        F.col("id").alias("seq"), F.udf(bump, "bigint")("id").alias("item")
+    )
+    src = str(tmp_path / "chunks")
+    assert write_chunk_files(df, src, F.floor(F.col("item") / 3)) == 4
+    assert calls.value == 12
+
+
 def test_drain_stops_the_query_when_a_batch_raises(spark, tmp_path):
     """A failing ``process_batch`` propagates its error out of the drain,
     and the drain still stops the query: no active query is left in the
