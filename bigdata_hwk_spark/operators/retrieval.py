@@ -346,7 +346,10 @@ def text_index_roundtrip_profile(
     and count exact (query, doc, rnk, score) row agreement —
     (n_postings, topk_rows, n_agree). ``n_agree == topk_rows`` certifies
     tokenize→parquet→score ≡ in-memory end to end (the
-    ``pq_index_roundtrip_profile`` device for the text index)."""
+    ``pq_index_roundtrip_profile`` device for the text index). The temp
+    dir is removed before returning (the profile is driver-built); a
+    caller's ``work_dir`` is kept."""
+    import shutil
     import tempfile
 
     from ..session import persist_scoped
@@ -381,6 +384,8 @@ def text_index_roundtrip_profile(
     finally:
         release_post()
         release_stats()
+        if not work_dir:
+            shutil.rmtree(out, ignore_errors=True)
     return local_df(
         spark,
         [(meta["n_postings"], len(in_mem), len(from_index & in_mem))],

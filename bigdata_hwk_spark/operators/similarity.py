@@ -21,6 +21,7 @@ equi-join → exact re-rank).
 from __future__ import annotations
 
 import logging
+import time
 
 import numpy as np
 import pandas as pd
@@ -28,7 +29,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import empty_df, local_df
+from ..session import empty_df, local_df, log_round
+from .kcenter import sequential_fft
 
 _LOG = logging.getLogger(__name__)
 
@@ -465,6 +467,111 @@ def _cosine_pandas() -> Column:
     return cos
 
 
+# ---------------------------------------------------------------------------
+# The vector-quantizer kernel: every quantizer below (IVF, PQ, IVFPQ,
+# SemDeDup's k-means and its giant-cluster split, cluster balancing) is
+# built from these steps and keeps no private copy of them
+# ---------------------------------------------------------------------------
+
+IVF_LLOYD = 10  # driver-side spherical Lloyd rounds of the IVF coarse lists
+
+
+def _unit_sample(embeddings: DataFrame, sample_cap: int):
+    """(sids, smat): the deterministic driver sample a quantizer trains on.
+
+    Rows with ``vec_id < sample_cap`` (the id filter pushes to the scan:
+    no global sort), sorted on the driver by vec_id — collect order
+    follows partition layout and the FFT seed starts from row 0, so the
+    sort pins the codebook to the DATA, not the layout. Zero-norm rows
+    are dropped (cosine undefined; 0/0 would put NaN rows into the seed)
+    and the rest normalized. ``sids`` is empty when nothing survives."""
+    sample = sorted(
+        embeddings.select("vec_id", "embedding")
+        .filter(F.col("vec_id") < sample_cap)
+        .collect(),
+        key=lambda r: r.vec_id,
+    )
+    if not sample:
+        return [], np.zeros((0, 0))
+    smat = np.array([r.embedding for r in sample], dtype=np.float64)
+    norms = np.linalg.norm(smat, axis=1, keepdims=True)
+    keep = norms[:, 0] > 0
+    sids = [r.vec_id for r, kp in zip(sample, keep) if kp]
+    return sids, smat[keep] / norms[keep]
+
+
+def _ivf_lists(
+    embeddings: DataFrame, nlist: int | None, nprobe: int | None, sample_cap: int
+) -> tuple[int, int]:
+    """(nlist, nprobe): the caller's values, or the IVF rule of thumb
+    ``nlist ≈ √N`` clamped to [16, sample_cap/8] — ≥ 16 lists so probing
+    is meaningful on tiny corpora, ≤ sample_cap/8 so the FFT codebook
+    sample can still populate every list with well-spread centroids —
+    and ``nprobe = nlist/4`` (at least 2, at most nlist)."""
+    if nlist is None:
+        n_corpus = embeddings.count()
+        nlist = int(min(max(16, round(n_corpus**0.5)), sample_cap // 8))
+    if nprobe is None:
+        nprobe = max(2, nlist // 4)
+    return nlist, min(nprobe, nlist)
+
+
+def _spherical_kmeans(smat: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """(≤ k, dim) unit centroids of the unit rows ``smat``: the engine's
+    FFT k-center seed (``operators/kcenter.sequential_fft`` — reference
+    SequentialFFT, HWK_2/G029HW2.py:50-79), then ``iters`` spherical
+    Lloyd rounds — assign by argmax cosine (ties → lowest id), write each
+    non-empty cluster's mean, renormalize every row. K-center alone
+    spreads centroids to density extremes; the rounds pull them toward
+    cluster mass. An empty cluster, or one whose mean is the zero
+    vector, keeps its previous centroid. Fixed rounds → deterministic
+    for sorted input."""
+    centers = sequential_fft(smat, k)
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    for _ in range(iters):
+        a = np.argmax(smat @ centers.T, axis=1)
+        for c in range(len(centers)):
+            members = smat[a == c]
+            if len(members):
+                mean = members.mean(axis=0)
+                if np.linalg.norm(mean) > 0:
+                    centers[c] = mean
+        centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    return centers
+
+
+def _assign_clusters(
+    corpus: DataFrame, centers: np.ndarray, with_embedding: bool
+) -> DataFrame:
+    """(vec_id, [embedding,] cluster): each row's argmax-cosine centroid
+    (ties → lowest id), one matmul per Arrow batch, no shuffle.
+    Zero-norm rows are dropped before normalizing, so NaN never reaches
+    argmax."""
+    cols = ["vec_id", "embedding"] if with_embedding else ["vec_id"]
+    schema = (
+        "vec_id bigint, embedding array<float>, cluster int"
+        if with_embedding
+        else "vec_id bigint, cluster int"
+    )
+
+    def assign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            block = np.array(list(pdf["embedding"]), dtype=np.float64)
+            norms = np.linalg.norm(block, axis=1, keepdims=True)
+            ok = norms[:, 0] > 0
+            if not ok.any():
+                continue
+            out = pdf.loc[ok, cols].copy()
+            out["cluster"] = np.argmax(
+                (block[ok] / norms[ok]) @ centers.T, axis=1
+            ).astype(np.int32)
+            yield out
+
+    return corpus.mapInPandas(assign, schema=schema)
+
+
 def ann_ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 5,
@@ -481,116 +588,61 @@ def ann_ivf_topk(
     exact-reranks the candidates. Candidate volume is ~``nprobe/nlist`` of
     the corpus per query, and the expensive stages are all equi-joins.
 
-    Parameter defaults derive from corpus size — the standard IVF rule of
-    thumb: ``nlist ≈ √N`` (clamped to [16, sample_cap/8] so the FFT
-    codebook sample can populate every list with well-spread centroids)
-    and ``nprobe = nlist/4``. A fixed (nlist=16, nprobe=8) probed HALF
-    the corpus per query and made this the slowest query in the whole
-    bench at sf0.1; nlist/4 was measured (NumPy sweep over the fixture)
-    as the smallest probe fraction holding recall@10 ≈ 0.6–0.7 on these
-    weakly-clustered fixtures — on a genuinely clustered production
-    corpus the same code takes nprobe ≪ nlist.
+    Parameter defaults derive from corpus size (``_ivf_lists``). A fixed
+    (nlist=16, nprobe=8) probed HALF the corpus per query and made this
+    the slowest query in the whole bench at sf0.1; nlist/4 was measured
+    (NumPy sweep over the fixture) as the smallest probe fraction holding
+    recall@10 ≈ 0.6–0.7 on these weakly-clustered fixtures — on a
+    genuinely clustered production corpus the same code takes
+    nprobe ≪ nlist.
 
-    The quantizer seeds with the engine's FFT k-center kernel
-    (``operators/kcenter.sequential_fft`` — reference SequentialFFT,
-    HWK_2/G029HW2.py:50-79) on a deterministic sample of normalized
-    vectors, then refines with a few Lloyd (k-means) iterations —
-    k-center alone spreads centroids to density extremes, which costs
-    recall; the refinement pulls them toward cluster mass (measured on
-    the fixtures: +0.06–0.10 recall@10 at the same nprobe). All
-    driver-side NumPy on ≤ sample_cap rows, deterministic.
+    The quantizer is ``_spherical_kmeans`` on the deterministic unit
+    sample (FFT seed + ``IVF_LLOYD`` Lloyd rounds; the rounds were
+    measured on the fixtures at +0.06–0.10 recall@10 over the bare seed
+    at the same nprobe). All driver-side NumPy on ≤ sample_cap rows,
+    deterministic. Zero-norm vectors are neither listed nor queried.
 
     Output schema matches ``cosine_topk_bruteforce`` so recall is directly
-    measurable (tests/test_extensions.py).
+    measurable (tests/test_pq.py).
     """
-    from .kcenter import sequential_fft
-
-    if nlist is None:
-        n_corpus = embeddings.count()
-        # √N, clamped: ≥16 lists so probing is meaningful on tiny corpora,
-        # ≤sample_cap/8 so the FFT codebook sample can still populate
-        # every list with well-spread centroids
-        nlist = int(min(max(16, round(n_corpus**0.5)), sample_cap // 8))
-    if nprobe is None:
-        nprobe = max(2, nlist // 4)
-    nprobe = min(nprobe, nlist)
-
-    # codebook: deterministic sample → normalize → k-center (driver NumPy;
-    # sample_cap rows regardless of corpus size; the id filter pushes to
-    # the scan — no global sort). Sorted on the driver: collect order
-    # follows partition layout, and the FFT seed starts from row 0 —
-    # sorting pins the codebook (and so recall) to the DATA, not the
-    # layout (kmeans_fit/_pq_sample_books already did; this site's miss
-    # made recall swing with the core count).
-    sample = sorted(
-        embeddings.select("vec_id", "embedding")
-        .filter(F.col("vec_id") < sample_cap)
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    if not sample:  # empty corpus (or no ids under sample_cap): no queries
-        return empty_df(
-            embeddings.sparkSession,
-            "query_id bigint, neighbor_id bigint, cosine double, rk int",
-        )
-    smat = np.array([r.embedding for r in sample], dtype=np.float64)
-    smat /= np.linalg.norm(smat, axis=1, keepdims=True)
-    centroids = sequential_fft(smat, nlist)  # (nlist, dim), unit-ish rows
-    centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-    # Lloyd refinement (spherical k-means): assign sample → recompute means
-    # → renormalize. Empty lists keep their previous centroid. Fixed
-    # iteration count → deterministic.
-    for _ in range(10):
-        assign_s = np.argmax(smat @ centroids.T, axis=1)
-        for c in range(nlist):
-            members = smat[assign_s == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    # inverted lists: argmax-cosine centroid per vector, one matmul per
-    # Arrow batch, no shuffle. The embedding rides along so the probe-hit
-    # candidates never need a second corpus join — the probe join below is
-    # a broadcast (map-side), so the wide column costs no shuffle.
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            block /= np.linalg.norm(block, axis=1, keepdims=True)
-            out = pdf[["vec_id", "embedding"]].copy()
-            out["cid"] = np.argmax(block @ centroids.T, axis=1).astype(np.int32)
-            yield out
-
     from ..sources.tables import fan_out
 
-    emb = fan_out(embeddings.select("vec_id", "embedding"))
-    lists = emb.mapInPandas(
-        assign, schema="vec_id bigint, embedding array<float>, cid int"
+    spark = embeddings.sparkSession
+    sids, smat = _unit_sample(embeddings, sample_cap)
+    if not sids:  # empty corpus (or no ids under sample_cap): no queries
+        return empty_df(
+            spark, "query_id bigint, neighbor_id bigint, cosine double, rk int"
+        )
+    nlist, nprobe = _ivf_lists(embeddings, nlist, nprobe, sample_cap)
+    centroids = _spherical_kmeans(smat, nlist, IVF_LLOYD)
+
+    # inverted lists; the embedding rides along so the probe-hit
+    # candidates never need a second corpus join — the probe join below
+    # is a broadcast (map-side), so the wide column costs no shuffle
+    lists = _assign_clusters(
+        fan_out(embeddings.select("vec_id", "embedding")), centroids, True
     )
 
     # probe set: per query, its nprobe nearest centroids (queries are few →
-    # driver-side; the (query_id, cid) table is tiny and broadcast).
+    # driver-side; the (query_id, cluster) table is tiny and broadcast).
     # Queries are a prefix of the codebook sample (n_queries < sample_cap),
     # so no second scan/collect is needed.
-    spark = embeddings.sparkSession
     assert n_queries <= sample_cap
-    qrows = [r for r in sample if r.vec_id < n_queries]
     probes = []
     queries = []
-    for r in qrows:
-        qv = np.asarray(r.embedding, dtype=np.float64)
-        qv /= np.linalg.norm(qv)
+    for qid, qv in zip(sids, smat):
+        if qid >= n_queries:
+            break  # sids ascend
         top = np.argsort(-(centroids @ qv))[:nprobe]
-        probes.extend((int(r.vec_id), int(c)) for c in top)
-        queries.append((int(r.vec_id), [float(x) for x in qv]))
-    probe_df = local_df(spark, probes, "query_id bigint, cid int")
+        probes.extend((int(qid), int(c)) for c in top)
+        queries.append((int(qid), [float(x) for x in qv]))
+    probe_df = local_df(spark, probes, "query_id bigint, cluster int")
     query_df = local_df(spark, queries, "query_id bigint, qv array<double>")
 
     cos = _cosine_pandas()
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), "neighbor_id")
     return (
-        lists.join(F.broadcast(probe_df), "cid")
+        lists.join(F.broadcast(probe_df), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
         .join(F.broadcast(query_df), "query_id")
         .select(
@@ -1065,14 +1117,15 @@ SEMDEDUP_TAU = 0.4  # aligned with the corpus near-dup threshold used by
 # model assumes k ~ √N keeps clusters at ~√N, but a pathological corpus
 # (one dominant topic) can put most rows in ONE cluster and stall a
 # single task. Above this row count the prune deterministically
-# SUB-CLUSTERS the group in-place (FFT-seeded spherical Lloyd on the
-# vec_id-sorted members — the kmeans_fit recipe run locally) and prunes
+# SUB-CLUSTERS the group in-place (``_spherical_kmeans`` on the
+# vec_id-sorted members, SEMDEDUP_SPLIT_LLOYD rounds) and prunes
 # each sub-cluster independently — the paper's own remedy (raise k /
 # refine clustering), applied only where needed. Depth-bounded so
 # unsplittable groups (near-identical vectors — where greedy is cheap
 # anyway: the kept set stays tiny) still terminate.
 SEMDEDUP_MAX_CLUSTER = 8192
 SEMDEDUP_SPLIT_DEPTH = 4
+SEMDEDUP_SPLIT_LLOYD = 4
 
 
 def kmeans_fit(
@@ -1086,10 +1139,10 @@ def kmeans_fit(
     """Distributed spherical k-means (Lloyd) over the embedding column →
     (k, dim) unit-norm float64 centroids.
 
-    The genuinely-distributed twin of the driver-sample refinement inside
-    ``ann_ivf_topk``: initialization is the same deterministic FFT
-    k-center seeding (reference SequentialFFT, HWK_2/G029HW2.py:50-79) on
-    a ≤ ``sample_cap``-row driver sample, but every Lloyd iteration runs
+    The genuinely-distributed twin of ``_spherical_kmeans``:
+    initialization is its deterministic FFT k-center seed (reference
+    SequentialFFT, HWK_2/G029HW2.py:50-79) on the ≤ ``sample_cap``-row
+    unit sample, but every Lloyd iteration runs
     over the WHOLE corpus — one broadcast-centroid ``mapInPandas`` pass
     per iteration emitting ≤ k tiny partial rows per partition (cluster,
     count, integer component sums), folded on the driver with exact
@@ -1119,7 +1172,6 @@ def kmeans_fit(
     4): each of the ``iters`` passes otherwise re-reads the corpus from
     storage.
     """
-    from .kcenter import sequential_fft
     from ..session import persist_scoped
     from ..sources.tables import fan_out
 
@@ -1130,27 +1182,14 @@ def kmeans_fit(
             StorageLevel.MEMORY_AND_DISK,
         )
     try:
-        # sorted on the driver: collect order follows partition layout,
-        # and the FFT seed starts from row 0 — sorting pins the init (and
-        # so the whole fit) to the DATA, not the layout
-        sample = sorted(
-            corpus.filter(F.col("vec_id") < sample_cap).collect(),
-            key=lambda r: r.vec_id,
-        )
-        if not sample:
+        sids, smat = _unit_sample(corpus, sample_cap)
+        if not sids:
             return np.zeros((0, 0))
-        smat = np.array([r.embedding for r in sample], dtype=np.float64)
-        snorms = np.linalg.norm(smat, axis=1, keepdims=True)
-        smat = smat[snorms[:, 0] > 0] / snorms[snorms[:, 0] > 0]
-        if smat.shape[0] == 0:
-            return np.zeros((0, 0))
-        dim = smat.shape[1]
-        centers = sequential_fft(smat, k)
-        k = len(centers)  # clamped when the corpus is smaller than k
-        centers = centers / np.linalg.norm(centers, axis=1, keepdims=True)
-
+        # the FFT seed alone (zero driver rounds): the Lloyd rounds run
+        # over the whole corpus below
+        centers = _spherical_kmeans(smat, k, 0)
         return _kmeans_lloyd(
-            corpus.select("embedding"), centers, k, dim, iters, inertia_out
+            corpus.select("embedding"), centers, iters, inertia_out
         )
     finally:
         release()
@@ -1159,16 +1198,18 @@ def kmeans_fit(
 def _kmeans_lloyd(
     emb: DataFrame,
     centers: np.ndarray,
-    k: int,
-    dim: int,
     iters: int,
     inertia_out: list | None,
 ) -> np.ndarray:
     """The Lloyd loop of ``kmeans_fit`` over an (embedding)-only relation
     (typically an InMemoryTableScan projection of the caller's persisted
     corpus): one broadcast-centroid ``mapInPandas`` partial-sum pass per
-    iteration, exact integer fold on the driver."""
-    for _ in range(iters):
+    iteration, exact integer fold on the driver. Each round logs name,
+    round, mean max-cosine and seconds at INFO on the engine logger
+    (``session.log_round``, the ``session.fixpoint`` record)."""
+    k, dim = centers.shape
+    for rnd in range(1, iters + 1):
+        t0 = time.perf_counter()
         C = centers  # closure snapshot for this iteration
 
         def partials(batches):
@@ -1219,14 +1260,16 @@ def _kmeans_lloyd(
             for i, x in enumerate(r.s):  # exact Python-int fold
                 cs[i] += x
             cos_total += r.cos_sum
+        mean_cos = cos_total / tot_n if tot_n else None
         if inertia_out is not None and tot_n:
-            inertia_out.append(cos_total / tot_n)
+            inertia_out.append(mean_cos)
         for c in range(k):
             if n_by[c]:
                 centers[c] = np.array(s_by[c], dtype=np.float64) / (
                     n_by[c] * KMEANS_QUANT
                 )
         centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+        log_round("kmeans_fit", rnd, mean_cos, time.perf_counter() - t0)
     return centers
 
 
@@ -1313,44 +1356,13 @@ def _semdedup_prune(
             "vec_id bigint, cluster int, kept boolean, nn_cos double",
         ), (lambda: None)
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            norms = np.linalg.norm(block, axis=1, keepdims=True)
-            ok = norms[:, 0] > 0
-            if not ok.any():
-                continue
-            block = block[ok] / norms[ok]
-            out = pdf.loc[ok, ["vec_id", "embedding"]].copy()
-            out["cluster"] = np.argmax(block @ centers.T, axis=1).astype(
-                np.int32
-            )
-            yield out
-
-    assigned = corpus.mapInPandas(
-        assign, schema="vec_id bigint, embedding array<float>, cluster int"
-    )
+    assigned = _assign_clusters(corpus, centers, True)
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         block = np.array(list(pdf["embedding"]), dtype=np.float64)
-        norms = np.linalg.norm(block, axis=1, keepdims=True)
-        ok = norms[:, 0] > 0
-        if not ok.all():  # assign() excludes these; guard direct calls
-            pdf = pdf.loc[ok].reset_index(drop=True)
-            block, norms = block[ok], norms[ok]
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype=np.int64),
-                    "cluster": pd.Series([], dtype=np.int32),
-                    "kept": pd.Series([], dtype=bool),
-                    "nn_cos": pd.Series([], dtype=np.float64),
-                }
-            )
-        block = block / norms
+        # non-zero rows only: _assign_clusters dropped the zero-norm ones
+        block /= np.linalg.norm(block, axis=1, keepdims=True)
         kept_flags = np.empty(len(pdf), dtype=bool)
         nn = np.empty(len(pdf), dtype=np.float64)
 
@@ -1372,29 +1384,16 @@ def _semdedup_prune(
             if len(idx) <= max_cluster_rows or depth >= SEMDEDUP_SPLIT_DEPTH:
                 greedy(idx)
                 return
-            # deterministic local refine: FFT seed on the vec_id-sorted
-            # members (idx is ascending-vec_id by construction), fixed
-            # spherical Lloyd rounds, argmax ties -> lowest sub-id —
-            # the kmeans_fit recipe without a Spark job
-            from .kcenter import sequential_fft
-
+            # deterministic local refine: the IVF quantizer kernel on the
+            # vec_id-sorted members (idx ascends by construction) — no
+            # Spark job
             sub_block = block[idx]
             k_sub = min(
                 int(np.ceil(len(idx) / max_cluster_rows)) + 1, 64
             )
-            centers = sequential_fft(sub_block, min(k_sub, len(idx)))
-            centers = centers / np.linalg.norm(
-                centers, axis=1, keepdims=True
+            centers = _spherical_kmeans(
+                sub_block, k_sub, SEMDEDUP_SPLIT_LLOYD
             )
-            for _ in range(4):
-                a = np.argmax(sub_block @ centers.T, axis=1)
-                for c in range(len(centers)):
-                    members = sub_block[a == c]
-                    if len(members):
-                        m = members.mean(axis=0)
-                        nm = np.linalg.norm(m)
-                        if nm > 0:  # else keep previous center
-                            centers[c] = m / nm
             a = np.argmax(sub_block @ centers.T, axis=1)
             if len(np.unique(a)) == 1:  # unsplittable (near-identical)
                 greedy(idx)
@@ -1468,6 +1467,9 @@ PQ_LLOYD = 10       # Lloyd iterations per subspace codebook
 PQ_QUANT = 1 << 20
 
 
+ADC_SCHEMA = "query_id bigint, neighbor_id bigint, adc_dist double, rk int"
+
+
 def ann_pq_topk(
     embeddings: DataFrame,
     n_queries: int = 5,
@@ -1481,16 +1483,19 @@ def ann_pq_topk(
     (IVF partitions the corpus; PQ compresses it: M·log2(K) = 64 bits
     per vector here vs 32·dim = 2048 for raw floats — 32× compression).
 
-    Shape: per-subspace codebooks train on the deterministic ≤
-    ``sample_cap``-row driver sample (FFT seeding + Lloyd, the
-    ``ann_ivf_topk`` precedent); the corpus is ENCODED distributed — one
-    broadcast-codebook ``mapInPandas`` pass emitting (vec_id, m, code)
-    rows, the only corpus-scale data after which the float vectors are
-    never touched again. Each query precomputes its M×K lookup table of
-    integer-quantized partial squared distances (tiny, broadcast); ADC
-    distance is an equi-join on (m, code) + one integer groupBy sum —
-    every stage a hash join or partial-aggregated shuffle on small keys.
-    Asymmetric: queries stay full-precision, only the corpus is coded.
+    Plain PQ is IVFPQ with ONE coarse list at the origin (Jégou et al.,
+    TPAMI 2011: ADC is IVFADC with k′ = 1): the residual x − 0 is x
+    exactly, so this runs ``ann_ivfpq_topk``'s train, encode, LUT and
+    ADC steps bit-identically with ``coarse = 0``, ``nprobe = 1``.
+    Per-subspace codebooks train on the deterministic ≤ ``sample_cap``
+    unit sample; the corpus is ENCODED distributed — one
+    broadcast-codebook ``mapInPandas`` pass emitting (vec_id, cid, m,
+    code) rows, the only corpus-scale data after which the float
+    vectors are never touched again. Each query precomputes its M×K
+    lookup table of integer-quantized partial squared distances (tiny,
+    broadcast); ADC distance is an equi-join on (cid, m, code) + one
+    integer groupBy sum. Asymmetric: queries stay full-precision, only
+    the corpus is coded.
 
     Rows-only (iterative codebook training is not SQL-expressible);
     recall vs ``cosine_topk_bruteforce``, ADC-vs-NumPy exactness, and
@@ -1498,70 +1503,37 @@ def ann_pq_topk(
     squared L2 ranks identically to cosine (‖a−b‖² = 2 − 2cos), so the
     output is directly recall-comparable to the brute-force twin.
     """
-    spark = embeddings.sparkSession
-    out_schema = (
-        "query_id bigint, neighbor_id bigint, adc_dist double, rk int"
+    sids, smat = _unit_sample(embeddings, sample_cap)
+    if not sids:
+        return empty_df(embeddings.sparkSession, ADC_SCHEMA)
+    origin = np.zeros((1, smat.shape[1]))  # the one coarse list
+    return _ivfpq_search(
+        embeddings, sids, smat, origin, 1, n_queries, k, m_sub, k_codes
     )
-    fitted = _pq_sample_books(embeddings, sample_cap, m_sub, k_codes)
-    if fitted is None:
-        return empty_df(spark, out_schema)
-    sids, smat, books, dsub = fitted
-    codes = _pq_encode_codes(embeddings, books, m_sub, dsub)
-    lut_rows = _pq_query_lut_rows(
-        [
-            (int(qid), qv)
-            for qid, qv in zip(sids, smat)
-            if qid < n_queries
-        ],
-        books,
-        m_sub,
-        dsub,
-        k_codes,
-    )
-    if not lut_rows:
-        return empty_df(spark, out_schema)
-    lut = local_df(
-        spark, lut_rows, "query_id bigint, m int, code int, pd_int bigint"
-    )
-    return _pq_adc_topk(codes, lut, k)
 
 
-def _pq_sample_books(
-    embeddings: DataFrame, sample_cap: int, m_sub: int, k_codes: int
-):
-    """Deterministic driver sample + per-subspace codebooks: returns
-    (sids, smat, books, dsub), or None on an empty/zero-norm corpus.
-    Shared by the in-memory search and the persisted index builder so
-    both train bit-identical codebooks."""
-    sample = sorted(
-        embeddings.select("vec_id", "embedding")
-        .filter(F.col("vec_id") < sample_cap)
-        .collect(),
-        key=lambda r: r.vec_id,
+def _pq_books(
+    smat: np.ndarray, coarse: np.ndarray, m_sub: int, k_codes: int
+) -> np.ndarray:
+    """PQ codebooks on the unit sample's residuals to their argmax-cosine
+    coarse list, pooled across lists (the published default)."""
+    assert smat.shape[1] % m_sub == 0, (
+        "dim must be divisible by the subspace count"
     )
-    if not sample:
-        return None
-    smat = np.array([r.embedding for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(smat, axis=1, keepdims=True)
-    keep = norms[:, 0] > 0
-    smat = smat[keep] / norms[keep]
-    sids = [r.vec_id for r, kp in zip(sample, keep) if kp]
-    if not len(sids):
-        return None
-    dim = smat.shape[1]
-    assert dim % m_sub == 0, "dim must be divisible by the subspace count"
-    dsub = dim // m_sub
-    return sids, smat, pq_train_books(smat, m_sub, k_codes), dsub
+    resid = smat - coarse[np.argmax(smat @ coarse.T, axis=1)]
+    return pq_train_books(resid, m_sub, k_codes)
 
 
-def _pq_encode_codes(
-    embeddings: DataFrame, books: np.ndarray, m_sub: int, dsub: int
+def _pq_encode(
+    embeddings: DataFrame, coarse: np.ndarray, books: np.ndarray
 ) -> DataFrame:
-    """Distributed encode: codes in LONG form (vec_id, m, code) — the
-    only corpus-scale table downstream, 8-byte rows, no float columns."""
+    """Distributed encode: codes in LONG form (vec_id, cid, m, code) —
+    the only corpus-scale table downstream, no float columns. Each
+    non-zero vector is normalized, assigned its argmax-cosine coarse
+    list ``cid`` and coded by its residual to that list's centroid."""
     from ..sources.tables import fan_out
 
-    B = books
+    m_sub, _, dsub = books.shape
 
     def encode(batches):
         for pdf in batches:
@@ -1573,16 +1545,17 @@ def _pq_encode_codes(
             block, vids = block[ok] / bn[ok], pdf["vec_id"].to_numpy()[ok]
             if not len(block):
                 continue
+            cid = np.argmax(block @ coarse.T, axis=1)
+            resid = block - coarse[cid]
             outs = []
             for m in range(m_sub):
-                sub = block[:, m * dsub : (m + 1) * dsub]
-                d2 = (
-                    (sub[:, None, :] - B[m][None, :, :]) ** 2
-                ).sum(axis=2)
+                sub = resid[:, m * dsub : (m + 1) * dsub]
+                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
                 outs.append(
                     pd.DataFrame(
                         {
                             "vec_id": vids,
+                            "cid": cid.astype("int32"),
                             "m": m,
                             "code": np.argmin(d2, axis=1).astype("int32"),
                         }
@@ -1591,38 +1564,46 @@ def _pq_encode_codes(
             yield pd.concat(outs, ignore_index=True)
 
     return fan_out(embeddings.select("vec_id", "embedding")).mapInPandas(
-        encode, schema="vec_id bigint, m int, code int"
+        encode, schema="vec_id bigint, cid int, m int, code int"
     )
 
 
-def _pq_query_lut_rows(
-    queries: list[tuple[int, np.ndarray]],
-    books: np.ndarray,
-    m_sub: int,
-    dsub: int,
-    k_codes: int,
-) -> list[tuple[int, int, int, int]]:
-    """Per-query integer LUTs (n_queries × M × K rows — tiny, broadcast):
-    each entry is the integer-quantized partial squared distance from the
-    query's m-th subvector to codebook entry (m, c)."""
-    lut_rows = []
+def _pq_lut(
+    queries, coarse: np.ndarray, books: np.ndarray, nprobe: int
+) -> list[tuple[int, int, int, int, int]]:
+    """Per-(query, probed list) integer LUT rows (query_id, cid, m, code,
+    pd_int) — n_queries × nprobe × M × K, tiny and broadcast: each entry
+    is the integer-quantized partial squared distance from the m-th
+    subvector of the query's residual to list ``cid`` to codebook entry
+    (m, code). The probe restriction lives IN the LUT: a list a query
+    does not probe has no rows to join."""
+    m_sub, k_codes, dsub = books.shape
+    rows = []
     for qid, qv in queries:
-        for m in range(m_sub):
-            qs = qv[m * dsub : (m + 1) * dsub]
-            d2 = ((books[m] - qs[None, :]) ** 2).sum(axis=1)
-            for c in range(k_codes):
-                lut_rows.append(
-                    (int(qid), m, c, int(round(d2[c] * PQ_QUANT)))
+        for cid in np.argsort(-(coarse @ qv))[:nprobe]:
+            qr = qv - coarse[cid]
+            for m in range(m_sub):
+                qs = qr[m * dsub : (m + 1) * dsub]
+                d2 = ((books[m] - qs[None, :]) ** 2).sum(axis=1)
+                rows.extend(
+                    (int(qid), int(cid), m, c, int(round(d2[c] * PQ_QUANT)))
+                    for c in range(k_codes)
                 )
-    return lut_rows
+    return rows
 
 
-def _pq_adc_topk(codes: DataFrame, lut: DataFrame, k: int) -> DataFrame:
-    """ADC ranking tail: (m, code) equi-join + integer groupBy sum +
+def _pq_adc_topk(codes: DataFrame, lut_rows: list, k: int) -> DataFrame:
+    """ADC ranking tail: (cid, m, code) equi-join + integer groupBy sum +
     per-query top-k window — layout-invariant (micro-unit integers,
     vec_id tie-break)."""
+    spark = codes.sparkSession
+    if not lut_rows:
+        return empty_df(spark, ADC_SCHEMA)
+    lut = local_df(
+        spark, lut_rows, "query_id bigint, cid int, m int, code int, pd_int bigint"
+    )
     adc = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+        codes.join(F.broadcast(lut), ["cid", "m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("pd_int").alias("adc_int"))
@@ -1637,6 +1618,29 @@ def _pq_adc_topk(codes: DataFrame, lut: DataFrame, k: int) -> DataFrame:
             F.round(F.col("adc_int") / PQ_QUANT, 6).alias("adc_dist"),
             "rk",
         )
+    )
+
+
+def _ivfpq_search(
+    embeddings: DataFrame,
+    sids: list,
+    smat: np.ndarray,
+    coarse: np.ndarray,
+    nprobe: int,
+    n_queries: int,
+    k: int,
+    m_sub: int,
+    k_codes: int,
+) -> DataFrame:
+    """Train PQ codebooks on the sample's residuals to ``coarse``, encode
+    the corpus, and rank the sample's first ``n_queries`` ids by ADC
+    over their ``nprobe`` nearest lists."""
+    books = _pq_books(smat, coarse, m_sub, k_codes)
+    queries = [(qid, qv) for qid, qv in zip(sids, smat) if qid < n_queries]
+    return _pq_adc_topk(
+        _pq_encode(embeddings, coarse, books),
+        _pq_lut(queries, coarse, books, nprobe),
+        k,
     )
 
 
@@ -1684,18 +1688,20 @@ def pq_index_build(
     """Build and PERSIST a PQ index under ``path``: the corpus-scale
     encode pass (the expensive part — one full scan of the float
     vectors) runs ONCE and lands as a parquet codes table
-    (vec_id, m, code — 64-bit-code rows, no floats), next to the tiny
-    codebook table (m, code, vec). Every later query session reads only
+    (vec_id, cid, m, code — 64-bit-code rows, no floats; ``cid`` is the
+    constant 0 of plain PQ's one origin list), next to the tiny codebook
+    table (m, code, vec). Every later query session reads only
     the codes table; the floats are never touched again — the
     build-once/query-many serving shape the in-memory ``ann_pq_topk``
     (whose codebook recipe this shares, bit-identically) cannot offer.
 
     Returns build metadata {n_vectors, m_sub, k_codes, dsub}.
     """
-    fitted = _pq_sample_books(embeddings, sample_cap, m_sub, k_codes)
-    if fitted is None:
+    sids, smat = _unit_sample(embeddings, sample_cap)
+    if not sids:
         raise ValueError("pq_index_build: empty or all-zero-norm corpus")
-    _, _, books, dsub = fitted
+    coarse = np.zeros((1, smat.shape[1]))  # plain PQ: one origin list
+    books = _pq_books(smat, coarse, m_sub, k_codes)
     spark = embeddings.sparkSession
     book_rows = [
         (m, c, [float(x) for x in books[m][c]])
@@ -1705,14 +1711,14 @@ def pq_index_build(
     local_df(
         spark, book_rows, "m int, code int, vec array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks.parquet")
-    codes = _pq_encode_codes(embeddings, books, m_sub, dsub)
+    codes = _pq_encode(embeddings, coarse, books)
     codes.write.mode("overwrite").parquet(f"{path}/codes.parquet")
     n_codes = spark.read.parquet(f"{path}/codes.parquet").count()
     return {
         "n_vectors": n_codes // m_sub,
         "m_sub": m_sub,
         "k_codes": k_codes,
-        "dsub": dsub,
+        "dsub": books.shape[2],
     }
 
 
@@ -1725,8 +1731,8 @@ def pq_index_topk(
     """Query a persisted PQ index: ``queries`` is a bounded driver-side
     list of (query_id, raw vector) — per-request data, not corpus data.
     Codebooks load to the driver (M·K rows), per-query integer LUTs
-    broadcast, and the search is the same (m, code) equi-join + integer
-    sum + top-k window as the in-memory path — over the CODES table
+    broadcast, and the search is the same (cid, m, code) equi-join +
+    integer sum + top-k window as the in-memory path — over the CODES table
     only. Zero-norm query vectors are excluded (cosine undefined).
     Results are bit-equal to ``ann_pq_topk`` for the same corpus and
     query vectors (pinned in tests): parquet round-trips the integer
@@ -1747,17 +1753,9 @@ def pq_index_topk(
         nv = np.linalg.norm(qv)
         if nv > 0:
             qlist.append((int(qid), qv / nv))
-    out_schema = (
-        "query_id bigint, neighbor_id bigint, adc_dist double, rk int"
-    )
-    lut_rows = _pq_query_lut_rows(qlist, books, m_sub, dsub, k_codes)
-    if not lut_rows:
-        return empty_df(spark, out_schema)
-    lut = spark.createDataFrame(
-        lut_rows, "query_id bigint, m int, code int, pd_int bigint"
-    )
-    codes = spark.read.parquet(f"{path}/codes.parquet")
-    return _pq_adc_topk(codes, lut, k)
+    origin = np.zeros((1, m_sub * dsub))  # plain PQ: one origin list
+    lut_rows = _pq_lut(qlist, origin, books, 1)
+    return _pq_adc_topk(spark.read.parquet(f"{path}/codes.parquet"), lut_rows, k)
 
 
 def pq_index_roundtrip_profile(
@@ -1773,22 +1771,29 @@ def pq_index_roundtrip_profile(
     in-memory path uses, and count exact row agreement against
     ``ann_pq_topk`` — (n_vectors, n_code_rows, topk_rows, n_agree).
     ``n_agree == topk_rows`` certifies build→parquet→query ≡ in-memory
-    end to end. Rows-only registry surface (iterative training)."""
+    end to end. Rows-only registry surface (iterative training). The
+    temp dir is removed before returning (the profile is driver-built);
+    a caller's ``work_dir`` is kept."""
+    import shutil
     import tempfile
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = work_dir or tempfile.mkdtemp(prefix="pq_index_")
-    meta = pq_index_build(emb, out)
-    queries = [
-        (r.vec_id, list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    idx = {
-        tuple(r)
-        for r in pq_index_topk(spark, out, queries, k=k).collect()
-    }
+    try:
+        meta = pq_index_build(emb, out)
+        queries = [
+            (r.vec_id, list(r.embedding))
+            for r in emb.filter(F.col("vec_id") < n_queries)
+            .select("vec_id", "embedding")
+            .collect()
+        ]
+        idx = {
+            tuple(r)
+            for r in pq_index_topk(spark, out, queries, k=k).collect()
+        }
+    finally:
+        if not work_dir:
+            shutil.rmtree(out, ignore_errors=True)
     mem = {
         tuple(r)
         for r in ann_pq_topk(emb, n_queries=n_queries, k=k).collect()
@@ -1828,8 +1833,8 @@ def ann_ivfpq_topk(
     and PQ bounds MEMORY (the probed candidates are ranked from 64-bit
     RESIDUAL codes, never from raw floats).
 
-    Construction: coarse centroids = the ann_ivf_topk codebook recipe
-    (FFT seed + spherical Lloyd on the deterministic driver sample); PQ
+    Construction: coarse centroids = ``ann_ivf_topk``'s quantizer
+    (``_spherical_kmeans`` on the deterministic unit sample); PQ
     codebooks train on the sample's coarse RESIDUALS pooled across lists
     (the published default). Corpus pass: ONE broadcast-codebook
     ``mapInPandas`` emitting (vec_id, cid, m, code) — the corpus floats
@@ -1845,130 +1850,13 @@ def ann_ivfpq_topk(
     containment, ADC ≡ NumPy reimplementation, and layout determinism
     are pinned in tests.
     """
-    from .kcenter import sequential_fft
-    from ..sources.tables import fan_out
-
-    spark = embeddings.sparkSession
-    out_schema = (
-        "query_id bigint, neighbor_id bigint, adc_dist double, rk int"
-    )
-    sample = sorted(
-        embeddings.select("vec_id", "embedding")
-        .filter(F.col("vec_id") < sample_cap)
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    if not sample:
-        return empty_df(spark, out_schema)
-    smat = np.array([r.embedding for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(smat, axis=1, keepdims=True)
-    keep = norms[:, 0] > 0
-    smat = smat[keep] / norms[keep]
-    sids = [r.vec_id for r, kp in zip(sample, keep) if kp]
-    dim = smat.shape[1]
-    assert dim % m_sub == 0, "dim must be divisible by the subspace count"
-    dsub = dim // m_sub
-
-    if nlist is None:
-        n_corpus = embeddings.count()
-        nlist = int(min(max(16, round(n_corpus**0.5)), sample_cap // 8))
-    if nprobe is None:
-        nprobe = max(2, nlist // 4)
-    nprobe = min(nprobe, nlist)
-
-    # coarse quantizer: the ann_ivf_topk recipe verbatim
-    coarse = sequential_fft(smat, min(nlist, len(smat)))
-    nlist = len(coarse)
-    nprobe = min(nprobe, nlist)
-    coarse = coarse / np.linalg.norm(coarse, axis=1, keepdims=True)
-    for _ in range(10):
-        assign_s = np.argmax(smat @ coarse.T, axis=1)
-        for c in range(nlist):
-            members = smat[assign_s == c]
-            if len(members):
-                coarse[c] = members.mean(axis=0)
-        coarse /= np.linalg.norm(coarse, axis=1, keepdims=True)
-
-    # PQ codebooks on the sample's coarse residuals (pooled across lists)
-    assign_s = np.argmax(smat @ coarse.T, axis=1)
-    books = pq_train_books(smat - coarse[assign_s], m_sub, k_codes)
-
-    C, B = coarse, books
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            bn = np.linalg.norm(block, axis=1, keepdims=True)
-            ok = bn[:, 0] > 0
-            block, vids = block[ok] / bn[ok], pdf["vec_id"].to_numpy()[ok]
-            if not len(block):
-                continue
-            cid = np.argmax(block @ C.T, axis=1)
-            resid = block - C[cid]
-            outs = []
-            for m in range(m_sub):
-                sub = resid[:, m * dsub : (m + 1) * dsub]
-                d2 = ((sub[:, None, :] - B[m][None, :, :]) ** 2).sum(axis=2)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": vids,
-                            "cid": cid.astype("int32"),
-                            "m": m,
-                            "code": np.argmin(d2, axis=1).astype("int32"),
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-    codes = fan_out(embeddings.select("vec_id", "embedding")).mapInPandas(
-        encode, schema="vec_id bigint, cid int, m int, code int"
-    )
-
-    # per-(query, probed-list) integer LUTs over residual space
-    lut_rows = []
-    for qid, qv in zip(sids, smat):
-        if qid >= n_queries:
-            continue
-        probes = np.argsort(-(C @ qv))[:nprobe]
-        for cid in probes:
-            qr = qv - C[cid]
-            for m in range(m_sub):
-                qs = qr[m * dsub : (m + 1) * dsub]
-                d2 = ((B[m] - qs[None, :]) ** 2).sum(axis=1)
-                for c in range(k_codes):
-                    lut_rows.append(
-                        (
-                            int(qid),
-                            int(cid),
-                            m,
-                            c,
-                            int(round(d2[c] * PQ_QUANT)),
-                        )
-                    )
-    if not lut_rows:
-        return empty_df(spark, out_schema)
-    lut = local_df(
-        spark, lut_rows, "query_id bigint, cid int, m int, code int, pd_int bigint"
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["cid", "m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pd_int").alias("adc_int"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_int", "vec_id")
-    return (
-        adc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("adc_int") / PQ_QUANT, 6).alias("adc_dist"),
-            "rk",
-        )
+    sids, smat = _unit_sample(embeddings, sample_cap)
+    if not sids:
+        return empty_df(embeddings.sparkSession, ADC_SCHEMA)
+    nlist, nprobe = _ivf_lists(embeddings, nlist, nprobe, sample_cap)
+    return _ivfpq_search(
+        embeddings, sids, smat, _spherical_kmeans(smat, nlist, IVF_LLOYD),
+        nprobe, n_queries, k, m_sub, k_codes,
     )
 
 
@@ -2213,25 +2101,7 @@ def cluster_balanced_counts(
     k_eff = len(centers)
     quota = -(-int(n_total * frac) // k_eff)  # ceil
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            norms = np.linalg.norm(block, axis=1, keepdims=True)
-            ok = norms[:, 0] > 0
-            if not ok.any():
-                continue
-            block = block[ok] / norms[ok]
-            out = pdf.loc[ok, ["vec_id"]].copy()
-            out["cluster"] = np.argmax(block @ centers.T, axis=1).astype(
-                np.int32
-            )
-            yield out
-
-    assigned = corpus.mapInPandas(
-        assign, schema="vec_id bigint, cluster int"
-    )
+    assigned = _assign_clusters(corpus, centers, False)
     w = Window.partitionBy("cluster").orderBy(
         md5_hash64(F.concat(F.lit("balance|"), F.col("vec_id").cast("string"))),
         "vec_id",

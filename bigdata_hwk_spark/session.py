@@ -301,6 +301,12 @@ def bounded_window(*cols):
     return Window.orderBy(*cols)
 
 
+def log_round(name: str, rnd: int, value, secs: float) -> None:
+    """The per-round INFO record of an iterative operator on the engine
+    logger: args ``(name, round, probe value, seconds)``."""
+    _LOG.info("%s round %d: probe=%s, %.3f s", name, rnd, value, secs)
+
+
 def fixpoint(
     name: str, state: DataFrame, step, *, max_iter: int, probe=None
 ) -> DataFrame:
@@ -323,7 +329,8 @@ def fixpoint(
 
     - hop_distances: max_hops bounds its output; an empty frontier ends it.
     - mg_tree_fold: it stops at one chunk; an "unchanged" probe costs a round.
-    - the numpy Lloyd loops (similarity.py): their state is not a DataFrame.
+    - ``similarity._kmeans_lloyd``: its state is a centroid matrix, not a
+      DataFrame; it logs its rounds through ``log_round`` too.
     """
     last = None
     for rnd in range(1, max_iter + 1):
@@ -332,8 +339,7 @@ def fixpoint(
         if probe or rnd % 2 == 0 or rnd == max_iter:
             state = state.localCheckpoint()
         value = probe(state) if probe else None
-        secs = time.perf_counter() - t0
-        _LOG.info("%s round %d: probe=%s, %.3f s", name, rnd, value, secs)
+        log_round(name, rnd, value, time.perf_counter() - t0)
         if value is not None and value == last:
             return state
         last = value

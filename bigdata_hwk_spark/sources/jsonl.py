@@ -91,16 +91,19 @@ def documents_jsonl_roundtrip_profile(
     corrupt-capture column is asserted empty on a clean corpus).
 
     The shards land in a per-invocation temp directory (JSONL is a
-    DERIVED artifact here — the fixture directory is read-only)."""
+    DERIVED artifact here — the fixture directory is read-only), removed
+    before returning; a caller's ``work_dir`` is kept."""
+    import shutil
     import tempfile
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = work_dir or tempfile.mkdtemp(prefix="jsonl_roundtrip_")
-    write_documents_jsonl(docs, out)
-    clean, quarantine, release = split_corrupt(
-        read_documents_jsonl(spark, out)
-    )
+    release = lambda: None  # noqa: E731
     try:
+        write_documents_jsonl(docs, out)
+        clean, quarantine, release = split_corrupt(
+            read_documents_jsonl(spark, out)
+        )
         n_bad = quarantine.count()  # scalar metadata: clean corpus → 0
         # materialize the one-row profile WHILE the parse cache is hot,
         # then release it — returning the lazy plan instead would leave
@@ -116,6 +119,8 @@ def documents_jsonl_roundtrip_profile(
         ).collect()[0]
     finally:
         release()
+        if not work_dir:
+            shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         [row],
         "n_docs bigint, n_ids bigint, sum_chars bigint, "

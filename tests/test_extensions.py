@@ -390,29 +390,6 @@ def test_frame_sample_plan(spark):
     assert all(r.frame_idx % 30 == 0 for r in rows)
 
 
-def test_ann_ivf_recall_vs_bruteforce(spark):
-    """IVF top-k must be deterministic, schema-compatible with the exact
-    top-k, and recall the bulk of true neighbors when probing half the
-    inverted lists (the embeddings fixture is clustered, so true neighbors
-    concentrate in few lists)."""
-    from bigdata_hwk_spark.sources.tables import fan_out, load_table
-
-    embs = fan_out(load_table(spark, SF_CORRECT, "embeddings")).cache()
-    exact = SIM.cosine_topk_bruteforce(embs, n_queries=5, k=10).collect()
-    ivf1 = SIM.ann_ivf_topk(embs, n_queries=5, k=10).collect()
-    ivf2 = SIM.ann_ivf_topk(embs, n_queries=5, k=10).collect()
-    assert {tuple(r) for r in ivf1} == {tuple(r) for r in ivf2}  # deterministic
-    want = {(r.query_id, r.neighbor_id) for r in exact}
-    got = {(r.query_id, r.neighbor_id) for r in ivf1}
-    recall = len(want & got) / len(want)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
-    # every IVF hit must carry the exact cosine (rerank is exact)
-    exact_cos = {(r.query_id, r.neighbor_id): r.cosine for r in exact}
-    for r in ivf1:
-        if (r.query_id, r.neighbor_id) in exact_cos:
-            assert r.cosine == exact_cos[(r.query_id, r.neighbor_id)]
-
-
 def test_similar_pairs_gate_routes_to_lsh(spark):
     """Above the exact-path row gate, similar_pairs_threshold must degrade
     to the LSH plan (no driver collect of the corpus): same schema, no

@@ -3,6 +3,7 @@ quarantine (PERMISSIVE capture), schema-first typing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_hwk_spark.sources import jsonl as J
@@ -94,18 +95,29 @@ def test_orc_roundtrip_matches_oracle_smoke(spark):
     )
 
 
-def test_orc_roundtrip_removes_its_temp_dir(spark, tmp_path, monkeypatch):
-    """The profile's own ORC temp directory is gone once the call
-    returns, while the returned frame (and any plan derived from it)
-    still evaluates; a caller-supplied ``work_dir`` is kept."""
+# Every one-row roundtrip profile that builds into its own temp directory.
+TEMP_DIR_PROFILES = {
+    "jsonl": ("sources.jsonl", "documents_jsonl_roundtrip_profile"),
+    "orc": ("sources.orc", "documents_orc_roundtrip_profile"),
+    "pq_index": ("operators.similarity", "pq_index_roundtrip_profile"),
+    "text_index": ("operators.retrieval", "text_index_roundtrip_profile"),
+}
+
+
+@pytest.mark.parametrize("profile", sorted(TEMP_DIR_PROFILES))
+def test_roundtrip_profile_removes_its_temp_dir(
+    spark, tmp_path, monkeypatch, profile
+):
+    """The profile's own temp directory is gone once the call returns,
+    while the returned frame (and any plan derived from it) still
+    evaluates; a caller-supplied ``work_dir`` is kept."""
     import gc
+    import importlib
     import os
     import tempfile
 
-    from bigdata_hwk_spark.sources.orc import documents_orc_roundtrip_profile
-
-    from .conftest import SF_SMOKE
-
+    module, name = TEMP_DIR_PROFILES[profile]
+    run = getattr(importlib.import_module(f"bigdata_hwk_spark.{module}"), name)
     made = []
     mkdtemp = tempfile.mkdtemp
 
@@ -114,17 +126,17 @@ def test_orc_roundtrip_removes_its_temp_dir(spark, tmp_path, monkeypatch):
         return made[-1]
 
     monkeypatch.setattr(tempfile, "mkdtemp", spy)
-    df = documents_orc_roundtrip_profile(spark, SF_SMOKE)
+    df = run(spark, SF_SMOKE)
     assert len(made) == 1 and not os.path.exists(made[0])
-    [row] = df.select("n_docs", "n_ids").collect()
-    assert row.n_docs >= row.n_ids > 0
+    [row] = df.collect()
+    assert row[0] > 0  # each profile leads with a count of what it wrote
     del df
     gc.collect()
     assert not os.path.exists(made[0])
 
-    keep = str(tmp_path / "orc_keep")
-    kept = documents_orc_roundtrip_profile(spark, SF_SMOKE, work_dir=keep)
-    assert kept.collect()[0].n_docs == row.n_docs
+    keep = str(tmp_path / f"{profile}_keep")
+    kept = run(spark, SF_SMOKE, work_dir=keep)
+    assert kept.collect() == [row]
     assert os.listdir(keep) and len(made) == 1
 
 

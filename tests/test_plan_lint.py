@@ -287,3 +287,45 @@ def test_checkpoint_loops_only_via_session_fixpoint():
     assert offenders == [], (
         "checkpointing loop outside session.fixpoint:\n" + "\n".join(offenders)
     )
+
+
+# The functions of similarity.py that may seed with sequential_fft.
+FFT_SEED_SITES = {
+    "_spherical_kmeans": "the one seed + spherical Lloyd kernel of IVF, "
+    "IVFPQ, kmeans_fit and SemDeDup's giant-cluster split",
+    "pq_train_books": "per-subspace L2 codebooks: a different metric "
+    "and no normalization",
+}
+
+
+def test_quantizers_seed_only_via_the_shared_kernel():
+    """Every quantizer in ``operators/similarity.py`` seeds through
+    ``_spherical_kmeans`` (or trains PQ codebooks in ``pq_train_books``):
+    a private seed + Lloyd copy drifts, as the IVF copy that kept
+    zero-norm vectors did."""
+    import ast
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bigdata_hwk_spark",
+        "operators",
+        "similarity.py",
+    )
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    callers = {}
+    # ast.walk is breadth-first: an inner function overwrites the entry
+    # its enclosing function made for the same call
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and "sequential_fft" in {
+                    getattr(node.func, "id", None),
+                    getattr(node.func, "attr", None),
+                }:
+                    callers[node.lineno] = fn.name
+    assert set(callers.values()) == set(FFT_SEED_SITES), (
+        "sequential_fft called outside the shared kernel:\n"
+        + "\n".join(f"similarity.py:{ln} in {fn}" for ln, fn in callers.items())
+    )

@@ -1,6 +1,10 @@
-"""PQ-ADC search: ADC sums equal an independent NumPy reimplementation
-exactly, recall vs brute force clears a floor, layout determinism, and
-the compression arithmetic documented in the docstring holds."""
+"""Similarity-search pins: PQ-ADC search (ADC sums equal an independent
+NumPy reimplementation exactly, recall vs brute force clears a floor,
+layout determinism, the compression arithmetic documented in the
+docstring), IVF and IVFPQ (recall, probed-list containment, zero-norm
+vectors), the persisted PQ index, semantic decontamination,
+cluster-balanced sampling, the LSH capacity diagnostic and MMR
+reranking."""
 
 from __future__ import annotations
 
@@ -8,7 +12,8 @@ import numpy as np
 import pytest
 
 from bigdata_hwk_spark.operators import similarity as SIM
-from tests.conftest import SF_SMOKE
+from bigdata_hwk_spark.sources.tables import fan_out, load_table
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _emb(spark, sf_dir):
@@ -105,6 +110,50 @@ def test_pq_adc_matches_numpy_reimplementation(spark, pq_result):
             adc_int += int(round(d2 * SIM.PQ_QUANT))
         # the operator display-rounds adc_int/QUANT to 6 decimals
         assert abs(r["adc_dist"] - round(adc_int / SIM.PQ_QUANT, 6)) < 5e-7, r
+
+
+# --- IVF (coarse lists, exact rerank) ---
+
+
+def test_ann_ivf_recall_vs_bruteforce(spark):
+    """IVF top-k must be deterministic, schema-compatible with the exact
+    top-k, and recall the bulk of true neighbors when probing a quarter
+    of the inverted lists (the embeddings fixture is clustered, so true
+    neighbors concentrate in few lists)."""
+    embs = fan_out(load_table(spark, SF_CORRECT, "embeddings")).cache()
+    exact = SIM.cosine_topk_bruteforce(embs, n_queries=5, k=10).collect()
+    ivf1 = SIM.ann_ivf_topk(embs, n_queries=5, k=10).collect()
+    ivf2 = SIM.ann_ivf_topk(embs, n_queries=5, k=10).collect()
+    assert {tuple(r) for r in ivf1} == {tuple(r) for r in ivf2}  # deterministic
+    want = {(r.query_id, r.neighbor_id) for r in exact}
+    got = {(r.query_id, r.neighbor_id) for r in ivf1}
+    recall = len(want & got) / len(want)
+    assert recall >= 0.5, f"IVF recall too low: {recall}"
+    # every IVF hit must carry the exact cosine (rerank is exact)
+    exact_cos = {(r.query_id, r.neighbor_id): r.cosine for r in exact}
+    for r in ivf1:
+        if (r.query_id, r.neighbor_id) in exact_cos:
+            assert r.cosine == exact_cos[(r.query_id, r.neighbor_id)]
+
+
+def test_zero_norm_vector_is_dropped_by_ivf_and_ivfpq(spark):
+    """A zero vector (cosine undefined) among the queries is neither
+    listed nor queried: with vector 3 zeroed, IVF and IVFPQ return what
+    they return on the corpus without it."""
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(400, 16))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    zeroed = rows[:3] + [(3, [0.0] * 16)] + rows[4:]
+
+    def run(fn, corpus, **kw):
+        emb = spark.createDataFrame(corpus, "vec_id bigint, embedding array<float>")
+        # nlist is explicit so the two corpus sizes share one list count
+        return sorted(map(tuple, fn(emb, nlist=20, **kw).collect()))
+
+    for fn, kw in [(SIM.ann_ivf_topk, {}), (SIM.ann_ivfpq_topk, {"m_sub": 4})]:
+        want = run(fn, rows[:3] + rows[4:], **kw)
+        assert {r[0] for r in want} == {0, 1, 2, 4}
+        assert run(fn, zeroed, **kw) == want, fn.__name__
 
 
 # --- IVFPQ (coarse lists + residual PQ) ---
@@ -402,3 +451,62 @@ def test_pq_index_queries_novel_vectors(spark, tmp_path):
         ).count()
         == 0
     )
+
+
+# ---------------------------------------------------------------------------
+# LSH capacity diagnostic and MMR reranking
+
+
+def test_ann_candidate_counts_diagnostic(spark):
+    """The capacity diagnostic's signature-row count follows the config
+    identity (n x tables x probes) and the candidate count bounds the
+    pair query's real candidate work from above (pre-dedup)."""
+    embs = fan_out(load_table(spark, SF_CORRECT, "embeddings"))
+    row = SIM.ann_candidate_counts(embs).collect()[0]
+    assert (
+        row.n_signature_rows
+        == row.n_vectors * SIM.ANN_TABLES * SIM.ANN_PROBES
+    )
+    n_pairs = SIM.ann_lsh_pairs(embs, tau=-1.0).count()  # every candidate
+    assert 0 < n_pairs <= row.n_candidates
+
+
+def test_mmr_rerank_hand_case_and_properties(spark):
+    """MMR by hand: first pick is the relevance argmax; at lam<1 a
+    near-duplicate of the first pick is deferred behind a diverse
+    lower-relevance doc; at lam=1 the order reduces to cosine top-k."""
+    # query 0 = [1,0]; doc 10 = closest; doc 11 = near-duplicate of 10;
+    # doc 12 = orthogonal (diverse, near-zero relevance)
+    embs = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0]),
+            (10, [0.99, 0.1]),
+            (11, [0.98, 0.11]),
+            (12, [0.0, 1.0]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    got = [
+        (r.doc_id, r.rnk)
+        for r in SIM.mmr_rerank_topk(
+            embs, n_queries=1, k=3, pool=3, lam=0.3
+        ).orderBy("rnk").collect()
+    ]
+    # round 2 at lam=.3: near-dup 11 scores .3*.99376 - .7*sim(10,11≈1.0)
+    # = -.402; orthogonal 12 scores .3*0 - .7*sim(12,10=.1005) = -.070
+    # -> diversity wins, the near-duplicate is deferred to last
+    assert [d for d, _ in got] == [10, 12, 11]
+
+    lam1 = [
+        r.doc_id
+        for r in SIM.mmr_rerank_topk(
+            embs, n_queries=1, k=3, pool=3, lam=1.0
+        ).orderBy("rnk").collect()
+    ]
+    cos = [
+        r.neighbor_id
+        for r in SIM.cosine_topk_bruteforce(embs, n_queries=1, k=3)
+        .orderBy("rk")
+        .collect()
+    ]
+    assert lam1 == cos

@@ -468,49 +468,6 @@ def test_linkage_blocking_metrics_empty_table(spark):
     assert con.execute(LK.linkage_blocking_metrics_sql()).fetchall() == []
 
 
-def test_mmr_rerank_hand_case_and_properties(spark):
-    """MMR by hand: first pick is the relevance argmax; at lam<1 a
-    near-duplicate of the first pick is deferred behind a diverse
-    lower-relevance doc; at lam=1 the order reduces to cosine top-k."""
-    from bigdata_hwk_spark.operators import similarity as SIM
-
-    # query 0 = [1,0]; doc 10 = closest; doc 11 = near-duplicate of 10;
-    # doc 12 = orthogonal (diverse, near-zero relevance)
-    embs = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (10, [0.99, 0.1]),
-            (11, [0.98, 0.11]),
-            (12, [0.0, 1.0]),
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
-    got = [
-        (r.doc_id, r.rnk)
-        for r in SIM.mmr_rerank_topk(
-            embs, n_queries=1, k=3, pool=3, lam=0.3
-        ).orderBy("rnk").collect()
-    ]
-    # round 2 at lam=.3: near-dup 11 scores .3*.99376 - .7*sim(10,11≈1.0)
-    # = -.402; orthogonal 12 scores .3*0 - .7*sim(12,10=.1005) = -.070
-    # -> diversity wins, the near-duplicate is deferred to last
-    assert [d for d, _ in got] == [10, 12, 11]
-
-    lam1 = [
-        r.doc_id
-        for r in SIM.mmr_rerank_topk(
-            embs, n_queries=1, k=3, pool=3, lam=1.0
-        ).orderBy("rnk").collect()
-    ]
-    cos = [
-        r.neighbor_id
-        for r in SIM.cosine_topk_bruteforce(embs, n_queries=1, k=3)
-        .orderBy("rk")
-        .collect()
-    ]
-    assert lam1 == cos
-
-
 def test_linkage_blocking_metrics_hand_case(spark):
     """Blocking metrics on a 3-record planted set, every count checked
     by hand; completeness 1.0 is the blocking-recall invariant."""

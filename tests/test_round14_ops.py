@@ -10,13 +10,10 @@ semantics under the restructured plan.
   the fused form silently dropped it).
 * local_df: a None in a numeric column degrades to the classic (pickled)
   createDataFrame path instead of NaN-widening (r13 ADVICE).
-* kmeans_fit: the persisted-corpus loop returns bit-identical centroids
-  to a fit handed a pre-built corpus projection.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -110,15 +107,3 @@ def test_local_df_none_numeric_falls_back(spark):
     out = local_df(spark, rows, "a bigint, b double").collect()
     got = {(r.a, r.b) for r in out}
     assert got == {(1, 2.5), (2, None)}
-
-
-def test_kmeans_fit_corpus_param_is_identical(spark):
-    from bigdata_hwk_spark.operators import similarity as S
-    from bigdata_hwk_spark.sources.tables import fan_out
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    a = S.kmeans_fit(emb, k=4, iters=2)
-    corpus = fan_out(emb.select("vec_id", "embedding"))
-    b = S.kmeans_fit(emb, k=4, iters=2, corpus=corpus)
-    assert a.shape == b.shape
-    assert np.array_equal(a, b)

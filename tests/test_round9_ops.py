@@ -158,24 +158,6 @@ def test_compaction_verified_by_checksum(spark, tmp_path):
     assert after_parts == before_parts
 
 
-# ------------------------------------------------- LSH capacity probe
-def test_ann_candidate_counts_diagnostic(spark):
-    """The capacity diagnostic's signature-row count follows the config
-    identity (n x tables x probes) and the candidate count bounds the
-    pair query's real candidate work from above (pre-dedup)."""
-    from bigdata_hwk_spark.operators import similarity as SIM
-    from bigdata_hwk_spark.sources.tables import fan_out
-
-    embs = fan_out(load_table(spark, SF_CORRECT, "embeddings"))
-    row = SIM.ann_candidate_counts(embs).collect()[0]
-    assert (
-        row.n_signature_rows
-        == row.n_vectors * SIM.ANN_TABLES * SIM.ANN_PROBES
-    )
-    n_pairs = SIM.ann_lsh_pairs(embs, tau=-1.0).count()  # every candidate
-    assert 0 < n_pairs <= row.n_candidates
-
-
 # ------------------------------------------- partition checksums / diff
 def test_partition_checksums_sum_to_table_checksum(spark):
     """Per-partition n_rows sum to the table total, and xor-folding the

@@ -11,6 +11,8 @@ monotone spherical-k-means objective.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pytest
 
@@ -21,9 +23,9 @@ from bigdata_hwk_spark.operators.similarity import (
     semdedup_kept_counts,
     semdedup_prune,
 )
-from bigdata_hwk_spark.sources.tables import load_table
+from bigdata_hwk_spark.sources.tables import fan_out, load_table
 
-from .conftest import SF_CORRECT
+from .conftest import SF_CORRECT, SF_SMOKE
 
 
 def _emb_df(spark, rows):
@@ -234,3 +236,31 @@ def test_giant_cluster_cap_subclusters_within_budget(spark):
         df.repartition(13), k=4, tau=0.9, iters=2, max_cluster_rows=50
     ).collect()
     assert sorted(map(tuple, capped)) == sorted(map(tuple, again))
+
+
+def test_kmeans_fit_corpus_param_is_identical(spark):
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    a = kmeans_fit(emb, k=4, iters=2)
+    corpus = fan_out(emb.select("vec_id", "embedding"))
+    b = kmeans_fit(emb, k=4, iters=2, corpus=corpus)
+    assert a.shape == b.shape
+    assert np.array_equal(a, b)
+
+
+def test_kmeans_logs_every_round(spark, caplog):
+    """Each distributed Lloyd round logs name, round, mean max-cosine and
+    seconds on the engine logger (the ``session.fixpoint`` record); the
+    logged means are the ``inertia_out`` trace."""
+    caplog.set_level(logging.INFO, logger="bigdata_hwk_spark")
+    trace: list[float] = []
+    kmeans_fit(
+        load_table(spark, SF_SMOKE, "embeddings"), k=4, iters=3, inertia_out=trace
+    )
+    rounds = [
+        r.args
+        for r in caplog.records
+        if r.name == "bigdata_hwk_spark" and r.args and r.args[0] == "kmeans_fit"
+    ]
+    assert [r[1] for r in rounds] == [1, 2, 3]
+    assert [r[2] for r in rounds] == trace
+    assert all(r[3] >= 0 for r in rounds)
