@@ -8,11 +8,13 @@ Apriori (Agrawal & Srikant 1994, public): with a support cut, 2-itemset
 rules need exactly one pair count plus the item counts — no candidate
 explosion, no iterative lattice walk.
 
-Scale shape: the basket self-join fans out quadratically in BASKET SIZE,
-not in corpus size — TPC-H-style orders carry ≤ ~13 distinct parts (the
-``copurchase_edges`` bound at graph.py), so edge volume is O(|lineitem|)
-with a small constant. The pair aggregate is map-side combined on
-(antecedent, consequent); the item-count table is |parts|-sized and AQE
+Scale shape: the basket pairs (``operators.pairs.cooccurring_pairs``)
+fan out quadratically in BASKET SIZE, not in corpus size — TPC-H orders
+carry ≤ 7 lineitems, so pair volume is O(|lineitem|) with a small
+constant, and a basket of more than ``graph.COPURCHASE_MAX_BASKET``
+(2048) distinct parts fails the query instead of fanning out. The pair
+aggregate is map-side combined on (u, v); the item-count table is
+|parts|-sized and AQE
 broadcasts it into both metric joins; the basket total is a ONE-ROW
 aggregate broadcast in the scalar-subquery shape (the
 ``unigram_surprise_scores`` device). Confidence/lift are ratios of exact
@@ -29,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 
 from ..session import bounded_window
+from . import graph
+from .pairs import cooccurring_pairs
 from pyspark.sql import functions as F
 
 ASSOC_MIN_PAIR_COUNT = 3
@@ -56,25 +60,28 @@ def association_rules_topk(
     pair_cnt / cnt(antecedent), ``lift`` = confidence · n_baskets /
     cnt(consequent), both rounded to 6. Ties break by (antecedent,
     consequent) so the listing is deterministic.
+
+    Limit: an order with more than ``graph.COPURCHASE_MAX_BASKET`` (2048)
+    distinct parts fails the query when it runs (Spark ``raise_error``)
+    with "copurchase basket exceeds 2048 parts — the local pair
+    explosion assumes bounded per-order fan-out".
     """
     from ..session import persist_once
 
-    # The distinct basket-item table feeds FOUR consumers (both sides of
-    # the pair self-join, the item counts, the basket total); persist it
-    # so the lineitem scan + distinct run once, not four times. The
+    # The distinct basket-item table feeds three consumers (the pair
+    # kernel, the item counts, the basket total); persist it so the
+    # lineitem scan + distinct run once, not three times. The
     # result stays LAZY, so this must be the session-lifetime
     # ``persist_once`` (CacheManager-deduplicated across repeated
     # invocations), not a scoped persist released before execution.
     li = persist_once(basket_items(lineitem))
-    a = li.alias("a")
-    b = li.alias("b")
-    # Unordered pair counts once (a.pk < b.pk); both rule directions are
+    # Unordered pair counts once (u < v); both rule directions are
     # emitted afterwards by a cheap union on the already-aggregated pairs.
     pairs = (
-        a.join(b, "ok")
-        .filter(F.col("a.pk") < F.col("b.pk"))
-        .groupBy(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .agg(F.count(F.lit(1)).alias("pair_cnt"))
+        cooccurring_pairs(
+            li, "ok", "pk", graph.COPURCHASE_MAX_BASKET, graph.COPURCHASE_LIMIT
+        )
+        .withColumnRenamed("n", "pair_cnt")
         .filter(F.col("pair_cnt") >= min_pair_count)
     )
     directed = pairs.select(
@@ -185,8 +192,8 @@ def frequent_triples_topk(
     frequent 3-itemsets — the L3 rung of Apriori above the pair rules.
 
     Scale devices: (1) the 3-way basket self-join fans out by C(basket,3)
-    — bounded by the ≤ ~13-distinct-part basket cap, so candidate volume
-    is O(|lineitem|) with a small constant; (2) the APRIORI PRUNE:
+    — TPC-H orders carry ≤ 7 lineitems, so candidate volume is
+    O(|lineitem|) with a small constant; (2) the APRIORI PRUNE:
     candidates are semi-joined against the frequent-PAIR table on all
     three sub-pairs BEFORE the triple count, so at production basket
     sizes the count aggregate only sees candidates whose every edge
@@ -198,31 +205,22 @@ def frequent_triples_topk(
 
     Determinism: counts are exact integers; support is one integer
     ratio rounded to 6; ordering is (cnt desc, items asc).
+
+    Limit: the pair stage raises as ``association_rules_topk`` does, on
+    an order with more than ``graph.COPURCHASE_MAX_BASKET`` (2048)
+    distinct parts.
     """
     from ..session import persist_once
 
     li = persist_once(basket_items(lineitem))
-    a, b, c = li.alias("a"), li.alias("b"), li.alias("c")
     fp = persist_once(
-        a.join(b, "ok")
-        .filter(F.col("a.pk") < F.col("b.pk"))
-        .groupBy(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        cooccurring_pairs(
+            li, "ok", "pk", graph.COPURCHASE_MAX_BASKET, graph.COPURCHASE_LIMIT
+        )
+        .filter(F.col("n") >= min_count)
         .select("u", "v")
     )
-    cand = (
-        a.join(b, "ok")
-        .filter(F.col("a.pk") < F.col("b.pk"))
-        .join(c, "ok")
-        .filter(F.col("b.pk") < F.col("c.pk"))
-        .select(
-            "ok",
-            F.col("a.pk").alias("ia"),
-            F.col("b.pk").alias("ib"),
-            F.col("c.pk").alias("ic"),
-        )
-    )
+    cand = _basket_triples(li)
     for lo, hi in (("ia", "ib"), ("ib", "ic"), ("ia", "ic")):
         cand = cand.join(
             F.broadcast(fp.select(F.col("u").alias(lo), F.col("v").alias(hi))),
@@ -252,6 +250,24 @@ def frequent_triples_topk(
     )
     return top.withColumn("rnk", F.row_number().over(w)).select(
         "rnk", "item_a", "item_b", "item_c", "triple_cnt", "support"
+    )
+
+
+def _basket_triples(li: DataFrame) -> DataFrame:
+    """(ok, ia, ib, ic) with ia < ib < ic: every item triple of every
+    basket, the 3-way self-join the Apriori prune then filters."""
+    a, b, c = li.alias("a"), li.alias("b"), li.alias("c")
+    return (
+        a.join(b, "ok")
+        .filter(F.col("a.pk") < F.col("b.pk"))
+        .join(c, "ok")
+        .filter(F.col("b.pk") < F.col("c.pk"))
+        .select(
+            "ok",
+            F.col("a.pk").alias("ia"),
+            F.col("b.pk").alias("ib"),
+            F.col("c.pk").alias("ic"),
+        )
     )
 
 

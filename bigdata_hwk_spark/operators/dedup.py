@@ -26,7 +26,7 @@ hashing.py), so every operator here is fully oracle-checkable in DuckDB —
 including the LSH banding itself, not just the final pair set.
 
 Scale notes: the shingle inverted index applies a document-frequency cut
-on ultra-hot shingles (``shingle_df_cut``) before every candidate join —
+on ultra-hot shingles (``_shingle_index``) before every candidate join —
 they generate quadratic candidates but can't push Jaccard above the
 threshold on their own; the banded joins here shuffle on
 (band, signature) / (chunk, value) keys whose cardinality grows with the
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..session import local_df
 
 from ..functions.hashing import md5_hash64, md5_hash64_sql
+from .pairs import cooccurring_pairs
 
 SHINGLE_W = 3          # words per shingle
 MINHASH_H = 16         # hash functions
@@ -113,20 +114,18 @@ def doc_shingles(
 # the standard recall-safe-in-practice guard at corpus scale. The default is
 # far above any fixture document frequency, so every DuckDB oracle (which
 # has no cut) stays exact at test SFs while the plan carries the filter.
+# It is also the raising pair-kernel bound where no cut applies: the uncut
+# verify table and the MinHash LSH buckets.
 SHINGLE_DF_CUT = 100_000
 
 
-def shingle_df_cut(ex: DataFrame, cut: int = SHINGLE_DF_CUT) -> DataFrame:
-    """Drop ultra-hot shingles (document frequency > ``cut``) from the
-    inverted index. Implemented as a count-over-window on ``sh`` — one
-    shuffle that also co-locates the index by shingle, the very key the
-    downstream candidate equi-join needs."""
+def _doc_freq(ex: DataFrame) -> DataFrame:
+    """``ex`` plus ``__df``, the number of rows (documents, in a
+    distinct shingle table) sharing the row's shingle: a count-over-window
+    on ``sh`` — one shuffle that also co-locates the index by shingle,
+    the very key the downstream pair kernel groups on."""
     w = Window.partitionBy("sh")
-    return (
-        ex.withColumn("__df", F.count(F.lit(1)).over(w))
-        .filter(F.col("__df") <= cut)
-        .drop("__df")
-    )
+    return ex.withColumn("__df", F.count(F.lit(1)).over(w))
 
 
 def shingles_sql(
@@ -196,32 +195,34 @@ FROM g
 # Exact n-gram Jaccard near-dup pairs (inverted-index join)
 # ---------------------------------------------------------------------------
 
-def _pair_jaccard(ex: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard) for every pair sharing ≥1 shingle."""
+def _shingle_pairs(ex: DataFrame, max_group: int) -> DataFrame:
+    """(doc_a, doc_b, common): every pair sharing ≥ 1 shingle and the
+    number it shares; a shingle in more than ``max_group`` documents
+    raises."""
+    return cooccurring_pairs(
+        ex, "sh", "doc_id", max_group,
+        f"shingle document frequency exceeds {max_group} documents — the "
+        "pair explosion assumes bounded posting lists",
+    ).toDF("doc_a", "doc_b", "common")
+
+
+def _pair_common(ex: DataFrame, max_group: int) -> DataFrame:
+    """``_shingle_pairs`` plus both shingle-set sizes ``na`` and ``nb``."""
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nsh"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    common = _shingle_pairs(ex, max_group)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("nsh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("nsh").alias("nb"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("common")
-                / (F.col("na") + F.col("nb") - F.col("common"))
-            ).alias("jaccard"),
-        )
+    return common.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _pair_jaccard(ex: DataFrame, max_group: int) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for every pair sharing ≥1 shingle."""
+    return _pair_common(ex, max_group).select(
+        "doc_a",
+        "doc_b",
+        (
+            F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+        ).alias("jaccard"),
     )
 
 
@@ -230,24 +231,24 @@ def _shingle_index(
 ) -> tuple[DataFrame, DataFrame | None]:
     """(cut_table, verify_table) for candidate generation / verification.
 
-    ``cut_table`` (persisted) is the hot-shingle-cut inverted index — its
+    Both are views of ONE persisted table: the distinct (doc_id, sh)
+    shingles plus their document frequency ``__df`` (``_doc_freq``). Its
     window shuffle co-locates rows by shingle, exactly the partitioning
-    every downstream candidate equi-join wants, so self-joins on it are
-    exchange-free. ``verify_table`` is None when the cut dropped ZERO
-    rows (probed with two counts on persisted data): then the cut table
-    IS the full table and verification on it is provably exact — the
-    common case, and every fixture SF. When the cut is active,
-    ``verify_table`` is the persisted UNCUT table so reported Jaccard is
-    true full-set Jaccard, not truncated-set Jaccard (round-2 ADVICE) —
-    the honest 2× cost is paid only when hot shingles actually exist.
+    the pair kernel's groupBy on ``sh`` wants, so pairs built on it are
+    exchange-free. One ``max(__df)`` probe decides the rest.
+    ``verify_table`` is None when no shingle exceeds ``cut``: then the
+    cut table IS the full table and verification on it is provably
+    exact — the common case, and every fixture SF. When the cut is
+    active, ``cut_table`` is the ``__df ≤ cut`` filter of the cache and
+    ``verify_table`` the whole cache, so reported Jaccard is true
+    full-set Jaccard, not truncated-set Jaccard (round-2 ADVICE).
     """
-    sh_all = doc_shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    ex_cut = shingle_df_cut(sh_all, cut).persist(StorageLevel.MEMORY_AND_DISK)
-    if ex_cut.count() == sh_all.count():
-        # ex_cut is materialized; the raw table's cache is no longer needed
-        sh_all.unpersist()
-        return ex_cut, None
-    return ex_cut, sh_all
+    sh = _doc_freq(doc_shingles(documents)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    if (sh.agg(F.max("__df")).collect()[0][0] or 0) <= cut:
+        return sh, None
+    return sh.filter(F.col("__df") <= cut), sh
 
 
 def ngram_jaccard_pairs(
@@ -267,47 +268,36 @@ def ngram_jaccard_pairs(
     shingle-partitioned persisted table; only an active cut pays the
     two-phase candidates→uncut-verify cost.
 
-    ``index`` injects a precomputed ``_shingle_index`` result — the
-    registry builds ONE persisted shingle table per (session, corpus)
-    and shares it between the Jaccard and MinHash families (each call
-    otherwise re-shingles and re-persists the corpus)."""
+    ``index`` injects a ``_shingle_index`` result built with the same
+    ``cut`` — the registry builds ONE persisted shingle table per
+    (session, corpus) and shares it between the Jaccard and MinHash
+    families (each call otherwise re-shingles and re-persists the
+    corpus).
+
+    Limit: a shingle kept by the cut is in at most ``cut`` documents by
+    construction; verification raises (``raise_error``) on a shingle
+    shared by more than ``SHINGLE_DF_CUT`` candidate documents."""
     ex_cut, sh_all = index if index is not None else _shingle_index(documents, cut)
     if sh_all is None:
-        return (
-            _pair_jaccard(ex_cut)
-            .filter(F.col("jaccard") >= tau)
-            .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-        )
-    a = ex_cut.alias("a")
-    b = ex_cut.alias("b")
-    cand = (
-        a.join(b, "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    return (
-        _verify_candidates(sh_all, cand, tau)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+        pairs = _pair_jaccard(ex_cut, cut).filter(F.col("jaccard") >= tau)
+    else:
+        cand = _shingle_pairs(ex_cut, cut).drop("common")
+        pairs = _verify_candidates(sh_all, cand, tau)
+    return pairs.select(
+        "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
-def _verify_candidates(
-    verify_ex: DataFrame, cand: DataFrame, tau: float
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs
-    against ``verify_ex`` (the full shingle table, or the cut table when
-    the cut is a proven no-op): restrict the index to candidate docs
-    (left-semi, no row widening), compute full-set pair Jaccard there,
-    keep candidates meeting tau. Shared by the inverted-index and LSH
-    candidate generators.
+def _candidate_index(
+    verify_ex: DataFrame, cand: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(persisted ``cand``, ``verify_ex`` restricted to candidate docs).
 
     ``cand`` is persisted here — it has three consumers (both sides of
     the doc union + the final pair join); unpersisted, each replans the
     full candidate-generation pipeline from scratch (measured 3× wall on
-    the inverted-index path)."""
+    the inverted-index path). The restriction is a left-semi join, so no
+    row widening."""
     from ..session import persist_once
 
     cand = persist_once(cand, StorageLevel.MEMORY_AND_DISK)
@@ -318,8 +308,21 @@ def _verify_candidates(
     )
     # no broadcast hint: AQE auto-broadcasts when the candidate set is
     # small, falls back to a shuffled semi-join when it isn't
-    ex = verify_ex.join(cand_docs, "doc_id", "left_semi")
-    jac = _pair_jaccard(ex)
+    return cand, verify_ex.join(cand_docs, "doc_id", "left_semi")
+
+
+def _verify_candidates(
+    verify_ex: DataFrame, cand: DataFrame, tau: float
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs
+    against ``verify_ex`` (the full shingle table, or the cut table when
+    the cut is a proven no-op): compute full-set pair Jaccard on the
+    candidate docs' shingles, keep candidates meeting tau. Shared by the
+    inverted-index, prefix-filter and LSH candidate generators; a
+    shingle shared by more than ``SHINGLE_DF_CUT`` candidate documents
+    raises."""
+    cand, ex = _candidate_index(verify_ex, cand)
+    jac = _pair_jaccard(ex, SHINGLE_DF_CUT)
     return cand.join(jac, ["doc_a", "doc_b"]).filter(F.col("jaccard") >= tau)
 
 
@@ -354,25 +357,11 @@ jac AS (
 CONTAINMENT_TAU = 0.6
 
 
-def _pair_containment(ex: DataFrame) -> DataFrame:
+def _pair_containment(ex: DataFrame, max_group: int) -> DataFrame:
     """(src_doc, dst_doc, containment) for every ORDERED pair sharing
     ≥ 1 shingle: the share of src's distinct shingles present in dst.
-    One undirected common-count join emits both directions (no second
-    self-join)."""
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nsh"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    common = (
-        a.join(b, "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("nsh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("nsh").alias("nb"))
-    both = common.join(sa, "doc_a").join(sb, "doc_b")
+    One undirected common count emits both directions."""
+    both = _pair_common(ex, max_group)
     fwd = both.select(
         F.col("doc_a").alias("src_doc"),
         F.col("doc_b").alias("dst_doc"),
@@ -402,50 +391,26 @@ def containment_pairs(
     NOT lossless for containment the way the prefix filter is for
     Jaccard — hence candidates are every co-shingled pair and tau is
     applied only at verify time, on full sets.
+
+    Limit: as ``ngram_jaccard_pairs`` — ``cut`` bounds the candidate
+    pairs, and verification raises on a shingle shared by more than
+    ``SHINGLE_DF_CUT`` candidate documents.
     """
     ex_cut, sh_all = index if index is not None else _shingle_index(documents, cut)
     if sh_all is None:
-        return (
-            _pair_containment(ex_cut)
-            .filter(F.col("containment") >= tau)
-            .select(
-                "src_doc", "dst_doc",
-                F.round("containment", 6).alias("containment"),
-            )
-        )
-    a = ex_cut.alias("a")
-    b = ex_cut.alias("b")
-    cand = (
-        a.join(b, "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    from ..session import persist_once
-
-    cand = persist_once(cand, StorageLevel.MEMORY_AND_DISK)
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    ex = sh_all.join(cand_docs, "doc_id", "left_semi")
-    return (
-        _pair_containment(ex)
-        .join(
-            cand.select("doc_a", "doc_b")
-            .union(cand.select(F.col("doc_b"), F.col("doc_a")))
-            .toDF("src_doc", "dst_doc"),
+        pairs = _pair_containment(ex_cut, cut)
+    else:
+        cand = _shingle_pairs(ex_cut, cut).drop("common")
+        cand, ex = _candidate_index(sh_all, cand)
+        pairs = _pair_containment(ex, SHINGLE_DF_CUT).join(
+            cand.union(cand.select("doc_b", "doc_a")).toDF(
+                "src_doc", "dst_doc"
+            ),
             ["src_doc", "dst_doc"],
             "left_semi",
         )
-        .filter(F.col("containment") >= tau)
-        .select(
-            "src_doc", "dst_doc",
-            F.round("containment", 6).alias("containment"),
-        )
+    return pairs.filter(F.col("containment") >= tau).select(
+        "src_doc", "dst_doc", F.round("containment", 6).alias("containment")
     )
 
 
@@ -586,28 +551,23 @@ def duplication_profile(
     (pair-level near-dup detection says WHICH docs collide; this says HOW
     MUCH of each doc is corpus boilerplate, feeding quality filtering).
 
-    Plan: one count-over-window on ``sh`` (the same shuffle shape as
-    ``shingle_df_cut`` — co-locates by shingle), then a per-doc hash
-    aggregation. Two shuffles total, no joins, no pair explosion — cost
-    is O(total shingles) regardless of how duplicated the corpus is, so
-    the shape survives 100 TB where any pair-based formulation would
-    blow up on heavy boilerplate.
+    Plan: one count-over-window on ``sh`` (``_doc_freq`` — co-locates by
+    shingle), then a per-doc hash aggregation. Two shuffles total, no
+    joins, no pair explosion — cost is O(total shingles) regardless of
+    how duplicated the corpus is, so the shape survives 100 TB where any
+    pair-based formulation would blow up on heavy boilerplate.
 
-    ``index`` injects the registry's shared ``_shingle_index`` result; the
-    UNCUT table is used (duplication of a hot shingle is exactly the
-    signal here). When the shared table is the persisted cut table with
-    no active cut, it is already shingle-partitioned, so the window runs
-    exchange-free.
+    ``index`` injects the registry's shared ``_shingle_index`` result; its
+    UNCUT table already carries ``__df`` (duplication of a hot shingle is
+    exactly the signal here), so no window runs at all.
     """
     if index is not None:
         ex_cut, sh_all = index
-        sh = sh_all if sh_all is not None else ex_cut
+        flagged = sh_all if sh_all is not None else ex_cut
     else:
-        sh = doc_shingles(documents)
-    w = Window.partitionBy("sh")
+        flagged = _doc_freq(doc_shingles(documents))
     # df counts DOCS per shingle (doc_shingles is distinct per doc), so
     # df >= 2 ⇔ the shingle exists in some other document.
-    flagged = sh.withColumn("__df", F.count(F.lit(1)).over(w))
     return (
         flagged.groupBy("doc_id")
         .agg(
@@ -782,6 +742,10 @@ def minhash_lsh_pairs(
     candidate pair, and every candidate is verified against the exact
     shingle Jaccard downstream, so the output has no false positives
     (LSH only affects recall, tuned by (H, bands, tau)).
+
+    Limit: an LSH bucket holding more than ``SHINGLE_DF_CUT`` documents,
+    or a shingle shared by more than ``SHINGLE_DF_CUT`` candidate
+    documents, fails the query (``raise_error``) instead of fanning out.
     """
     r = h // bands
     # One persisted shingle table feeds signature building, candidate
@@ -797,21 +761,15 @@ def minhash_lsh_pairs(
     # case and then verifies on the (identical) cut table.
     ex_cut, sh_all = index if index is not None else _shingle_index(documents, cut)
     verify_ex = ex_cut if sh_all is None else sh_all
-    band_sig = _band_keys_from_shingles(ex_cut, h, r)
-    a = band_sig.alias("a")
-    b = band_sig.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        # _verify_candidates persists cand (three consumers there)
-    )
+    # _verify_candidates persists cand (three consumers there)
+    cand = cooccurring_pairs(
+        _band_keys_from_shingles(ex_cut, h, r),
+        "bk",
+        "doc_id",
+        SHINGLE_DF_CUT,
+        f"LSH bucket exceeds {SHINGLE_DF_CUT} documents — the pair "
+        "explosion assumes bounded buckets",
+    ).select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b"))
     # Verify ONLY the LSH candidates, against the full shingle sets —
     # at corpus scale the full pair-Jaccard table is quadratic and would
     # defeat the point of LSH banding.
@@ -1250,6 +1208,9 @@ def incremental_lsh_pairs(
     minhash parameters are all computed over the union, so the oracle
     (full-corpus SQL filtered to cross pairs) matches by construction.
     Doc ids must be disjoint across the two inputs.
+
+    Limit: verification raises (``raise_error``) on a shingle shared by
+    more than ``SHINGLE_DF_CUT`` candidate documents.
     """
     r = h // bands
     tagged = incoming.select("doc_id", "text").withColumn(
@@ -1678,20 +1639,21 @@ def prefix_filter_pairs(
     ``ngram_jaccard_pairs_sql`` — an independent formulation (full
     inverted-index join) that must produce the identical pair set.
 
-    Shuffle ledger: df agg on sh (map-side combined), index⋈df
-    co-partitioned on sh, one per-doc window on doc_id, prefix self-join
+    Shuffle ledger: the index already carries each shingle's document
+    frequency (``__df``), one per-doc window on doc_id, prefix self-join
     on sh, then the shared candidate verification. Every join is keyed.
+
+    Limit: verification raises (``raise_error``) on a shingle shared by
+    more than ``SHINGLE_DF_CUT`` candidate documents.
     """
     ex_cut, sh_all = (
         index if index is not None else _shingle_index(documents, SHINGLE_DF_CUT)
     )
     ex = ex_cut if sh_all is None else sh_all
-    df_tbl = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    w_ord = Window.partitionBy("doc_id").orderBy("df", "sh")
+    w_ord = Window.partitionBy("doc_id").orderBy("__df", "sh")
     w_doc = Window.partitionBy("doc_id")
     pref = (
-        ex.join(df_tbl, "sh")
-        .withColumn("nsh", F.count(F.lit(1)).over(w_doc))
+        ex.withColumn("nsh", F.count(F.lit(1)).over(w_doc))
         .withColumn("pos", F.row_number().over(w_ord))
         .filter(
             F.col("pos")

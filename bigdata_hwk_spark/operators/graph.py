@@ -12,10 +12,11 @@ Graph construction: parts are linked when they appear in the same order
 (market-basket co-occurrence). Per-order fan-out is quadratic in the
 order's item count, but TPC-H orders carry ≤ 7 lineitems — a bounded
 constant, so edge volume is O(|lineitem|) with a small factor; the
-builder first DISTINCTs (orderkey, partkey) so duplicate lines can't
-square into the pair count. Co-occurrence counts become symmetric edge
-weights; row-normalizing by each source's out-weight makes the walk
-matrix column-stochastic over the co-purchased part set. Isolated parts
+per-order ``collect_set`` of ``operators.pairs.bounded_item_sets``
+folds duplicate (orderkey, partkey) lines so they can't square into the
+pair count. Co-occurrence counts become symmetric edge weights;
+row-normalizing by each source's out-weight makes the walk matrix
+column-stochastic over the co-purchased part set. Isolated parts
 (never co-purchased) have no random-walk semantics here and are
 excluded by construction — documented contract, not an accident.
 
@@ -41,75 +42,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 
 from ..session import bounded_window, fixpoint, local_df
+from .pairs import bounded_item_sets, cooccurring_pairs
 from pyspark.sql import functions as F
 
 PR_DAMPING = 0.85
 PR_ITERS = 10
 
-# per-group cap for the local |S|² pair explosion (r13 ADVICE): the
-# collect_set device builds the whole pair array of one order in ONE
-# task row — sound under TPC-H's ≤ 7 lineitems/order, but an arbitrary
-# lineitem frame with a high-cardinality group must fail loudly instead
-# of silently building a quadratic array (2048² structs ≈ 67 MB is the
-# last survivable size; the old self-join distributed that blowup)
 COPURCHASE_MAX_BASKET = 2048
+COPURCHASE_LIMIT = (
+    f"copurchase basket exceeds {COPURCHASE_MAX_BASKET} parts — the local "
+    "pair explosion assumes bounded per-order fan-out"
+)
 PR_TOPK = 20
-
-
-def _bounded_pair_arr(pair_arr):
-    """Wrap a per-group pair array in the documented fan-out assumption:
-    rows whose source set exceeds ``COPURCHASE_MAX_BASKET`` raise
-    instead of exploding quadratically in task memory."""
-    return F.when(F.size("pks") <= COPURCHASE_MAX_BASKET, pair_arr).otherwise(
-        F.raise_error(
-            F.lit(
-                "copurchase basket exceeds "
-                f"{COPURCHASE_MAX_BASKET} parts — the local pair "
-                "explosion assumes bounded per-order fan-out"
-            )
-        )
-    )
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """(src, dst, weight): co-occurrence-weighted symmetric edges over
-    parts sharing an order. Both directions are emitted by the
-    unordered pair filter (src ≠ dst), so no explicit mirroring pass.
+    parts sharing an order. Both directions come out of one explosion
+    (src ≠ dst), so no mirroring pass, and the one aggregate leaves the
+    edges clustered by (src, dst) — the key the k-core, BFS and
+    degree-mixing consumers take their distinct on.
 
-    Shape (r13, guide §2.4): one ``collect_set`` per order + a LOCAL
-    pair explosion replaces the distinct → self-join chain — 2 keyed
-    shuffles instead of 3, no join. Sound because per-order fan-out is
-    a bounded constant (TPC-H orders carry ≤ 7 lineitems; the module
-    docstring's edge-volume argument already leans on exactly that
-    bound), and ``collect_set`` subsumes the old per-(order, part)
-    DISTINCT. Output verified identical on the fixture (2.392M edge
-    rows set-equal; isolated noop wall 2.65 → 2.08 s at sf0.1).
+    Shape: the per-order sets of ``operators.pairs.bounded_item_sets``
+    (one sorted ``collect_set`` per order, which subsumes the
+    per-(order, part) DISTINCT) and a local pair explosion, streamed row
+    by row, instead of a distinct → self-join chain. Sound because
+    per-order fan-out is a bounded constant (TPC-H orders carry ≤ 7
+    lineitems; the module docstring's edge-volume argument already leans
+    on that bound).
 
     Limit: an order with more than ``COPURCHASE_MAX_BASKET`` (2048)
     distinct parts fails the query when it runs (Spark ``raise_error``)
     with "copurchase basket exceeds 2048 parts — the local pair
-    explosion assumes bounded per-order fan-out", instead of building
-    a quadratic pair array in one task."""
-    sets = (
-        lineitem.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-        )
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("pks"),
-            lambda a: F.transform(
-                F.col("pks"),
-                lambda b: F.struct(a.alias("src"), b.alias("dst")),
-            ),
-        )
+    explosion assumes bounded per-order fan-out"."""
+    sets = bounded_item_sets(
+        lineitem, "l_orderkey", "l_partkey", COPURCHASE_MAX_BASKET,
+        COPURCHASE_LIMIT,
     )
     return (
-        sets.select(F.explode(_bounded_pair_arr(pair_arr)).alias("e"))
-        .filter(F.col("e.src") != F.col("e.dst"))
-        .groupBy(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
+        sets.select("xs", F.explode("xs").alias("src"))
+        .select("src", F.explode("xs").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
 
@@ -129,7 +103,7 @@ def pagerank(
     from ..session import persist_scoped
 
     # Row-normalize with a WINDOW over src, not a self-referencing
-    # norm join: the upstream pair-generation self-join then executes
+    # norm join: the upstream pair generation then executes
     # exactly once inside walk's single materialization (the join form
     # re-ran it per consumer — measured as the dominant fixed cost),
     # and the window's shuffle already leaves the table hash-partitioned
@@ -225,7 +199,7 @@ def copurchase_triangles(lineitem: DataFrame) -> DataFrame:
     that breaks the naive neighbor join is exactly the node the
     orientation demotes to mostly-incoming).
 
-    Plan: one distinct + one equi-self-join to undirected pairs, one
+    Plan: the undirected pairs of ``cooccurring_pairs``, one
     degree aggregate joined back to both endpoints, the wedge self-join
     on the shared LOW endpoint, and one closure equi-join against the
     oriented edge set. All joins keyed; (degree, id) ordering is
@@ -239,32 +213,10 @@ def copurchase_triangles(lineitem: DataFrame) -> DataFrame:
     fails the query with "copurchase basket exceeds 2048 parts — the
     local pair explosion assumes bounded per-order fan-out".
     """
-    # per-order collect_set + local pair explosion (the copurchase_edges
-    # r13 device): 2 shuffles to the undirected pair set instead of the
-    # distinct → self-join → distinct chain; per-order fan-out is the
-    # same bounded constant
-    sets = (
-        lineitem.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-        )
-        .groupBy("ok")
-        .agg(F.collect_set("pk").alias("pks"))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("pks"),
-            lambda a: F.transform(
-                F.col("pks"),
-                lambda b: F.struct(a.alias("u"), b.alias("v")),
-            ),
-        )
-    )
-    pairs = (
-        sets.select(F.explode(_bounded_pair_arr(pair_arr)).alias("e"))
-        .filter(F.col("e.u") < F.col("e.v"))
-        .select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-        .distinct()
-    )
+    pairs = cooccurring_pairs(
+        lineitem, "l_orderkey", "l_partkey", COPURCHASE_MAX_BASKET,
+        COPURCHASE_LIMIT,
+    ).select("u", "v")
     deg = (
         pairs.select(F.col("u").alias("node"))
         .union(pairs.select(F.col("v").alias("node")))
@@ -309,7 +261,7 @@ def copurchase_triangles(lineitem: DataFrame) -> DataFrame:
         )
         # degree stats off the PERSISTED oriented table (each undirected
         # edge appears exactly once): recomputing `deg` from `pairs`
-        # would replay the upstream pair self-join a second time
+        # would replay the upstream pair generation a second time
         deg_p = (
             oriented.select(F.col("src").alias("node"))
             .union(oriented.select(F.col("dst").alias("node")))

@@ -10,17 +10,17 @@ recommender starts from.
 
 Scale devices, in order of importance:
 
-* **Per-user cap.** The pair join fans out quadratically in a user's
-  item-set size, and real interaction data is power-law — one bot
-  account with 100k items would emit 10^10 pairs. Capping each user at
-  ``cap`` items (deterministic: the ``cap`` smallest item ids, a
-  row_number window) bounds the fan-out at cap²/2 per user, making
-  pair volume O(users · cap²) — linear in users. The cap biases counts
+* **Per-user cap.** The pair kernel (``operators.pairs``) fans out
+  quadratically in a user's item-set size, and real interaction data is
+  power-law — one bot account with 100k items would emit 10^10 pairs.
+  Capping each user at ``cap`` items (deterministic: the ``cap``
+  smallest item ids, a row_number window) bounds the fan-out at cap²/2
+  per user, making pair volume O(users · cap²) — linear in users. The cap biases counts
   for pathological users only; it is the standard production tradeoff
   (the same device the dedup family's posting-cut uses).
 * The pair tally is map-side combined into at most |items|² cells —
   the item vocabulary is alphabet-class, so everything after the
-  user-keyed pair join is dictionary-sized.
+  user-keyed pair explosion is dictionary-sized.
 * Popularity joins broadcast (|items| rows); the top-k window runs
   over dictionary-sized cells.
 
@@ -35,7 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-CF_USER_CAP = 32   # max items per user entering the pair join
+from .pairs import cooccurring_pairs
+
+CF_USER_CAP = 32   # max items per user entering the pair kernel
 CF_TOPK = 5        # neighbors kept per item
 
 
@@ -63,16 +65,12 @@ def item_cf_neighbors(
 
     capped = persist_once(capped)
     pop = capped.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
-    a = capped.alias("a")
-    b = capped.alias("b")
-    half = (
-        a.join(b, "user_id")
-        .filter(F.col("a.item") < F.col("b.item"))
-        .groupBy(
-            F.col("a.item").alias("item"), F.col("b.item").alias("neighbor")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    # the cap above already bounds every user's set, so the kernel's
+    # bound never fires here
+    half = cooccurring_pairs(
+        capped, "user_id", "item", cap,
+        f"user item set exceeds the {cap}-item cap",
+    ).toDF("item", "neighbor", "n_common")
     pairs = half.union(
         half.select(
             F.col("neighbor").alias("item"),

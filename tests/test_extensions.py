@@ -10,7 +10,7 @@ from bigdata_hwk_spark.operators import multimodal as MM
 from bigdata_hwk_spark.operators import similarity as SIM
 from bigdata_hwk_spark.sources.tables import load_table
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle, jobs_in_group
 
 EXTENSION_ORACLE_QUERIES = [
     "dedup_exact_summary",
@@ -167,12 +167,28 @@ def test_shingle_df_cut_drops_hot_shingles(spark):
         "doc_id bigint, text string",
     )
     ex = D.doc_shingles(docs)
-    cut = D.shingle_df_cut(ex, cut=5)
+    cut, full = D._shingle_index(docs, cut=5)
     assert {r.sh for r in cut.collect()} & {hot} == set()
     # non-hot shingles (df=1 each) all survive
     assert cut.count() == ex.count() - 6
+    assert full.count() == ex.count()
     # default cut is a no-op at fixture scale
-    assert D.shingle_df_cut(ex).count() == ex.count()
+    same, verify = D._shingle_index(docs)
+    assert verify is None and same.count() == ex.count()
+
+
+def test_shingle_index_builds_with_one_probe(spark):
+    """The shingle index is one persisted table (shingles plus their
+    document frequency) and one ``max`` probe: 4 Spark jobs at sf0.01
+    under the test session (7 with a persisted cut table, a persisted
+    uncut table and a count probe on each)."""
+    spark.catalog.clearCache()
+    docs = load_table(spark, SF_CORRECT, "documents")
+    (ex_cut, sh_all), jobs = jobs_in_group(
+        spark, "shingle-index", lambda: D._shingle_index(docs)
+    )
+    assert sh_all is None  # no fixture shingle reaches the default cut
+    assert jobs <= 4, jobs
 
 
 def test_minhash_lsh_full_recall_on_planted_neardups(spark):

@@ -1,7 +1,8 @@
 """Co-purchase graph operators (``operators/graph.py``) and the round
 driver their iterative loops share (``session.fixpoint``): PageRank,
 triangles, label propagation, BFS hop distances, degree mixing, k-core,
-the documented per-order basket limit, and the fixpoint's loud failure,
+the documented per-order basket limit (which the association-rule
+operators share), and the fixpoint's loud failure,
 per-round record and job counts. The two ``connected_components`` pins
 stay in test_pipeline_ops.py."""
 
@@ -17,6 +18,7 @@ from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from bigdata_hwk_spark import registry
+from bigdata_hwk_spark.operators import assoc as ARL
 from bigdata_hwk_spark.operators import dedup as D
 from bigdata_hwk_spark.operators import graph as G
 from bigdata_hwk_spark.sources.tables import load_table
@@ -25,7 +27,14 @@ from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle, jobs_in_group
 
 
 @pytest.mark.parametrize(
-    "fn", [G.copurchase_edges, G.copurchase_triangles], ids=lambda f: f.__name__
+    "fn",
+    [
+        G.copurchase_edges,
+        G.copurchase_triangles,
+        ARL.association_rules_topk,
+        ARL.frequent_triples_topk,
+    ],
+    ids=lambda f: f.__name__,
 )
 def test_basket_over_limit_raises(spark, fn):
     """The raise surfaces as Spark's ``SparkRuntimeException``, or as

@@ -329,3 +329,88 @@ def test_quantizers_seed_only_via_the_shared_kernel():
         "sequential_fft called outside the shared kernel:\n"
         + "\n".join(f"similarity.py:{ln} in {fn}" for ln, fn in callers.items())
     )
+
+
+# Functions that compare two aliases of one frame ("a.<c>" against
+# "b.<c>") to build pairs outside operators/pairs.py, and why.
+PAIR_BUILDERS_OUTSIDE_THE_KERNEL = {
+    "prefix_filter_pairs": "its length filter reads both sides' nsh",
+    "simhash_pairs": "the pair carries both fingerprints",
+    "image_phash_pairs": "the pair carries both dHash fingerprints",
+    "crossdoc_shared_spans": "the pair carries both span positions",
+    "_basket_triples": "the 3-way Apriori stage: a triple, not a pair",
+    "ann_lsh_pairs": "probe and base sides differ",
+    "ann_candidate_counts": "counts the join volume by definition",
+}
+
+
+def _aliased_pair_comparisons(pkg: str) -> dict[str, str]:
+    """``{"file:line": function}`` for every ``F.col("a.<c>") < / !=
+    F.col("b.<c>")`` comparison in the package, outside
+    ``operators/pairs.py``, named by the innermost function holding it."""
+    import ast
+    import os
+
+    def alias_col(node):
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "col"
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Constant)
+            and isinstance(node.args[0].value, str)
+        ):
+            return tuple(node.args[0].value.split(".", 1))
+        return None
+
+    found = {}
+    for root, _, files in os.walk(pkg):
+        for fname in sorted(files):
+            rel = os.path.relpath(os.path.join(root, fname), pkg)
+            if not fname.endswith(".py") or rel == os.path.join(
+                "operators", "pairs.py"
+            ):
+                continue
+            with open(os.path.join(root, fname), encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            # ast.walk is breadth-first: an inner function overwrites the
+            # entry its enclosing function made for the same comparison
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if not (
+                        isinstance(node, ast.Compare)
+                        and len(node.ops) == 1
+                        and isinstance(node.ops[0], (ast.Lt, ast.Gt, ast.NotEq))
+                    ):
+                        continue
+                    sides = {alias_col(node.left), alias_col(node.comparators[0])}
+                    cols = {s[1] for s in sides if s and len(s) == 2}
+                    if {s[0] for s in sides if s} == {"a", "b"} and len(cols) == 1:
+                        found[f"{rel}:{node.lineno}"] = fn.name
+    return found
+
+
+def test_pairs_only_via_the_kernel():
+    """Pairs of items that share a key come from
+    ``operators.pairs.cooccurring_pairs``, which declares its fan-out
+    bound and raises past it: an aliased self-join copy picks its own
+    fan-out rule (or none). The allowlisted functions say why they stay
+    outside; an entry that no longer builds such pairs fails too."""
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bigdata_hwk_spark",
+    )
+    found = _aliased_pair_comparisons(pkg)
+    offenders = [
+        f"{where} in {fn}"
+        for where, fn in found.items()
+        if fn not in PAIR_BUILDERS_OUTSIDE_THE_KERNEL
+    ]
+    assert offenders == [], (
+        "aliased self-join pair builder outside operators/pairs.py:\n"
+        + "\n".join(offenders)
+    )
+    assert set(found.values()) == set(PAIR_BUILDERS_OUTSIDE_THE_KERNEL)

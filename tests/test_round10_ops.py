@@ -1,6 +1,6 @@
-"""Round-10 operator contracts: BM25 retrieval, asymmetric containment
-and robust (median/MAD/IQR) screens (the co-purchase graph pins are in
-test_graph.py).
+"""Round-10 operator contracts: BM25 retrieval and robust
+(median/MAD/IQR) screens (the co-purchase graph pins are in
+test_graph.py, the containment pins in test_pairs.py).
 
 The registry oracle rows pin cross-engine equality (BM25, containment,
 robust — the parametrized sweep covers them at up to 3 SFs); these
@@ -15,7 +15,6 @@ import pyspark.sql.functions as F
 from bigdata_hwk_spark import registry
 from bigdata_hwk_spark.operators import retrieval as RV
 from bigdata_hwk_spark.operators import robust as RB
-from bigdata_hwk_spark.operators.dedup import containment_pairs
 from bigdata_hwk_spark.sources.tables import load_table
 
 from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
@@ -73,47 +72,6 @@ def test_bm25_prefers_more_query_terms(spark):
         for r in RV.bm25_topk(docs, queries=[(1, "alpha beta")]).collect()
     }
     assert got[1] == 1 and got[2] == 2
-
-
-# --------------------------------------------------------- containment
-def test_containment_matches_oracle_smoke(spark):
-    assert_matches_oracle(
-        registry.QUERIES["dedup_containment"](spark, SF_SMOKE),
-        registry.ORACLES["dedup_containment"],
-        SF_SMOKE,
-    )
-
-
-def test_containment_is_asymmetric(spark):
-    """A short doc fully quoted inside a long doc: containment
-    short→long = 1.0 (caught), long→short well under tau (not emitted).
-    This is exactly the pair Jaccard misses."""
-    quote = "one two three four five six"
-    long_text = quote + " " + " ".join(f"w{i} x{i} y{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, quote), (2, long_text)], "doc_id long, text string"
-    )
-    rows = containment_pairs(docs).collect()
-    got = {(r.src_doc, r.dst_doc): r.containment for r in rows}
-    assert got == {(1, 2): 1.0}
-
-
-def test_containment_cut_path_is_subset(spark):
-    """With an active hot-shingle cut the candidate set can only shrink;
-    emitted pairs still carry FULL-set containment, so the result is a
-    subset of the uncut answer with identical values."""
-    docs = load_table(spark, SF_SMOKE, "documents")
-    full = {
-        (r.src_doc, r.dst_doc): r.containment
-        for r in containment_pairs(docs).collect()
-    }
-    cut = {
-        (r.src_doc, r.dst_doc): r.containment
-        for r in containment_pairs(docs, cut=5).collect()
-    }
-    assert set(cut) <= set(full)
-    for k, v in cut.items():
-        assert v == full[k]
 
 
 # -------------------------------------------------------------- robust

@@ -1,40 +1,12 @@
-"""Round-10b operators: association rules, skyline, fuzzy linkage,
-URL canonicalization (the LPA pins are in test_graph.py). The registry oracle sweep (test_outliers.py) covers
+"""Round-10b operators: skyline, fuzzy linkage, URL canonicalization
+(the LPA pins are in test_graph.py, the association-rule pins in
+test_pairs.py). The registry oracle sweep (test_outliers.py) covers
 oracle equality at both SFs; these tests pin the operator-level semantics
 on hand-built inputs where the fixture data can't isolate them."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from bigdata_hwk_spark.operators import assoc as ARL
-
-
-def _baskets_df(spark):
-    rows = [
-        (1, "a"), (1, "b"),
-        (2, "a"), (2, "b"),
-        (3, "a"), (3, "c"),
-        (4, "b"),
-        (4, "b"),  # duplicate line: must not inflate co-occurrence
-    ]
-    return spark.createDataFrame(
-        [(ok, pk) for ok, pk in rows], "l_orderkey bigint, l_partkey string"
-    )
-
-
-def test_assoc_rules_hand_case(spark):
-    out = ARL.association_rules_topk(
-        _baskets_df(spark), min_pair_count=2, topk=10
-    ).collect()
-    assert len(out) == 2  # only (a,b) survives the support cut, 2 directions
-    by_dir = {(r.antecedent, r.consequent): r for r in out}
-    ab, ba = by_dir[("a", "b")], by_dir[("b", "a")]
-    assert ab.pair_cnt == 2 and ba.pair_cnt == 2
-    # conf(a→b) = 2/3 (a in baskets 1,2,3); conf(b→a) = 2/3 (b in 1,2,4)
-    assert ab.confidence == round(2 / 3, 6) == ba.confidence
-    # lift = supp(ab)·N / (supp(a)·supp(b)) = 2·4/(3·3), direction-free
-    assert ab.lift == ba.lift == round(8 / 9, 6)
 
 
 def test_skyline_hand_case_ties_and_dominance(spark):
@@ -518,13 +490,3 @@ def test_fd_audit_partial_violation(spark):
     assert v.holds is False
     h = out["id_lang"]
     assert h.holds is True and h.n_rows_in_violation == 0
-
-
-def test_assoc_rules_rank_is_dense_and_deterministic(spark):
-    df = _baskets_df(spark)
-    a = ARL.association_rules_topk(df, min_pair_count=1, topk=10).collect()
-    b = ARL.association_rules_topk(
-        df.repartition(5), min_pair_count=1, topk=10
-    ).collect()
-    assert [r.rnk for r in a] == list(range(1, len(a) + 1))
-    assert a == b  # partitioning-invariant listing

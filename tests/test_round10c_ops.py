@@ -1,9 +1,9 @@
 """Round-10c operators: trigram stupid-backoff, PSI drift (+ streaming
-monitor), grid DBSCAN, Misra-Gries (+ streaming ingest), item-item CF,
-per-type daily OLS trend, the oracle-checked release funnel, event
-debounce and Apriori triples (greedy coverage selection is in
-test_select.py; BFS hop distances, degree assortativity and k-core are
-in test_graph.py). The registry oracle sweep (test_outliers.py /
+monitor), grid DBSCAN, Misra-Gries (+ streaming ingest), per-type daily
+OLS trend, the oracle-checked release funnel and event debounce (greedy
+coverage selection is in test_select.py; BFS hop distances, degree
+assortativity and k-core are in test_graph.py; item-item CF and Apriori
+triples are in test_pairs.py). The registry oracle sweep (test_outliers.py /
 test_extensions.py) proves hash equality vs DuckDB at the gate SFs;
 these tests pin operator-level semantics on hand-built inputs where
 every branch is computed by hand, plus the streaming ≡ batch equality
@@ -186,44 +186,6 @@ def test_misra_gries_deterministic_bounds_on_fixture(spark):
             assert item in est
 
 
-def _cf_events(spark, interactions):
-    # interactions: list of (user_id, item)
-    rows = [
-        (i, u, '{"k": %d}' % it) for i, (u, it) in enumerate(interactions)
-    ]
-    return spark.createDataFrame(rows, "event_id bigint, user_id bigint, props string")
-
-
-def test_item_cf_neighbors_hand_case(spark):
-    import math
-
-    from bigdata_hwk_spark.operators import recsys as CF
-
-    ev = _cf_events(
-        spark,
-        [(1, 1), (1, 2), (2, 1), (2, 2), (3, 1), (3, 3),
-         (1, 1)],  # duplicate interaction: distinct'd away
-    )
-    out = {(r.item, r.neighbor): r for r in CF.item_cf_neighbors(ev).collect()}
-    # c1=3, c2=2, c3=1; common(1,2)=2, common(1,3)=1, no (2,3)
-    assert set(out) == {(1, 2), (1, 3), (2, 1), (3, 1)}
-    assert out[(1, 2)].n_common == 2
-    assert out[(1, 2)].cosine == round(2 / math.sqrt(6), 6)
-    assert out[(1, 2)].rnk == 1 and out[(1, 3)].rnk == 2
-    assert out[(1, 3)].cosine == round(1 / math.sqrt(3), 6)
-    assert out[(2, 1)].cosine == out[(1, 2)].cosine  # symmetric score
-
-
-def test_item_cf_user_cap(spark):
-    from bigdata_hwk_spark.operators import recsys as CF
-
-    # one user with 3 items, cap=2: item 3 is cut, so no pair involves it
-    ev = _cf_events(spark, [(1, 1), (1, 2), (1, 3)])
-    out = CF.item_cf_neighbors(ev, cap=2).collect()
-    items = {(r.item, r.neighbor) for r in out}
-    assert items == {(1, 2), (2, 1)}
-
-
 def test_event_type_daily_trend_hand_case(spark):
     from pyspark.sql import functions as F
 
@@ -344,23 +306,6 @@ def test_event_debounce_hand_case(spark):
     got = {r.event_type: r for r in BH.event_debounce_stats(ev).collect()}
     assert (got["a"].n_events, got["a"].n_kept, got["a"].n_dropped) == (4, 3, 1)
     assert (got["b"].n_events, got["b"].n_kept, got["b"].n_dropped) == (2, 1, 1)
-
-
-def test_frequent_triples_hand_case(spark):
-    from bigdata_hwk_spark.operators import assoc as ARL
-
-    li = spark.createDataFrame(
-        [(1, 1), (1, 2), (1, 3),
-         (2, 1), (2, 2), (2, 3),
-         (3, 1), (3, 2), (3, 4),
-         (3, 4)],  # duplicate line: distinct'd away
-        "l_orderkey bigint, l_partkey bigint",
-    )
-    rows = ARL.frequent_triples_topk(li, min_count=2, topk=5).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.rnk, r.item_a, r.item_b, r.item_c, r.triple_cnt) == (1, 1, 2, 3, 2)
-    assert r.support == round(2 / 3, 6)
 
 
 def test_multitouch_credit_hand_case(spark):
