@@ -39,10 +39,12 @@ over the kept set.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import local_df, log_round
 
 UNI_SEED_SIZE = 2048
 UNI_MAX_LEN = 6
@@ -262,18 +264,32 @@ def unigram_lm_vocab(
     spark = documents.sparkSession
     ensure_package_on_executors(spark)
     vocab = persist_once(_word_histogram(documents))
-    seed = _seed_pieces(vocab, seed_size, max_len)
-    probs = _mstep({p: c for p, c in seed})
-    seed_chars = {p for p, _ in seed if len(p) == 1}
-    qcounts: dict = {}
-    for _ in range(n_iters):
-        qcounts = _distributed_estep(vocab, probs, max_len)
-        probs = _mstep(_floor_seed_chars(qcounts, seed_chars))
-    rows = _prune_rank(qcounts, keep)
+    rows = _train(vocab, seed_size, n_iters, max_len, keep)
     return local_df(
         spark, [(r, p, round(pr, 12), q) for r, p, pr, q in rows],
         "rnk int, piece string, prob double, expected_q bigint",
     )
+
+
+def _train(
+    vocab: DataFrame, seed_size: int, n_iters: int, max_len: int, keep: int
+) -> list:
+    """The distributed trainer of ``unigram_lm_vocab`` and
+    ``unigram_lm_encode_stats`` over the persisted word histogram
+    ``vocab``: seed, ``n_iters`` EM rounds, prune. Each round logs the
+    number of pieces with expected mass and its seconds through
+    ``session.log_round``. Returns [(rank, piece, prob, q)], bit-equal
+    to ``unigram_train_reference``."""
+    seed = _seed_pieces(vocab, seed_size, max_len)
+    probs = _mstep({p: c for p, c in seed})
+    seed_chars = {p for p, _ in seed if len(p) == 1}
+    qcounts: dict = {}
+    for rnd in range(1, n_iters + 1):
+        t0 = time.perf_counter()
+        qcounts = _distributed_estep(vocab, probs, max_len)
+        probs = _mstep(_floor_seed_chars(qcounts, seed_chars))
+        log_round("unigram_lm", rnd, len(qcounts), time.perf_counter() - t0)
+    return _prune_rank(qcounts, keep)
 
 
 def _distributed_estep(vocab: DataFrame, probs: dict, max_len: int) -> dict:
@@ -323,17 +339,9 @@ def unigram_lm_encode_stats(
     """
     from ..session import ensure_package_on_executors, persist_once
 
-    spark = documents.sparkSession
-    ensure_package_on_executors(spark)
+    ensure_package_on_executors(documents.sparkSession)
     vocab = persist_once(_word_histogram(documents))
-    seed = _seed_pieces(vocab, seed_size, max_len)
-    probs = _mstep({p: c for p, c in seed})
-    seed_chars = {p for p, _ in seed if len(p) == 1}
-    qcounts: dict = {}
-    for _ in range(n_iters):
-        qcounts = _distributed_estep(vocab, probs, max_len)
-        probs = _mstep(_floor_seed_chars(qcounts, seed_chars))
-    ranked = _prune_rank(qcounts, keep)
+    ranked = _train(vocab, seed_size, n_iters, max_len, keep)
     final_probs = {p: pr for _, p, pr, _ in ranked}
     ml = max_len
 

@@ -331,6 +331,72 @@ def test_quantizers_seed_only_via_the_shared_kernel():
     )
 
 
+# The functions of frequent_items.py that may draw a sampler's random step.
+SAMPLER_STEP_SITES = {
+    "ReservoirSample.add_batch": "the reservoir's one per-item step",
+    "StickySampling.add_batch": "the sticky sampler's one per-item step",
+    "_merge_two_reservoirs": "the hypergeometric merge of two reservoirs",
+}
+
+
+def _sampler_steps(path: str) -> dict[int, str]:
+    """``{line: qualified function}`` for every ``randrange`` call and every
+    comparison whose left side calls ``.random()`` in the module at
+    ``path``, named by the enclosing classes and functions."""
+    import ast
+
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    found = {}
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = scope + [child.name]
+            elif (
+                isinstance(child, ast.Call)
+                and getattr(child.func, "attr", None) == "randrange"
+            ) or (
+                isinstance(child, ast.Compare)
+                and any(
+                    isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "random"
+                    for n in ast.walk(child.left)
+                )
+            ):
+                found[child.lineno] = ".".join(scope)
+            visit(child, inner)
+
+    visit(tree, [])
+    return found
+
+
+def test_sampler_steps_only_in_the_sampler_classes():
+    """Each HW3 sampler's per-item step lives once, in its class: the
+    driver sketch, the ``mapInPandas`` batch twin and the cogrouped stream
+    twin all feed ``ReservoirSample`` / ``StickySampling``. A private copy
+    of the step in a twin can drift from the sketch it must equal bit for
+    bit. An allowlisted site that no longer draws fails too."""
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bigdata_hwk_spark",
+        "streaming",
+        "frequent_items.py",
+    )
+    found = _sampler_steps(path)
+    offenders = [
+        f"frequent_items.py:{ln} in {fn}"
+        for ln, fn in sorted(found.items())
+        if fn not in SAMPLER_STEP_SITES
+    ]
+    assert offenders == [], (
+        "sampler step outside the sampler classes:\n" + "\n".join(offenders)
+    )
+    assert set(found.values()) == set(SAMPLER_STEP_SITES)
+
+
 # Functions that compare two aliases of one frame ("a.<c>" against
 # "b.<c>") to build pairs outside operators/pairs.py, and why.
 PAIR_BUILDERS_OUTSIDE_THE_KERNEL = {

@@ -147,6 +147,72 @@ def test_distributed_sticky_stream_equals_batch_twin(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+@pytest.fixture(scope="module")
+def three_files(spark, tmp_path_factory):
+    """(stream, dir): 90 (seq, item) rows, a third of them item 0, written
+    as three 30-row micro-batch files."""
+    stream = spark.range(90).select(
+        F.col("id").alias("seq"),
+        F.when(F.col("id") % 3 == 0, 0).otherwise(F.col("id") % 13).alias("item"),
+    )
+    flat = str(tmp_path_factory.mktemp("three_files"))
+    assert write_chunk_files(stream, flat, F.floor(F.col("seq") / 30)) == 3
+    return stream, flat
+
+
+def test_stream_runners_equal_batch_twins_fast(spark, three_files):
+    """The default-gate companion of the three slowgate twin pins: over
+    three small files at L = 2, each stream runner equals its batch twin.
+    The cutoff n = 50 falls inside the second file, so the third file
+    arrives after it and must change nothing. The sticky rate does not
+    saturate, so admissions really draw."""
+    stream, flat = three_files
+    n, phi, eps, delta, L = 50, 0.2, 0.15, 0.9, 2
+    assert FI.sticky_admission_rate(n, phi, eps, delta, L) < n
+
+    got = FI.run_structured_stream(spark, flat, n, phi, eps, delta, seed=3)
+    want = FI.replay_frequent_items(
+        stream, n, phi, eps, delta, batch_size=30, seed=3
+    )
+    assert got == want and got.batches == 2
+
+    got = FI.run_distributed_sticky_stream(
+        spark, flat, n, phi, eps, delta, num_partitions=L, seed=3
+    )
+    want = sorted(
+        r.item
+        for r in FI.distributed_sticky_sampling(
+            stream, n, phi, eps, delta, num_partitions=L, seed=3
+        ).collect()
+    )
+    assert got == want and 0 in got
+
+    got = FI.run_distributed_reservoir_stream(
+        spark, flat, m=5, n=n, num_reservoirs=L, seed=3
+    )
+    want = FI.distributed_reservoir_sample(
+        stream, m=5, n=n, num_reservoirs=L, seed=3
+    )
+    assert got == want and want[1] == n
+
+
+def test_file_runner_raises_when_the_stream_ends_before_n(spark, three_files):
+    """90 items cannot answer for the first 91: thresholds φ·n and
+    (φ−ε)·n over fewer items would be silently wrong, so the file runner
+    raises instead of reporting, and the source-agnostic runner, which
+    cannot tell a drained source from a slow one, times out."""
+    from bigdata_hwk_spark.streaming.sources import file_item_stream
+
+    _, flat = three_files
+    with pytest.raises(RuntimeError, match="after 90 items, before the first n = 91"):
+        FI.run_structured_stream(spark, flat, 91, 0.2, 0.15, 0.9)
+    with pytest.raises(TimeoutError, match="before the first n = 91"):
+        FI.run_sketches_on_stream(
+            file_item_stream(spark, flat), 91, 0.2, 0.15, 0.9,
+            order_col="seq", timeout_s=1.5,
+        )
+
+
 def test_report_lines_shape(spark):
     rep = FI.replay_frequent_items(
         stream_from_events(spark, SF_SMOKE), n=300, phi=0.05, eps=0.02, delta=0.1
